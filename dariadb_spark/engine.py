@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.functions.statistics import apply_functions
-from dariadb_spark.model import MEAS_FIELDS, measurements
+from dariadb_spark.model import MEAS_FIELDS, meas_frame, measurements
 from dariadb_spark.operators.asof import current_value as _current_value
 from dariadb_spark.operators.asof import read_time_point as _read_time_point
 from dariadb_spark.operators.downsample import downsample as _downsample
@@ -124,17 +124,19 @@ class TsEngine:
         self, rows: DataFrame | Iterable[tuple], isolated: bool = False
     ) -> int:
         """Engine::append — ingest a DataFrame or iterable of
-        (id, time_ms, value, flag) tuples; returns rows written.
+        (id, time_ms, value, flag) tuples; returns rows written. Tuples
+        become one partition (:func:`~dariadb_spark.model.meas_frame`),
+        so a request-sized append writes one file per day.
         ``isolated=True`` selects the multi-ingest-safe write path (see
         ``ParquetTsStore.append`` for the contract and its trade)."""
         if self.store is None:
             raise ValueError("append requires a writable store (TsEngine.open)")
         if not isinstance(rows, DataFrame):
-            rows = self.spark.createDataFrame(
-                [Row(id=int(i), time=int(t), value=float(v), flag=int(fl))
-                 for (i, t, v, fl) in rows],
-                "id bigint, time bigint, value double, flag bigint",
-            )
+            tuples = [
+                (int(i), int(t), float(v), int(fl)) for (i, t, v, fl) in rows
+            ]
+            cols = [list(c) for c in zip(*tuples)] or [[]] * 4
+            rows = meas_frame(self.spark, *cols)
         return self.store.append(rows.select(*MEAS_FIELDS), isolated=isolated)
 
     # -- read path -------------------------------------------------------

@@ -26,7 +26,12 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import flag_predicate, ids_predicate, pushdown_time_bounds
+from dariadb_spark.model import (
+    flag_predicate,
+    ids_predicate,
+    pushdown_time_bounds,
+    sort_result,
+)
 
 ROUND = 4
 
@@ -85,7 +90,7 @@ def apply_functions(
     if not known:
         raise ValueError(f"no known statistic functions in {names!r}")
     aggs = [FUNCTION_REGISTRY[n][0]().alias(n) for n in known]
-    return (
+    agg = (
         meas.where(
             ids_predicate(ids)
             & pushdown_time_bounds(meas, from_ms, to_ms)
@@ -93,8 +98,8 @@ def apply_functions(
         )
         .groupBy("id")
         .agg(*aggs)
-        .orderBy("id")
     )
+    return sort_result(agg, ids, "id")
 
 
 def oracle_agg_sql(name: str) -> str:

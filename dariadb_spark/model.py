@@ -30,11 +30,20 @@ FLAGS_NO_DATA: int = 0xFFFFFFFF  # 4294967295
 
 MEAS_FIELDS = ("id", "time", "value", "flag")
 
+#: the measurement schema as DDL, for every explicit-schema read and
+#: every frame built from driver-side rows
+MEAS_DDL = "id bigint, time bigint, value double, flag bigint"
+
+#: the stores' on-disk schema: measurements plus the hive ``p_date`` day
+#: partition. Reads pass it explicitly, so building a frame never runs a
+#: footer-inference job.
+STORE_DDL = MEAS_DDL + ", p_date date"
+
 #: raw parquet event-time column (ns) carried for scan-pruning pushdown
 RAW_TS = "_raw_ts"
 
-#: hive day-partition column (yyyy-MM-dd) carried by ParquetTsStore reads
-#: for partition-pruning pushdown
+#: hive day-partition column (a date) carried by store reads for
+#: partition-pruning pushdown
 RAW_DAY = "_p_date"
 
 _DAY_MS = 86_400_000
@@ -67,6 +76,26 @@ MEAS_CTE_SQL = (
     "measurements AS (SELECT user_id AS id, epoch_ms(ts) AS time, "
     "value AS value, " + EVENT_FLAG_CASE_SQL + " AS flag FROM events)"
 )
+
+
+def local_frame(spark: SparkSession, ddl: str, columns: dict) -> DataFrame:
+    """A LocalRelation over columns already in driver memory (``name →
+    sequence``, in ``ddl`` order). It goes through Arrow, so neither
+    building nor scanning it launches a Spark job; ``createDataFrame``
+    over a Python list builds a Python RDD, which does."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), ddl)
+
+
+def meas_frame(spark: SparkSession, ids, times, values, flags) -> DataFrame:
+    """Request-sized measurement rows as a one-partition frame, so that
+    appending them writes one file per day."""
+    return local_frame(
+        spark,
+        MEAS_DDL,
+        {"id": ids, "time": times, "value": values, "flag": flags},
+    ).coalesce(1)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -204,3 +233,13 @@ def ids_predicate(ids: list[int] | None) -> Column:
     if not ids:
         return F.lit(True)
     return F.col("id").isin(ids)
+
+
+def sort_result(df: DataFrame, ids: list[int] | None, *cols: str) -> DataFrame:
+    """Order a per-series answer by ``cols``. Given ``ids``, the answer
+    is bounded by what the caller passed in, so it is gathered into one
+    partition and sorted there: no range-partition exchange and no
+    sampling job. ``ids=None`` (all series) keeps the global sort."""
+    if ids:
+        return df.coalesce(1).sortWithinPartitions(*cols)
+    return df.orderBy(*cols)

@@ -32,8 +32,9 @@ shipped PACKED Meas arrays, not text — measurement-shaped results
 base64-wrapped column-major int64/float64 buffers inside the same JSON
 envelope. Measured (bench_stress `stress_net_protocol`): it removes
 the JSON row tax from the wire path while keeping one framing for
-every verb; appends additionally enter Spark through an Arrow-backed
-pandas DataFrame instead of a Row list.
+every verb. Appends of either encoding enter Spark as a one-partition
+Arrow LocalRelation (``model.meas_frame``), so each writes one file per
+day.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ import threading
 from typing import Any
 
 from dariadb_spark.engine import TsEngine
+from dariadb_spark.model import meas_frame
 
 _MEAS_COLS = ["id", "time", "value", "flag"]
 
@@ -173,27 +175,12 @@ class _Handler(socketserver.StreamRequestHandler):
             return {"qid": qid, "status": "ok", **payload}
         if op == "append":
             if "rows_bin" in p:
-                import pandas as pd
-
-                ids, times, values, flags = _unpack_meas(
-                    p["rows_bin"], int(p["n"])
+                rows = meas_frame(
+                    eng.spark, *_unpack_meas(p["rows_bin"], int(p["n"]))
                 )
-                sdf = eng.spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "id": ids,
-                            "time": times,
-                            "value": values,
-                            "flag": flags,
-                        }
-                    )
-                )
-                n = eng.append(sdf, isolated=bool(p.get("isolated", False)))
             else:
-                n = eng.append(
-                    [tuple(r) for r in p["rows"]],
-                    isolated=bool(p.get("isolated", False)),
-                )
+                rows = [tuple(r) for r in p["rows"]]
+            n = eng.append(rows, isolated=bool(p.get("isolated", False)))
             return {"qid": qid, "status": "ok", "appended": n}
         if op == "scheme_add_param":
             # Scheme::addParam over the wire — the reference protocol's

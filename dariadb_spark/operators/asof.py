@@ -3,45 +3,51 @@
 * ``read_time_point`` — reference ``Engine::readTimePoint(QueryTimePoint)``
   (libdariadb/engine.cpp): for each *requested* id, the latest point with
   ``time <= time_point``; ids with no candidate yield a synthesized
-  ``Meas{id, time=tp, value=0, flag=_NO_DATA}``. Cardinality is always
-  ``len(ids)`` — the subtle contract (SURVEY.md §7.3.1).
+  ``Meas{id, time=tp, value=0, flag=_NO_DATA}``. One row per distinct
+  requested id — the reference answers with an ``Id2Meas`` map
+  (SURVEY.md §7.3.1).
 * ``current_value`` — reference ``Engine::currentValue(ids, flag)``:
   latest value per series.
 
-Plan shape: filter → per-id top-1 via window → broadcast left join with the
-requested-id list to synthesize ``_NO_DATA`` rows. The window shuffles by
-``id`` only the *filtered* slice; the requested-id list is tiny and
-broadcast. At 100 TB the heavy lifting is the pushed-down
-``time <= tp AND id IN (...)`` scan prune.
+Plan shape: filter → one ``groupBy("id")`` taking ``max(struct(time,
+value, flag))``, a partial aggregate on the map side, so the shuffle
+carries at most one row per id per input partition. ``read_time_point``
+unions one ``_NO_DATA`` filler row per requested id into that aggregate,
+from a LocalRelation (no job to build it), under a leading ``hit`` field
+of 0 so that any real candidate outranks it. No join and no window. At
+100 TB the heavy lifting is the pushed-down ``time <= tp AND id IN (...)``
+scan prune. With ``ids`` given the answer has at most ``len(ids)`` rows,
+so it is sorted inside one partition rather than range-partitioned
+(:func:`~dariadb_spark.model.sort_result`).
 
 Determinism: duplicate (id, time) pairs are broken by (value, flag)
-descending — the same total order the DuckDB oracle uses, so engine and
-oracle agree bit-for-bit (SURVEY.md §7.3.4 LWW policy pick).
+descending — struct comparison is field by field, the same total order
+as the DuckDB oracle's ``ORDER BY time DESC, value DESC, flag DESC``,
+NaN above every number and ``-0.0 = 0.0`` included, so engine and oracle
+agree bit-for-bit (SURVEY.md §7.3.4 LWW policy pick).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import (
     FLAGS_NO_DATA,
     flag_predicate,
     ids_predicate,
+    local_frame,
     pushdown_time_bounds,
+    sort_result,
 )
 
-def _latest_order():
-    """Deterministic per-id "latest first": time desc, then value/flag desc."""
-    return [F.col("time").desc(), F.col("value").desc(), F.col("flag").desc()]
 
-
-def _latest_per_id(filtered: DataFrame) -> DataFrame:
-    w = Window.partitionBy("id").orderBy(*_latest_order())
+def _latest(keyed: DataFrame) -> DataFrame:
+    """(id, time, value, flag) of the greatest ``m`` struct per id."""
     return (
-        filtered.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
+        keyed.groupBy("id")
+        .agg(F.max("m").alias("m"))
+        .select("id", "m.time", "m.value", "m.flag")
     )
 
 
@@ -54,25 +60,24 @@ def read_time_point(
 ) -> DataFrame:
     """One row per requested id: latest point at/before ``time_point_ms``,
     or a ``_NO_DATA`` filler row (value=0, time=tp)."""
-    requested = spark.createDataFrame([(int(i),) for i in ids], "id bigint")
-    latest = _latest_per_id(
-        meas.where(
-            ids_predicate(ids)
-            & pushdown_time_bounds(meas, None, time_point_ms)
-            & flag_predicate(flag)
-        )
+    hits = meas.where(
+        F.col("id").isin(ids)
+        & pushdown_time_bounds(meas, None, time_point_ms)
+        & flag_predicate(flag)
+    ).select(
+        "id",
+        F.struct(F.lit(1).alias("hit"), "time", "value", "flag").alias("m"),
     )
-    return (
-        F.broadcast(requested)
-        .join(latest, "id", "left")
-        .select(
-            F.col("id"),
-            F.coalesce(F.col("time"), F.lit(time_point_ms)).alias("time"),
-            F.coalesce(F.col("value"), F.lit(0.0)).alias("value"),
-            F.coalesce(F.col("flag"), F.lit(FLAGS_NO_DATA)).alias("flag"),
-        )
-        .orderBy("id")
+    fillers = local_frame(spark, "id bigint", {"id": ids}).select(
+        "id",
+        F.struct(
+            F.lit(0).alias("hit"),
+            F.lit(time_point_ms).cast("bigint").alias("time"),
+            F.lit(0.0).alias("value"),
+            F.lit(FLAGS_NO_DATA).cast("bigint").alias("flag"),
+        ).alias("m"),
     )
+    return sort_result(_latest(hits.unionByName(fillers)), ids, "id")
 
 
 def current_value(
@@ -80,8 +85,7 @@ def current_value(
 ) -> DataFrame:
     """Latest measurement per series (no ``_NO_DATA`` synthesis — the
     reference returns only series that exist; empty ids = all series)."""
-    return (
-        _latest_per_id(meas.where(ids_predicate(ids) & flag_predicate(flag)))
-        .select("id", "time", "value", "flag")
-        .orderBy("id")
+    hits = meas.where(ids_predicate(ids) & flag_predicate(flag)).select(
+        "id", F.struct("time", "value", "flag").alias("m")
     )
+    return sort_result(_latest(hits), ids, "id")

@@ -14,7 +14,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import flag_predicate, ids_predicate, pushdown_time_bounds
+from dariadb_spark.model import (
+    flag_predicate,
+    ids_predicate,
+    pushdown_time_bounds,
+    sort_result,
+)
 
 MS = {"second": 1_000, "minute": 60_000, "minute30": 1_800_000,
       "hour": 3_600_000, "day": 86_400_000, "week": 604_800_000}
@@ -196,7 +201,7 @@ def downsample(
     cond = ids_predicate(ids) & flag_predicate(flag)
     if from_ms is not None or to_ms is not None:
         cond = cond & pushdown_time_bounds(meas, from_ms, to_ms)
-    return (
+    agg = (
         meas.where(cond)
         .groupBy(F.col("id"), bucket_column(interval))
         .agg(
@@ -214,5 +219,5 @@ def downsample(
             F.max("value").alias("max_value"),
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        .orderBy("id", "bucket_ms")
     )
+    return sort_result(agg, ids, "id", "bucket_ms")

@@ -6,7 +6,9 @@ them by time and filters per point (storage/readers.cpp, MergeSortReader).
 On Spark the whole pipeline is one declarative plan: parquet scan with the
 id/time/flag predicates pushed to the reader (row-group pruning = the
 ``.pagei`` min/max index), then a sort. Catalyst owns layer-merge, pruning
-and decompression.
+and decompression. With ``ids`` given the answer is request-sized, so the
+sort runs in one partition behind a single-partition exchange (the scan
+stays parallel); ``ids=None`` keeps the global range-partitioned sort.
 """
 
 from __future__ import annotations
@@ -46,4 +48,7 @@ def read_interval(
 ) -> DataFrame:
     """All measurements of ``ids`` with ``from <= time <= to`` matching
     ``flag``, time-ordered per series (the MeasArray contract)."""
-    return scan_interval(meas, ids, from_ms, to_ms, flag).orderBy("id", "time")
+    scanned = scan_interval(meas, ids, from_ms, to_ms, flag)
+    if ids:
+        return scanned.repartition(1).sortWithinPartitions("id", "time")
+    return scanned.orderBy("id", "time")

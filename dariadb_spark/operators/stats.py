@@ -18,18 +18,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import flag_predicate, ids_predicate, pushdown_time_bounds
+from dariadb_spark.model import (
+    flag_predicate,
+    ids_predicate,
+    pushdown_time_bounds,
+    sort_result,
+)
 
 
 def min_max_time(meas: DataFrame, ids: list[int] | None = None) -> DataFrame:
     """(id, min_time, max_time) per series; ids=None → all series
     (reference loadMinMax → Id2MinMax)."""
-    return (
+    agg = (
         meas.where(ids_predicate(ids))
         .groupBy("id")
         .agg(F.min("time").alias("min_time"), F.max("time").alias("max_time"))
-        .orderBy("id")
     )
+    return sort_result(agg, ids, "id")
 
 
 def stat_block(
@@ -40,7 +45,7 @@ def stat_block(
     flag: int = 0,
 ) -> DataFrame:
     """The reference's Statistic block per series over a closed interval."""
-    return (
+    agg = (
         meas.where(
             ids_predicate(ids)
             & pushdown_time_bounds(meas, from_ms, to_ms)
@@ -59,8 +64,8 @@ def stat_block(
             # mean exactly on a .xxxx5 boundary (see downsample.py).
             (F.round(F.sum("value"), 6) / F.count("value")).alias("mean_value"),
         )
-        .orderBy("id")
     )
+    return sort_result(agg, ids, "id")
 
 
 def partition_stats_op(meas: DataFrame) -> DataFrame:

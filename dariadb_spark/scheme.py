@@ -17,6 +17,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dariadb_spark.model import local_frame
+
 
 class ConcurrentCatalogWriteError(RuntimeError):
     """Another writer committed a catalog version after this instance
@@ -28,6 +30,8 @@ class ConcurrentCatalogWriteError(RuntimeError):
 
 
 class SeriesCatalog:
+    _SCHEMA = "id bigint, name string"
+
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = Path(path) if path else None
@@ -91,8 +95,19 @@ class SeriesCatalog:
             self.path.write_text(json.dumps(self._name_to_id))
 
     def to_df(self) -> DataFrame:
-        rows = [(v, k) for k, v in self._name_to_id.items()] or []
-        return self.spark.createDataFrame(rows, "id bigint, name string")
+        """The (id, name) dimension as a LocalRelation: no Spark job to
+        build it or to broadcast it."""
+        return self._local_df()
+
+    def _local_df(self) -> DataFrame:
+        return local_frame(
+            self.spark,
+            self._SCHEMA,
+            {
+                "id": list(self._name_to_id.values()),
+                "name": list(self._name_to_id),
+            },
+        )
 
     def resolve(self, meas: DataFrame) -> DataFrame:
         """Attach names via broadcast join (J2 in SURVEY.md §2.3)."""
@@ -158,7 +173,6 @@ class TableSeriesCatalog(SeriesCatalog):
     frontier are swept at prune time. Readers are always safe on any
     committed version."""
 
-    _SCHEMA = "id bigint, name string"
     _KEEP_VERSIONS = 4
 
     def __init__(self, spark: SparkSession, path: str):
@@ -259,18 +273,12 @@ class TableSeriesCatalog(SeriesCatalog):
                     shutil.rmtree(p, ignore_errors=True)
 
     def _persist(self) -> None:
-        n = self._next_version()
-        self._write_version(
-            self.spark.createDataFrame(
-                [(v, k) for k, v in self._name_to_id.items()], self._SCHEMA
-            ),
-            n,
-        )
+        self._write_version(self._local_df(), self._next_version())
 
     def to_df(self) -> DataFrame:
         versions = self._versions()
         if not versions:
-            return self.spark.createDataFrame([], self._SCHEMA)
+            return local_frame(self.spark, self._SCHEMA, {"id": [], "name": []})
         return self._read_version(versions[-1])
 
     def register_bulk(self, mapping: DataFrame) -> None:

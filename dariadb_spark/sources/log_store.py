@@ -70,9 +70,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import MEAS_FIELDS
+from dariadb_spark.sources.store_protocol import live_rows, read_days
 
 _DAY_MS = 86_400_000
-_EMPTY_SCHEMA = "id bigint, time bigint, value double, flag bigint"
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -370,18 +370,10 @@ class LogTsStore:
                     f"version {version} references {len(missing)} "
                     f"vacuumed data file(s), e.g. {missing[0]}"
                 )
-        if not live:
-            return self.spark.createDataFrame([], _EMPTY_SCHEMA)
-        from dariadb_spark.model import RAW_DAY
-
         # ONE scan over the explicit file list; basePath re-derives the
         # hive p_date so Catalyst still prunes whole day directories
         # (PartitionFilters) — pinned by the parametrized engine test.
-        return (
-            self.spark.read.option("basePath", str(self.files_dir))
-            .parquet(*sorted(live))
-            .select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))
-        )
+        return live_rows(read_days(self.spark, self.files_dir, sorted(live)))
 
     def compact(self, files_per_partition: int = 1) -> None:
         """Fold each day's small append files into ``files_per_partition``
@@ -397,7 +389,7 @@ class LogTsStore:
             if len(paths) <= files_per_partition:
                 continue
             merged = (
-                self.spark.read.parquet(*paths)
+                read_days(self.spark, self.files_dir, paths)
                 .repartition(files_per_partition)
                 .sortWithinPartitions("id", "time")
                 .select(*MEAS_FIELDS)
@@ -424,7 +416,7 @@ class LogTsStore:
                 boundary.append(path)
         if boundary:
             kept = (
-                self.spark.read.parquet(*boundary)
+                read_days(self.spark, self.files_dir, boundary)
                 .where(F.col("time") >= cutoff_ms)
                 .select(*MEAS_FIELDS)
             )

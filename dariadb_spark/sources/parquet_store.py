@@ -27,7 +27,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_FIELDS
+from dariadb_spark.model import MEAS_DDL, MEAS_FIELDS
+from dariadb_spark.sources.store_protocol import live_rows, read_days
 
 _DAY_MS = 86_400_000
 
@@ -49,8 +50,9 @@ class ParquetTsStore:
       FILE granularity: Spark commits parquet files by rename, so a
       directory listing never observes half a file. A multi-day append
       is NOT atomic as a whole — a reader listing mid-commit can see
-      some of its days only. ``read_snapshot()`` pins one listing for
-      multi-action queries so the frame can't change between its jobs.
+      some of its days only. A frame from ``read()`` or
+      ``read_snapshot()`` keeps the listing taken when it was built, so
+      it does not change between its own jobs.
     * ``compact()`` / ``erase_old()`` rewrite directories in place and
       require a single-maintainer window: no concurrent append, and
       concurrent readers may fail mid-swap and must retry (rename-aside
@@ -127,49 +129,32 @@ class ParquetTsStore:
 
     # -- scan -------------------------------------------------------------
     def read(self) -> DataFrame:
-        """The live measurements DataFrame. The hive partition column is
-        carried along (as ``_p_date``) so ``pushdown_time_bounds`` can add
-        the day-range bound that actually prunes partition directories —
-        a bound on ``time`` alone prunes row groups but NOT the directory
-        listing. Operators project it away before returning."""
-        if not any(self.data_dir.iterdir()):
-            return self.spark.createDataFrame(
-                [], "id bigint, time bigint, value double, flag bigint"
-            )
-        from dariadb_spark.model import RAW_DAY
+        """The live measurements DataFrame, ``_p_date`` included (see
+        :func:`~dariadb_spark.sources.store_protocol.live_rows`).
 
-        return self.spark.read.parquet(str(self.data_dir)).select(
-            *MEAS_FIELDS, F.col("p_date").alias(RAW_DAY)
+        Spark lists ``data/`` once, when the frame is built, and a held
+        frame keeps that listing: files an ``append()`` commits later are
+        not in it. Each engine verb calls ``read()`` afresh, so every
+        request sees every append acknowledged before it."""
+        return live_rows(
+            read_days(self.spark, self.data_dir, [str(self.data_dir)])
         )
 
     def read_snapshot(self) -> DataFrame:
-        """Like :meth:`read`, but pinned to the file listing taken NOW:
-        a query planned from this frame sees exactly these files even if
-        ``append()`` commits more while the query's jobs run (Spark
-        re-lists a directory-scoped scan per action; an explicit file
-        list does not). Use for any multi-action read concurrent with a
-        writer."""
+        """Like :meth:`read`, but over the explicit list of part files
+        present NOW rather than a directory: the frame names exactly
+        these files, whatever is committed later."""
         files = sorted(
             str(p) for p in self.data_dir.glob("p_date=*/*.parquet")
         )
-        if not files:
-            return self.spark.createDataFrame(
-                [], "id bigint, time bigint, value double, flag bigint"
-            )
-        from dariadb_spark.model import RAW_DAY
-
-        return (
-            self.spark.read.option("basePath", str(self.data_dir))
-            .parquet(*files)
-            .select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))
-        )
+        return live_rows(read_days(self.spark, self.data_dir, files))
 
     # -- T5: compaction (Dropper / Engine::compress_all) ------------------
     def compact(self, files_per_partition: int = 1) -> None:
         """Rewrite each day partition into few files sorted by (id, time) —
         the WAL→page drop: small append deltas become scan-optimal files
         whose row-group stats prune on id and time."""
-        df = self.spark.read.parquet(str(self.data_dir))
+        df = read_days(self.spark, self.data_dir, [str(self.data_dir)])
         tmp = self.root / "_compact_tmp"
         (
             df.repartition(files_per_partition, "p_date")
@@ -206,14 +191,14 @@ class ParquetTsStore:
                 boundary = part
         if boundary is not None:
             kept = (
-                self.spark.read.parquet(str(boundary))
+                read_days(self.spark, self.data_dir, [str(boundary)])
                 .where(F.col("time") >= cutoff_ms)
                 .select(*MEAS_FIELDS)
             )
             tmp = self.root / "_erase_tmp"
             kept.write.mode("overwrite").parquet(str(tmp))
             shutil.rmtree(boundary)
-            rewritten = self.spark.read.parquet(str(tmp))
+            rewritten = self.spark.read.schema(MEAS_DDL).parquet(str(tmp))
             if rewritten.limit(1).count() > 0:
                 _with_day(rewritten).write.partitionBy("p_date").mode(
                     "append"

@@ -46,9 +46,13 @@ parametrized lifecycle matrix in tests/test_engine.py.
 
 from __future__ import annotations
 
+from pathlib import Path
 from typing import Protocol, runtime_checkable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from dariadb_spark.model import MEAS_FIELDS, RAW_DAY, STORE_DDL, local_frame
 
 
 @runtime_checkable
@@ -76,3 +80,30 @@ class TsStore(Protocol):
 
     def erase_old(self, cutoff_ms: int) -> None:
         ...
+
+
+def read_days(
+    spark: SparkSession, base_dir: Path, paths: list[str]
+) -> DataFrame:
+    """Rows of the parquet files or day directories ``paths`` of a store
+    laid out as ``<base_dir>/p_date=YYYY-MM-DD/``, with ``p_date``
+    discovered from the directory names. The schema is given, not
+    inferred, so building the frame reads no footer and launches no Spark
+    job. No paths gives an empty frame of the same schema."""
+    if not paths:
+        return local_frame(
+            spark, STORE_DDL, {c: [] for c in (*MEAS_FIELDS, "p_date")}
+        )
+    return (
+        spark.read.option("basePath", str(base_dir))
+        .schema(STORE_DDL)
+        .parquet(*paths)
+    )
+
+
+def live_rows(days: DataFrame) -> DataFrame:
+    """What ``read()`` returns: the measurement columns plus the day
+    partition as ``_p_date``, which ``pushdown_time_bounds`` turns into
+    a partition filter (a bound on ``time`` alone prunes row groups but
+    not day directories). Operators project it away."""
+    return days.select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: emitted per batch per touched group: the standing partials —
 #: burstiness_report's input schema plus the group keys
@@ -138,7 +138,7 @@ def streaming_burst_log(
     """Maintain the per-(id, flag) gap accumulators incrementally
     (availableNow here; a production monitor runs unbounded)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: emitted per sample: the raw row plus the EXACT float num/den the
 #: batch lag-chain would produce; the division+round stay JVM-side
@@ -148,7 +148,7 @@ def streaming_ewma_log(
     """Maintain the smoothed stream incrementally (availableNow here; a
     production ingest runs unbounded into a parquet/Delta sink)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: emitted per batch per touched bucket: the cumulative bar
 _OUT_DDL = (
@@ -122,7 +122,7 @@ def streaming_ohlc_log(
     """Maintain the per-(id, bucket) bars incrementally (availableNow
     here; a production ingest runs unbounded with a state timeout)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: emitted per sample past the first: the raw row plus the EXACT float
 #: increase; round + rate division stay JVM-side
@@ -130,7 +130,7 @@ def streaming_counter_rate_log(
     """Maintain the increase stream incrementally (availableNow here; a
     production ingest runs unbounded into a parquet/Delta sink)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

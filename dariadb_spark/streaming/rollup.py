@@ -37,9 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from dariadb_spark.model import MEAS_DDL
 from dariadb_spark.operators.downsample import MS, floor_bucket
 
-_MEAS_DDL = "id bigint, time bigint, value double, flag bigint"
 _PARTIAL_COLS = ("id", "bucket_ms", "_cnt", "_sum", "_min", "_max")
 
 
@@ -85,7 +85,7 @@ def streaming_rollup(
     replaces rather than duplicates (see module docstring)."""
     width_ms = MS[interval]
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: one cumulative summary row per series per batch
 _OUT_DDL = (
@@ -145,7 +145,7 @@ def streaming_run_lengths_log(
     """Maintain the per-series episode summary incrementally
     (availableNow here; a production ingest runs unbounded)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from dariadb_spark.model import MEAS_DDL
+
 #: matches the documents fixture; a production ingest would carry the
 #: same columns out of its landing zone.
 _DOCS_DDL = (
@@ -131,10 +133,6 @@ def streaming_sketch_parity(spark: SparkSession, docs_sf_dir: str):
         raise
 
 
-#: measurement stream schema (matches the store layout / parity slices).
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
-
-
 def streaming_hdr_cells(
     spark: SparkSession,
     meas_dir: str,
@@ -167,7 +165,7 @@ def streaming_hdr_cells(
         f"     & {sub - 1}) END"
     )
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

@@ -30,9 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dariadb_spark.model import MEAS_DDL
 from dariadb_spark.operators.downsample import MS
-
-_MEAS_DDL = "id bigint, time bigint, value double, flag bigint"
 
 #: emitted row schema — the incremental Statistic block per (id, bucket)
 STAT_DDL = (
@@ -339,7 +338,7 @@ def streaming_anomaly_alerts(
     partitioning) → Arrow-batched state fold holding ≤ window points
     per series — state is |series| × window regardless of throughput."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )
@@ -425,7 +424,7 @@ def streaming_stat_blocks(
     partitioning key, stable across batches) → Arrow-batched state fold.
     """
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)

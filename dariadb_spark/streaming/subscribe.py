@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dariadb_spark.model import flag_predicate, ids_predicate
-
-_MEAS_DDL = "id bigint, time bigint, value double, flag bigint"
+from dariadb_spark.model import MEAS_DDL, flag_predicate, ids_predicate
 
 
 def subscribe(
@@ -41,7 +39,7 @@ def subscribe(
     the default runs continuously with small triggers.
     """
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)
@@ -79,7 +77,7 @@ def streaming_downsample(
 
     width_ms = MS[interval]
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)
@@ -146,7 +144,7 @@ def streaming_downsample_append(
 
     width_ms = MS[interval]
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -184,7 +182,7 @@ def streaming_current_value(
     """Latest (time, value, flag) per id maintained incrementally; query the
     in-memory table ``query_name`` for the live snapshot (update mode)."""
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)
@@ -224,7 +222,7 @@ def streaming_sessionize(
     appends via merge-on-read; reconcile with the batch query for exact
     reference semantics)."""
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)
@@ -312,7 +310,7 @@ def streaming_interval_join(
     watermarks pass the join window)."""
     def side(flag: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(_MEAS_DDL)
+            spark.readStream.schema(MEAS_DDL)
             .option("pathGlobFilter", "*.parquet")
             .option("recursiveFileLookup", "true")
             .parquet(data_dir)
@@ -470,7 +468,7 @@ def streaming_dedup_exact(
     window — the 100 TB deployment knob, catching the actual failure
     mode (replays arrive close to the original) with bounded memory."""
     stream = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(data_dir)

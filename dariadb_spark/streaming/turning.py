@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+from dariadb_spark.model import MEAS_DDL
 
 #: emitted per batch per touched series: the standing census counts —
 #: the turning_report input schema
@@ -128,7 +128,7 @@ def streaming_turning_log(
     """Maintain the per-series census incrementally (availableNow here;
     a production monitor runs unbounded)."""
     reader = (
-        spark.readStream.schema(_MEAS_DDL)
+        spark.readStream.schema(MEAS_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
     )

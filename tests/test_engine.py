@@ -342,6 +342,78 @@ def test_store_interval_scan_prunes_partitions(engine):
     ]
 
 
+def _spark_jobs(spark, action) -> int:
+    """How many Spark jobs ``action()`` launches, counted through a
+    private job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after the frame has run (AQE final)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_store_read_launches_no_job(engine):
+    """The store reads with its schema given, so building the frame
+    reads no parquet footer and runs nothing."""
+    assert _spark_jobs(engine.spark, engine.store.read) == 0
+    assert _spark_jobs(engine.spark, engine.store.read_snapshot) == 0
+
+
+def test_id_bounded_verbs_sort_in_one_partition(engine):
+    """Given ids, an answer is request-sized: no verb range-partitions it
+    (no sampling job), and each runs in at most two jobs (the scan's
+    shuffle and the result). ids=None keeps the global range sort."""
+    end = T0 + N_STEPS * STEP
+    bounded = {
+        "read_time_point": lambda: engine.read_time_point([0, 3, 999], end),
+        "current_value": lambda: engine.current_value([1, 2]),
+        "read_interval": lambda: engine.read_interval([1, 2], T0, end),
+        "stat": lambda: engine.stat([1, 2], T0, end),
+        "calc": lambda: engine.calc(["average", "median"], [1, 2], T0, end),
+        "downsample": lambda: engine.downsample("day", [1, 2], T0, end),
+        "min_max_time": lambda: engine.min_max_time([1, 2]),
+    }
+    for verb, build in bounded.items():
+        assert "rangepartitioning" not in _final_plan(build()), verb
+        assert _spark_jobs(engine.spark, lambda: build().collect()) <= 2, verb
+    unbounded = {
+        "current_value": lambda: engine.current_value(None),
+        "read_interval": lambda: engine.read_interval(None, T0, end),
+        "stat": lambda: engine.stat(None, T0, end),
+        "calc": lambda: engine.calc(["average"], None, T0, end),
+        "downsample": lambda: engine.downsample("day"),
+        "min_max_time": lambda: engine.min_max_time(None),
+    }
+    for verb, build in unbounded.items():
+        assert "rangepartitioning" in _final_plan(build()), verb
+
+
+def test_id_bounded_read_interval_keeps_a_parallel_scan(engine):
+    """read_interval gathers its answer through a single-partition
+    exchange above the scan, so the scan itself keeps its partitions."""
+    plan = _final_plan(engine.read_interval([1, 2], T0, T0 + N_STEPS * STEP))
+    lines = plan.splitlines()
+
+    def first(marker: str) -> int:
+        return next(i for i, ln in enumerate(lines) if marker in ln)
+
+    # the plan prints top-down: sort, then the exchange, then the scan
+    sort, exchange = first("Sort ["), first("Exchange SinglePartition")
+    assert sort < exchange < first("Scan parquet"), plan
+
+
 @pytest.mark.parametrize("backend", ["parquet", "log"])
 def test_subscribe_pushes_only_matching(spark, tmp_path, backend):
     eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)

@@ -12,6 +12,7 @@ accumulation-order tolerance to hide bugs behind.
 
 from __future__ import annotations
 
+import math
 import os
 
 from hypothesis import HealthCheck, given, settings
@@ -82,26 +83,91 @@ def test_read_interval_property(spark, rows, lo, hi, flag):
     assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in expect]
 
 
-@given(rows=meas_lists, tp_slot=st.integers(-1, 41),
+# As-of verbs pick the greatest (time, value, flag) per id. These rows put
+# ties on every field of that order: NaN values (ranked above every number,
+# as Spark and DuckDB do), -0.0 next to 0.0 (equal under it), and (id, time)
+# twins that differ only in value or flag. A narrow time range makes the
+# twins frequent.
+asof_values = st.one_of(
+    st.integers(-8, 8).map(lambda x: x / 4.0),
+    st.sampled_from([float("nan"), -0.0, 0.0]),
+)
+asof_flags = st.sampled_from([0, 1, 16, 17, 2**32 - 1])
+
+
+@st.composite
+def asof_lists(draw):
+    rows = draw(
+        st.lists(
+            st.tuples(
+                st.integers(0, 5),
+                st.integers(0, 10).map(lambda s: T0 + s * STEP),
+                asof_values,
+                asof_flags,
+            ),
+            max_size=30,
+        )
+    )
+    if not rows:
+        return rows
+    twins = draw(
+        st.lists(
+            st.tuples(st.integers(0, len(rows) - 1), asof_values, asof_flags),
+            max_size=10,
+        )
+    )
+    return rows + [(rows[k][0], rows[k][1], v, f) for k, v, f in twins]
+
+
+def _latest_key(t):
+    """The as-of total order: time, then value with NaN greatest, then
+    flag. -0.0 and 0.0 compare equal, as they do in Spark."""
+    v = t[2]
+    return (t[1], (1, 0.0) if math.isnan(v) else (0, v), t[3])
+
+
+def _same(got, want) -> bool:
+    """(time, value, flag) equality with NaN equal to NaN."""
+    return all(
+        g == w or (isinstance(g, float) and math.isnan(g) and math.isnan(w))
+        for g, w in zip(got, want)
+    )
+
+
+@given(rows=asof_lists(), tp_slot=st.integers(-1, 11),
        flag=st.sampled_from([0, 1, 16]))
 @_SETTINGS
 def test_read_time_point_property(spark, rows, tp_slot, flag):
     tp = T0 + tp_slot * STEP
     ids = [0, 1, 2, 3, 4, 5, 77]  # 77 never exists
-    got = {
-        r.id: (r.time, r.value, r.flag)
-        for r in _engine(spark, rows).read_time_point(ids, tp, flag).collect()
-    }
-    assert set(got) == set(ids)  # cardinality contract: every requested id
+    out = _engine(spark, rows).read_time_point(ids, tp, flag).collect()
+    assert [r.id for r in out] == ids  # one row per requested id, in order
+    got = {r.id: (r.time, r.value, r.flag) for r in out}
     for i in ids:
         cand = [
             t for t in rows if t[0] == i and t[1] <= tp and _flag_ok(t[3], flag)
         ]
         if cand:
-            best = max(cand, key=lambda t: (t[1], t[2], t[3]))
-            assert got[i] == (best[1], best[2], best[3])
+            best = max(cand, key=_latest_key)
+            assert _same(got[i], best[1:]), (i, got[i], best)
         else:
             assert got[i] == (tp, 0.0, FLAGS_NO_DATA)
+
+
+@given(rows=asof_lists(), flag=st.sampled_from([0, 1, 16]),
+       ids=st.sampled_from([None, [0, 2, 4, 77]]))
+@_SETTINGS
+def test_current_value_property(spark, rows, flag, ids):
+    out = _engine(spark, rows).current_value(ids, flag).collect()
+    by_id: dict[int, list] = {}
+    for t in rows:
+        if (ids is None or t[0] in ids) and _flag_ok(t[3], flag):
+            by_id.setdefault(t[0], []).append(t)
+    # only series that exist, sorted by id, whether or not ids bound them
+    assert [r.id for r in out] == sorted(by_id)
+    for r in out:
+        best = max(by_id[r.id], key=_latest_key)
+        assert _same((r.time, r.value, r.flag), best[1:]), (r, best)
 
 
 @given(rows=meas_lists)
