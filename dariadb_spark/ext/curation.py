@@ -64,16 +64,10 @@ def decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     keys — the text never shuffles); the eval shingle set is distinct-ed
     first, so the join is |train shingles| × (tiny broadcast)."""
     # pin_corpus materializes the shingling projection ONCE across the
-    # diverging consumers below (r19 optimization round; A/B numbers in
-    # OPTIMIZATION_r19.md), r20: mode-gated pin (see
-    # shingles.pin_corpus): default = eager localCheckpoint (fastest
-    # single-node, the bench-comparable form); fault-tolerant mode
-    # (spark.dariadb.pins.faultTolerant=true) = lineage-keeping persist
-    # for clusters; a deployment that can't hold the shingle table
-    # swaps this for an explicit signature-artifact write.
-    # (dedup_incremental measured SLOWER with this pin - its %4
-    # scan-pushdown design wins - so the pin is per-operator, not in
-    # _shingled itself.)
+    # diverging consumers below (mechanism follows the master, see
+    # shingles.pin_corpus). dedup_incremental measured SLOWER with this
+    # pin - its %4 scan-pushdown design wins - so the pin is
+    # per-operator, not in _shingled itself.
     sh = pin_corpus(_shingled(load_table(spark, sf, "documents")))
     ex = sh.select(
         "doc_id",
@@ -579,8 +573,8 @@ def doremi_reweight(spark: SparkSession, sf: str) -> DataFrame:
     alpha2 — seeded at the natural share), and their step average
     alpha_bar, the DoReMi output mixture. A domain whose excess beats
     the uniform-smoothing pull ends with alpha_bar above nat_frac
-    (stress-pinned on a planted gibberish domain in bench_stress.py;
-    the fixture's sub-0.01 excesses move weights only a few 1e-4)."""
+    (on a planted gibberish domain; the fixture's sub-0.01 excesses
+    move weights only a few 1e-4)."""
     M = _DOREMI_MU
     df = _doremi_base(spark, sf).withColumn(
         "a0_mu", F.expr(f"CAST(round(nat_frac * {M}, 0) AS BIGINT)")
@@ -816,14 +810,10 @@ def bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     the same m from the same count), and clamped to at least one word so
     an empty holdout cannot zero the modulus."""
     # pin_corpus materializes the shingling projection ONCE across the
-    # diverging consumers below (r19 optimization round; A/B numbers in
-    # OPTIMIZATION_r19.md), r20: mode-gated pin, see
-    # shingles.pin_corpus (default localCheckpoint; conf-selected
-    # lineage-keeping persist for clusters). A 100 TB
-    # deployment that can't hold the shingle table swaps this for an
-    # explicit signature-artifact write. (dedup_incremental measured
-    # SLOWER with this pin - its %4 scan-pushdown design wins - so the
-    # pin is per-operator, not in _shingled itself.)
+    # diverging consumers below (mechanism follows the master, see
+    # shingles.pin_corpus). dedup_incremental measured SLOWER with this
+    # pin - its %4 scan-pushdown design wins - so the pin is
+    # per-operator, not in _shingled itself.
     sh = pin_corpus(_shingled(load_table(spark, sf, "documents")))
     ex = sh.select(
         "doc_id",
@@ -1469,10 +1459,9 @@ def select_excess_loss(spark: SparkSession, sf: str) -> DataFrame:
     candidate bigram explode) feeds the MLE aggregate AND the scored
     join. Isolated best-of-3 at sf0.1: 1.89 → 1.33 (hcnt) → 1.21 s
     (+cand_bi), rows identical. At 100 TB `hcnt` is the KN-artifact
-    table a deployment persists; `cand_bi` is corpus-sized, so r20
-    routed it through the mode-gated pin (shingles.pin_corpus: default
-    localCheckpoint, conf-selected lineage-keeping persist for
-    clusters) standing in for an explicit bigram-postings artifact."""
+    table a deployment persists; `cand_bi` is corpus-sized, so it goes
+    through shingles.pin_corpus (localCheckpoint on a local master,
+    lineage-keeping persist elsewhere)."""
     docs = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
     w = "split(text, ' ')"
     bi_expr = (

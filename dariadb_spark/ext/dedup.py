@@ -290,14 +290,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     engine-specific hash of them).
     """
     # pin_corpus materializes the shingling projection ONCE across the
-    # diverging consumers below (r19 optimization round; A/B numbers in
-    # OPTIMIZATION_r19.md), r20: mode-gated pin, see
-    # shingles.pin_corpus (default localCheckpoint; conf-selected
-    # lineage-keeping persist for clusters). A 100 TB
-    # deployment that can't hold the shingle table swaps this for an
-    # explicit signature-artifact write. (dedup_incremental measured
-    # SLOWER with this pin - its %4 scan-pushdown design wins - so the
-    # pin is per-operator, not in _shingled itself.)
+    # diverging consumers below (mechanism follows the master, see
+    # shingles.pin_corpus). dedup_incremental measured SLOWER with this
+    # pin - its %4 scan-pushdown design wins - so the pin is
+    # per-operator, not in _shingled itself.
     sh = pin_corpus(_shingled(load_table(spark, sf, "documents")))
     bands, key = _minhash_bands(sh)
     cand = (
@@ -692,13 +688,9 @@ def decontaminate_fuzzy(spark: SparkSession, sf: str) -> DataFrame:
     # pin_corpus materializes the shingling projection ONCE: it feeds
     # four diverging consumers (train/eval band builds + train/eval
     # verify projections — two of them corpus-wide), so the lazy form
-    # re-ran the per-doc shingle build per consumer (r19 A/B at sf0.1
-    # best-of-3: 2.54 s -> 1.92 s). r20: mode-gated pin, see
-    # shingles.pin_corpus (default localCheckpoint; conf-selected
-    # lineage-keeping persist for clusters). A
-    # 100 TB deployment that can't hold the shingle table swaps this
-    # for the explicit signature-artifact write the module docstring
-    # already describes.
+    # re-ran the per-doc shingle build per consumer (best-of-3 at
+    # sf0.1: 2.54 s -> 1.92 s). Mechanism follows the master, see
+    # shingles.pin_corpus.
     sh = pin_corpus(_shingled(load_table(spark, sf, "documents")))
     # split BEFORE the signature build: per-doc computation is
     # independent, so the eval pipeline's scan + signature shuffle touch
@@ -1152,7 +1144,7 @@ def dedup_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
 def boilerplate_verdicts(docs: DataFrame) -> DataFrame:
     """The library entry point behind :func:`dedup_boilerplate` (the
     `sem_dedup_blocked` pattern): verdicts for any (doc_id, text)
-    frame — what bench_stress drives above fixture size."""
+    frame, at any size."""
     p = BOILER_CHUNK_WORDS
     chunks = docs.selectExpr(
         "doc_id", "split(text, ' ') AS w"

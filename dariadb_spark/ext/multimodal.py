@@ -349,8 +349,8 @@ def media_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale (100 TB): identical shuffle math to the SimHash path
     (ext/dedup.py) — candidates ≈ n²/2¹⁵ per chunk instead of n²
-    all-pairs (measured within 0.2% of theory at 100k docs in
-    bench_stress), and each side of the chunk join carries only
+    all-pairs (measured within 0.2% of theory at 100k docs), and each
+    side of the chunk join carries only
     (doc_id, 8-byte fp) — pixels/payloads never shuffle. The fp build
     itself is a zero-shuffle scan-stage projection."""
     fps = _phash_fingerprints(load_table(spark, sf, "documents"))

@@ -17,43 +17,40 @@ NGRAM = 3
 #: operator pins — see :func:`pin_corpus`.
 _CORPUS_PIN_REGISTRY: list[DataFrame] = []
 
-#: Runtime-settable conf selecting the pin mechanism (ADVICE r19's
-#: "gate the pin behind a harness/deployment flag").
-FT_PINS_CONF = "spark.dariadb.pins.faultTolerant"
+
+def _single_process_master(master: str) -> bool:
+    """True on ``local``/``local[...]``, where the executor lives in the
+    driver's process (``local-cluster[...]`` runs separate executor
+    processes, so it counts as a cluster)."""
+    return master == "local" or master.startswith("local[")
 
 
 def pin_corpus(df: DataFrame) -> DataFrame:
     """Materialize a corpus-sized shared subtree once across its
     diverging consumers (different projections defeat exchange reuse,
-    so the lazy form re-runs the corpus scan per consumer — the r19
-    measurement).
+    so the lazy form re-runs the corpus scan per consumer).
 
-    Two mechanisms, selected by the runtime conf
-    ``spark.dariadb.pins.faultTolerant`` (VERDICT/ADVICE r19 item 6):
+    The mechanism follows the master:
 
-    - default (``false``): ``localCheckpoint(eager=True)`` — the r19
-      form, measured fastest on a single node (best-of-3 at sf0.1:
-      decontaminate 0.93 s vs 1.33 persist / 1.37 artifact-write;
-      excess_loss 1.00 vs 1.27 / 1.40; minhash_lsh 1.39 vs 1.99 /
-      1.74 — the columnar cache encode of array<string> shingles costs
-      ~0.4 s/query the executor-local row blocks don't). Keeps the
-      driver's bench comparable.
-    - ``true`` (cluster deployments): ``persist(MEMORY_AND_DISK)`` —
-      same single-materialization plan shape (consumers read the
-      InMemoryRelation) with lineage KEPT, so an executor loss
+    - ``local[...]``: ``localCheckpoint(eager=True)``. An executor loss
+      takes the driver with it, so truncating lineage costs nothing,
+      and this is the fastest single-node form (best-of-3 at sf0.1:
+      decontaminate 0.93 s vs 1.33 persist; excess_loss 1.00 vs 1.27;
+      minhash_lsh 1.39 vs 1.99 — the columnar cache encode of
+      array<string> shingles costs ~0.4 s/query the executor-local row
+      blocks don't).
+    - any other master: ``persist(MEMORY_AND_DISK)``. Same
+      single-materialization plan shape (consumers read the
+      InMemoryRelation) with lineage kept, so an executor loss
       recomputes the partition instead of failing the job, and plan
-      construction stays job-free. A deployment that cannot hold the
-      table swaps this for the explicit signature-artifact write the
-      call sites document.
+      construction stays job-free.
 
-    Rotation discipline (both modes): the PREVIOUS pin — any
-    operator's — is released before the new one registers, so repeated
-    invocations (bench best-of-2, oracle sweeps) and plan-identical
+    Rotation: the previous pin — any operator's — is released before
+    the new one registers, so repeated invocations and plan-identical
     sibling operators (decontaminate/fuzzy/lsh all pin the same shingle
     projection) never read data cached by an earlier query: each
-    invocation computes its pin from the parquet inputs. Harness-safe
-    for the same reason as ``parity_stream_partitions``: queries run
-    sequentially per session; in fault-tolerant mode a still-unconsumed
+    invocation computes its pin from the parquet inputs. Queries run
+    sequentially per session; under ``persist`` a still-unconsumed
     result whose pin was rotated out silently recomputes through the
     kept lineage. Vocab-/grid-sized pins (token_pmi counts, BPE vocab,
     k-means assignments, …) stay unconditional eager localCheckpoints —
@@ -64,11 +61,10 @@ def pin_corpus(df: DataFrame) -> DataFrame:
             _CORPUS_PIN_REGISTRY.pop().unpersist(blocking=False)
         except Exception:
             pass  # session already stopped — nothing retained anyway
-    spark = df.sparkSession
-    if spark.conf.get(FT_PINS_CONF, "false").lower() == "true":
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
+    if _single_process_master(df.sparkSession.sparkContext.master):
         df = df.localCheckpoint(eager=True)
+    else:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _CORPUS_PIN_REGISTRY.append(df)
     return df
 

@@ -365,9 +365,9 @@ def _hyperplanes(dim: int = 64) -> list[list[list[float]]]:
     """Deterministic pseudo-random hyperplanes (fixed LCG — no RNG state,
     reproducible across runs/engines).
 
-    Round-7 fix, found by the at-scale ANN stress (bench_stress): the
-    original scaling ``(state >> 33) / 2^31 - 1`` spans ``[-1, 0)`` —
-    every component NEGATIVE, so all planes pointed into one orthant
+    The scaling must straddle zero. An earlier ``(state >> 33) / 2^31 -
+    1`` spanned ``[-1, 0)`` (found at 500k vectors): every component
+    NEGATIVE, so all planes pointed into one orthant
     (mean pairwise |cos| ≈ 0.7) and the 16-bit sketch collapsed to a
     few effective bits: per-table bucket-collision probability ~5.5e-2
     instead of the ~1.5e-5 a uniform 2^16 sketch gives — a ~4000×
@@ -540,7 +540,7 @@ def sim_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     (√(10⁹)·64 doubles ≈ 16 MB). The fixture pins K = 16 so the cell
     structure (multiple occupied cells, probes crossing cell
     boundaries) is actually exercised at 500 vectors; the measured
-    at-scale ANN path is the LSH variant (bench_stress, 500k vectors).
+    at-scale ANN path is the LSH variant.
     """
     emb = _emb(spark, sf)
     cent = emb.where(F.col("vec_id") < K_CELLS).selectExpr(
@@ -1559,10 +1559,10 @@ def pq_encode_arrow(emb: DataFrame, codebooks) -> DataFrame:
     INT). Ranking runs on the shared round(d2, 4) grid and ties break
     to the smaller centroid id (argmin first-occurrence) — the exact
     contract of the expression encode and the DuckDB oracle, so all
-    three paths agree bit-for-bit. Measured in bench_stress
-    (`stress_pq_encode_arrow`): 100% code agreement with the codegen'd
-    expression encode on a 10k sample and the faster path above K≈64 —
-    the K-crossover is recorded in BASELINE.md."""
+    three paths agree bit-for-bit. Measured at 500k vectors: 100% code
+    agreement with the codegen'd expression encode on a 10k sample, and
+    the faster path above K≈64 (the K-crossover is recorded in
+    BASELINE.md)."""
     import numpy as np
     import pandas as pd
 
@@ -1614,9 +1614,8 @@ def sem_dedup_blocked(
     ``emb``: (vec_id BIGINT, e ARRAY<DOUBLE>); ``centroids``: K×dim
     list/ndarray (K ≈ √N in the SemDeDup regime; learn them with
     :func:`sim_kmeans`'s recipe or any clustering). Returns
-    (vec_a, vec_b, cell) pairs. Validated above fixture size by
-    bench_stress.stress_sem_dedup: 500k vectors / 1024 cells — all 10
-    planted clone pairs, zero false positives, pairwise work 9.8e-4 of
+    (vec_a, vec_b, cell) pairs. Measured at 500k vectors / 1024 cells:
+    all 10 planted clone pairs, zero false positives, pairwise work 9.8e-4 of
     all-pairs, 2.9 s warm."""
     import numpy as np
     import pandas as pd
@@ -1910,11 +1909,10 @@ def _pca_power_from_gram(gram: DataFrame) -> DataFrame:
     (round(v_i/√S, 6)). Input contract: (i, j, g) — the exact integer
     Gram cell table from either builder.
 
-    r19 audit: the gram feeds both power steps, but the final adaptive
-    plan shows the second consumer reading a ReusedExchange of the
-    gram aggregate — the corpus scan runs ONCE at runtime, so an eager
-    pin here is pure overhead (A/B was a wash both orders). Left
-    lazy; see OPTIMIZATION_r19.md."""
+    The gram feeds both power steps, but the final adaptive plan shows
+    the second consumer reading a ReusedExchange of the gram aggregate
+    — the corpus scan runs ONCE at runtime, so an eager pin here is
+    pure overhead (A/B was a wash both orders). Left lazy."""
     sdiv = (
         "CAST(CASE WHEN {v} < 0 THEN -(abs({v}) DIV {d})"
         " ELSE abs({v}) DIV {d} END AS BIGINT)"

@@ -5,8 +5,7 @@ DuckDB oracle and is fully hash-checked, not just rows-only:
 
 * count-min sketch — heavy-hitter frequency estimation over document
   bigrams (``sketch_cms_topk``; streaming-maintained twin in
-  streaming/sketch.py; one-pass 10M-token build measured in
-  bench_stress);
+  streaming/sketch.py; one-pass build);
 * k-minimum-values — distinct counting per group
   (``sketch_kmv_distinct``) plus set-operation algebra over merged
   sketches: union estimates and inclusion-exclusion intersections
@@ -1411,7 +1410,7 @@ def sketch_cms_rollup(spark: SparkSession, sf: str) -> DataFrame:
     # test_cms_rollup_single_corpus_scan); checkpointing the KB-sized
     # summary computes the scan once and shares it — exactly the
     # persisted-shard-summary shape a production rollup stores anyway.
-    # The r9 bench caught the original form at 3.6 s (occurrence-grain
+    # The original form measured 3.6 s (occurrence-grain
     # hashing + per-consumer corpus scans + a separate .count() action
     # for n_shards); this form measures ~1.0 s.
     shard_counts = (
@@ -1917,14 +1916,11 @@ def _streaming_hll_parity(spark: SparkSession, sf: str) -> DataFrame:
     return streaming_hll_parity(spark, sf)
 
 
-# round 12: the explicit-HLL family staged through round 11 joins the
-# driver-checked surface (parity + mergeability + 20M-occurrence stress
-# pinned in tests/test_sketches.py / bench_stress.py since r11; window
-# discipline per registry.py).
-# ext_sketch_hll_distinct / ext_sketch_hll_union / ext_sketch_hll_m64
-# were MERGED into ext_sketch_hll_report (merge #4 of the 250-ceiling
-# trajectory, executed r15 after the audit) — the query fns and oracles
-# stay for tests and for the composite, registered below m64.
+# The explicit-HLL family (parity + mergeability pinned in
+# tests/test_sketches.py). ext_sketch_hll_distinct /
+# ext_sketch_hll_union / ext_sketch_hll_m64 are merged into
+# ext_sketch_hll_report — the query fns and oracles stay for tests and
+# for the composite, registered below m64.
 register("streaming_hll_parity", _streaming_hll_parity, STREAMING_HLL_REGS_SQL)
 
 

@@ -1661,11 +1661,6 @@ register("ext_series_perm_entropy", series_perm_entropy, SERIES_PERM_ENTROPY_SQL
 
 
 # --- seasonal-naive forecast error (MASE) ------------------------------------
-# Registered round 13: the ledger's actual r13 plan
-# (tools/attestation_ledger.py --plan 50) showed only 33 fixed
-# obligations — not the 40 the round-12 estimate assumed — so ALL 16
-# staged operators fit this window, including the six originally
-# penciled for r14/r15.
 
 MASE_BUCKET_MS = HOUR_MS
 MASE_SEASON = 24  # daily season on the hourly grid

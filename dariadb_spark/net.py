@@ -30,11 +30,10 @@ Binary Meas encoding (``encoding="bin"``): the reference protocol
 shipped PACKED Meas arrays, not text — measurement-shaped results
 (columns exactly ``id,time,value,flag``) and appends can opt into
 base64-wrapped column-major int64/float64 buffers inside the same JSON
-envelope. Measured (bench_stress `stress_net_protocol`): it removes
-the JSON row tax from the wire path while keeping one framing for
-every verb. Appends of either encoding enter Spark as a one-partition
-Arrow LocalRelation (``model.meas_frame``), so each writes one file per
-day.
+envelope. It removes the JSON row tax from the wire path while keeping
+one framing for every verb. Appends of either encoding enter Spark as a
+one-partition Arrow LocalRelation (``model.meas_frame``), so each
+writes one file per day.
 """
 
 from __future__ import annotations

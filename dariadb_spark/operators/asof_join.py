@@ -119,9 +119,8 @@ def nearest_join(
     # "next" = nearest following non-null. Expressed as last() over the
     # REVERSED running frame, NOT first() over (currentRow,
     # unboundedFollowing): Spark's UnboundedFollowing frame recomputes
-    # its aggregate from scratch per row — O(n²) per partition, found
-    # hung at 43k rows/series by bench_stress (round 7) — while the
-    # running frame is the incremental O(n) processor. Scan order over
+    # its aggregate from scratch per row — O(n²) per partition, which
+    # hangs at 43k rows/series — while the running frame is the incremental O(n) processor. Scan order over
     # the reversed ordering visits the same rows, so last(ignorenulls)
     # picks the identical row first(ignorenulls) would.
     wb = Window.partitionBy("id").orderBy(

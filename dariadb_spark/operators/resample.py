@@ -159,9 +159,9 @@ def interpolate(
     # "next sample" = last() over the REVERSED running frame, NOT
     # first() over (currentRow, unboundedFollowing): Spark's
     # UnboundedFollowing frame re-aggregates from each row to partition
-    # end — O(n²) per partition, found hung at 43k grid rows/series by
-    # bench_stress (round 7); the reversed running frame is the
-    # incremental O(n) processor and picks the identical row.
+    # end — O(n²) per partition, which hangs at 43k grid rows/series;
+    # the reversed running frame is the incremental O(n) processor and
+    # picks the identical row.
     wb = Window.partitionBy("id").orderBy(
         F.col("t").desc(), F.col("side").asc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)

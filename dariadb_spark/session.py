@@ -3,7 +3,8 @@
 The correctness driver constructs its own SparkSession and hands it to the
 query callables, so every conf the engine depends on must be *runtime*
 settable and is (re-)applied via :func:`ensure_runtime_confs` at the top of
-each query. ``get_spark`` is used by our own tests and ``bench.py``.
+each query. ``get_spark`` is used by our own tests, perfbench and the
+oracle sweep (tools/full_sweep.py).
 """
 
 from __future__ import annotations
@@ -84,7 +85,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build a local session sized from env (bench/tests entry point).
+    """Build a local session sized from env (tests/tools entry point).
 
     On a real cluster none of the sizing below applies — the engine is pure
     DataFrame plans and inherits whatever the cluster provides; AQE picks

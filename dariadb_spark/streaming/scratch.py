@@ -4,7 +4,7 @@ Each parity query materializes a fixture slice into a ``mkdtemp`` dir,
 drives a real streaming query over it, and returns the result — which
 previously kept the scratch parquet (and the memory-sink temp view)
 alive for the life of the process, accumulating disk and driver memory
-across repeated bench/test sweeps (VERDICT r5 item 5 / ADVICE r5).
+across repeated test/benchmark sweeps.
 
 :func:`localize_and_cleanup` closes that: it collects the (tiny —
 parity outputs are tens-to-hundreds of rows) result into a driver-local
@@ -16,8 +16,7 @@ parity workload: the harness streams cover ≤15 series, but a stream
 started under the session-wide OLAP default (32 shuffle partitions)
 instantiates 32 state-store partitions — each with its own Python
 worker round-trip, store init and commit — for a 15-group fold.
-Stage-level timing (tools/time_anomaly_parity.py, VERDICT r6 item 1)
-showed ``addBatch`` dropping ~2× (1.3–1.8 s → 0.6–1.1 s warm) when the
+Stage-level timing showed ``addBatch`` dropping ~2× (1.3–1.8 s → 0.6–1.1 s warm) when the
 state partitions match the group cardinality. Production entry points
 (`streaming_anomaly_alerts`, `streaming_rollup`, …) are untouched and
 inherit the session conf — at 100 TB the series set is large and the

@@ -40,7 +40,7 @@ def streaming_cms_cells(
     """Maintain the count-min cell table incrementally over a document
     stream (availableNow here; a production stream runs unbounded).
 
-    The plan is the one-pass build bench_stress measures: bigram
+    The plan is a one-pass build: bigram
     occurrences → depth fan-out (explode generator) → groupBy(depth,
     bucket) — map-side combine collapses each micro-batch's partition
     to ≤ 1024 cells before the state update, so per-batch shuffle

@@ -395,8 +395,7 @@ def streaming_anomaly_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="error",  # single drop: stale dir fails loudly (ADVICE r19)
         )
         # 15-series harness slice → 4 state partitions, not the session's
-        # OLAP default (VERDICT r6 item 1: addBatch ~2× faster; stage
-        # breakdown in BASELINE.md / tools/time_anomaly_parity.py)
+        # OLAP default (addBatch ~2× faster; see streaming/scratch.py)
         with parity_stream_partitions(spark):
             q = streaming_anomaly_alerts(spark, data_dir, query_name=qname)
         await_parity_termination(q)

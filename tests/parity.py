@@ -1,10 +1,10 @@
 """Local replica of the driver's Spark-vs-DuckDB oracle compare.
 
-Mimics CORRECTNESS_r{N}.json semantics: row count, schema (column names),
-and an order-insensitive value compare (columns sorted by name, rows
-sorted by all columns). Floats compared exactly — the engine/oracle pair
-is designed to produce bit-identical values (rounding applied on both
-sides wherever accumulation order could differ).
+Checks row count, schema (column names) and an order-insensitive value
+compare (columns sorted by name, rows sorted by all columns). Floats
+compared exactly — the engine/oracle pair is designed to produce
+bit-identical values (rounding applied on both sides wherever
+accumulation order could differ).
 """
 
 from __future__ import annotations

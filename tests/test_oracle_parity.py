@@ -1,5 +1,5 @@
-"""Every registered query with an oracle must hash-match DuckDB at sf0.01 —
-the same gate the driver applies (CORRECTNESS_r{N}.json).
+"""Every registered query with an oracle must hash-match DuckDB at sf0.01
+(tests/parity.compare).
 
 Tiering (VERDICT r19 item 2 — the full 228-query sweep grew the default
 suite past the driver harness's pytest time budget, leaving the repo's

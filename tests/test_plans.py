@@ -202,7 +202,7 @@ def test_check_window_is_first_50_harness_queries():
     __spark_entry__.queries(); pin the harness-facing ordering so an
     accidental reorder can't silently evict a query from the hard
     correctness signal — and pin that REGISTRY itself is NOT mutated
-    (round-2 ADVICE: bench/tests must see pure registration order)."""
+    (tests and tools must see pure registration order)."""
     import __spark_entry__ as entrymod
     from dariadb_spark.registry import CHECK_WINDOW, REGISTRY, harness_ordered
 
@@ -214,13 +214,9 @@ def test_check_window_is_first_50_harness_queries():
     assert ordered[:50] == CHECK_WINDOW
     assert sorted(ordered) == sorted(REGISTRY)
     assert list(entrymod.queries())[:50] == CHECK_WINDOW
-    # round-18 (the executed ledger plan — tools/attestation_ledger.py
-    # --plan 50, verified violation-free at N = 228 after the ten
-    # r17-staged registrations): THIRTEEN core rows at stale-3
-    # (priority 1 — the ledger rotates the core cohort ahead of the
-    # core ≤ 3 policy line), then the TEN round-18 registrations
-    # (priority 2 — never ship a NEW query outside the window), then
-    # the 27 stale-5 [EXT] rows in ledger order. 13 + 10 + 27 = 50.
+    # the window's pinned composition: THIRTEEN core rows, then the
+    # TEN most recent registrations (a new query never ships outside
+    # the window), then 27 [EXT] rows. 13 + 10 + 27 = 50.
     assert CHECK_WINDOW[:13] == [
         "bucket_hour", "bucket_minute30", "current_value",
         "erase_old_check", "fn_all", "interval_scan",
@@ -378,6 +374,40 @@ def test_salted_paths_bound_skew_on_hot_key(spark):
     assert salted_j == plain_j
 
 
+def test_abc_classes_distributed_equals_window_pareto(spark):
+    """plans/prefix.py's range-partitioned two-pass ABC summary (the
+    at-scale form of orders_pareto_op's single-partition window; no
+    registered query runs it) byte-equals orders_pareto_op's on the
+    planted boundary grid AND pseudo-random revenues."""
+    import datetime
+
+    from dariadb_spark.ext.relational import orders_pareto_op
+    from dariadb_spark.plans.prefix import abc_classes_distributed
+
+    d = datetime.datetime(2024, 1, 1)
+
+    for cents in (
+        [80, 15, 5],
+        [((i * 48271) % 9973) + 1 for i in range(400)],
+    ):
+        orders = spark.createDataFrame(
+            [(i, i, "O", c / 100.0, d, "P") for i, c in enumerate(cents)],
+            "o_orderkey long, o_custkey long, o_orderstatus string,"
+            " o_totalprice double, o_orderdate timestamp,"
+            " o_orderpriority string",
+        )
+        want = [tuple(r) for r in orders_pareto_op(orders).collect()]
+        per = orders.selectExpr(
+            "o_custkey",
+            "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
+        )
+        got = [
+            tuple(r)
+            for r in abc_classes_distributed(per, n_partitions=5).collect()
+        ]
+        assert got == want
+
+
 def test_kmeans_estep_is_zero_shuffle(spark, oracle_sf_dir):
     """The k-means assignment inlines driver-side centroids as literals,
     so the final E-step plan has NO aggregation exchange — the only
@@ -453,7 +483,7 @@ def test_no_unbounded_following_frames(spark, sf_dir):
     UnboundedFollowing window frame processor re-aggregates from every
     row to the partition end, so a (currentRow, unboundedFollowing)
     frame is quadratic per partition — it hung interpolate at 43k grid
-    rows/series (bench_stress). "Next non-null" must be expressed as
+    rows/series. "Next non-null" must be expressed as
     last(ignorenulls) over the REVERSED running frame instead. Pin the
     physical plans of every window-backward operator."""
     from dariadb_spark.registry import REGISTRY
@@ -476,9 +506,8 @@ def test_lsh_hyperplanes_are_direction_diverse():
     scaling once produced components in [-1, 0) — every plane in one
     orthant (mean pairwise |cos| ≈ 0.7), collapsing the 16-bit sketch
     to a few effective bits and blowing candidate volume ~4000× at
-    corpus scale (found by bench_stress's 500k-vector ANN stress;
-    invisible at fixture size and to the oracle, which shares the
-    planes). Healthy random 64-d directions have mean pairwise
+    corpus scale (found at 500k vectors; invisible at fixture size and
+    to the oracle, which shares the planes). Healthy random 64-d directions have mean pairwise
     |cos| ≈ 0.09 — pin a generous ceiling, plus sign balance."""
     import numpy as np
 
@@ -492,43 +521,6 @@ def test_lsh_hyperplanes_are_direction_diverse():
         assert c.mean() < 0.2, c.mean()
         # components must straddle zero (the bug made them all-negative)
         assert 0.4 < (m > 0).mean() < 0.6
-
-
-def test_bench_emission_fits_driver_tail_capture():
-    """BENCH_r1–r7 all recorded "parsed": null because the single JSON
-    line outgrew the driver's ~2000-char stdout tail capture. Pin the
-    r8 fix: for the REAL registry (and a far larger synthetic one) the
-    stdout line parses and fits with headroom, and the full map
-    round-trips every query."""
-    import json as _json
-
-    import bench
-    from dariadb_spark.registry import REGISTRY
-
-    for names in (
-        list(REGISTRY),
-        [f"ext_very_long_query_name_number_{i:04d}" for i in range(400)],
-    ):
-        timings = {n: 0.1234 + (i % 7) for i, n in enumerate(names)}
-        # with AND without a previous map: the prev path additionally
-        # emits the ctl + ctl5 epoch-normalizer blocks (r20), which
-        # spend line budget too and must still fit the tail capture
-        prev = {n: t * 1.07 for n, t in timings.items()}
-        for p in (None, prev):
-            full, line = bench.emit_payloads(timings, 99.9, 0.1, p)
-            assert len(line) <= bench.TAIL_CAPTURE - 400, len(line)
-            parsed = _json.loads(line)
-            assert parsed["n_queries"] == len(names)
-            assert set(full["queries"]) == set(names)
-            # the slim map leads with the slowest queries
-            slowest = max(timings, key=timings.get)
-            assert slowest in parsed["queries"]
-        # real registry: the pinned CTL5 control set must emit the
-        # epoch normalizer (median now/ref over byte-identical paths)
-        if set(bench.CTL5) <= set(names):
-            assert full["ctl5"]["epoch"] == round(1 / 1.07, 3)
-            assert "queries_over_ctl5_median" in full
-            assert parsed["c5"]["epoch"] == full["ctl5"]["epoch"]
 
 
 def test_coverage_md_matches_registry():
@@ -635,29 +627,6 @@ def test_no_cartesian_product_in_staged_r15_plans(spark, oracle_sf_dir):
         )
     )
     assert "Join" not in df._jdf.queryExecution().explainString(mode)
-
-
-def test_bench_stress_main_guard_is_last_statement():
-    """bench_stress.py grows by appending stress functions each round;
-    twice now an append landed AFTER the __main__ guard, so the full
-    suite called main() before the newest defs existed (NameError) —
-    invisible to the isolated per-function runs. Pin the guard as the
-    module's LAST top-level statement."""
-    import ast
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "bench_stress.py")
-    tree = ast.parse(open(path).read())
-    last = tree.body[-1]
-    assert isinstance(last, ast.If), (
-        "bench_stress.py's last top-level statement must be the "
-        f"__main__ guard, found {type(last).__name__}"
-    )
-    t = last.test
-    assert (
-        isinstance(t, ast.Compare)
-        and getattr(t.left, "id", None) == "__name__"
-    ), "last statement is an If but not the __main__ guard"
 
 
 def test_set_ops_merge_projections(spark, oracle_sf_dir):
@@ -1061,10 +1030,9 @@ def test_no_cartesian_product_in_staged_r19_plans(spark, oracle_sf_dir):
 
 def test_staged_cohort_discipline_is_complete():
     """registry.STAGED_NEXT is the machine-checked staged-cohort source
-    of truth (r18): every staged name must carry the op callable, the
-    DuckDB oracle, a referencing pytest, and a bench_stress entry
-    BEFORE its registration round — and must leave the list the round
-    it registers (tools/stage_check.py)."""
+    of truth: every staged name must carry the op callable, the DuckDB
+    oracle and a referencing pytest BEFORE it registers — and must leave
+    the list when it registers (tools/stage_check.py)."""
     import sys
     from pathlib import Path
 
@@ -1114,16 +1082,17 @@ def test_r19_session_pins_materialize_shared_subtrees(spark, oracle_sf_dir):
         assert n_scans <= max_scans, (fn.__name__, n_scans)
 
 
-def test_r20_corpus_pins_materialize_in_both_modes(spark, oracle_sf_dir):
-    """The r20 corpus-sized pin gate (VERDICT/ADVICE r19 item 6,
-    shingles.pin_corpus): in the DEFAULT mode the shared subtree
-    materializes as the r19 eager localCheckpoint (`Scan ExistingRDD`,
-    the single-node-fastest form the bench compares); with
-    `spark.dariadb.pins.faultTolerant=true` it materializes as a
+def test_r20_corpus_pins_materialize_in_both_modes(
+    spark, oracle_sf_dir, monkeypatch
+):
+    """shingles.pin_corpus picks its mechanism from the master. On a
+    local master the shared subtree materializes as an eager
+    localCheckpoint (`Scan ExistingRDD`); on any other master it is a
     lineage-keeping persist (InMemoryRelation shared by >=2 consumers,
-    recomputable on executor loss). Either way the corpus fan-out must
-    be gone — a regression to the lazy form re-runs the shingle scan
-    per consumer."""
+    recomputable on executor loss). The cluster branch is reached by
+    substituting the master predicate. Either way the corpus fan-out
+    must be gone — a regression to the lazy form re-runs the shingle
+    scan per consumer."""
     from dariadb_spark.ext import curation, dedup, shingles
 
     cases = (
@@ -1142,26 +1111,27 @@ def test_r20_corpus_pins_materialize_in_both_modes(spark, oracle_sf_dir):
             .toString()
         )
 
-    assert spark.conf.get(shingles.FT_PINS_CONF, "false") == "false"
+    single = shingles._single_process_master
+    assert single("local") and single("local[4]") and single("local[*]")
+    assert not single("local-cluster[2,1,1024]")
+    assert not single("spark://host:7077") and not single("yarn")
+    assert single(spark.sparkContext.master)
     for fn in cases:
         plan = plan_of(fn)
         assert plan.count("Scan ExistingRDD") >= 2, (
-            fn.__name__, "default-mode pin did not materialize"
+            fn.__name__, "local-master pin did not materialize"
         )
         assert "InMemoryTableScan" not in plan, fn.__name__
 
-    spark.conf.set(shingles.FT_PINS_CONF, "true")
-    try:
-        for fn in cases:
-            plan = plan_of(fn)
-            assert plan.count("InMemoryTableScan") >= 2, (
-                fn.__name__, "fault-tolerant pin did not materialize"
-            )
-            assert shingles._CORPUS_PIN_REGISTRY, fn.__name__
-            lvl = shingles._CORPUS_PIN_REGISTRY[-1].storageLevel
-            assert lvl.useMemory and lvl.useDisk, (fn.__name__, str(lvl))
-            # lineage present in-plan: the cached child still scans the
-            # corpus (recomputable), rather than a truncated RDD leaf
-            assert "InMemoryRelation" in plan, fn.__name__
-    finally:
-        spark.conf.set(shingles.FT_PINS_CONF, "false")
+    monkeypatch.setattr(shingles, "_single_process_master", lambda _m: False)
+    for fn in cases:
+        plan = plan_of(fn)
+        assert plan.count("InMemoryTableScan") >= 2, (
+            fn.__name__, "cluster-master pin did not materialize"
+        )
+        assert shingles._CORPUS_PIN_REGISTRY, fn.__name__
+        lvl = shingles._CORPUS_PIN_REGISTRY[-1].storageLevel
+        assert lvl.useMemory and lvl.useDisk, (fn.__name__, str(lvl))
+        # lineage present in-plan: the cached child still scans the
+        # corpus (recomputable), rather than a truncated RDD leaf
+        assert "InMemoryRelation" in plan, fn.__name__

@@ -333,6 +333,51 @@ def test_hdr_bucket_arithmetic_matches_python():
         assert w * 16 <= max(lo, 16), (x, w, lo)  # rel width ≤ 1/16
 
 
+def _meas(spark, rows):
+    from dariadb_spark.model import MEAS_DDL
+
+    return spark.createDataFrame(rows, MEAS_DDL)
+
+
+def test_funnel_hdr_swap_bounded_error(spark):
+    """funnel_latency_op swaps its exact rank window for the HDR walk
+    above ``rank_threshold`` converted rows per transition; fixture
+    data never gets there. Forcing rank_threshold=0 routes median/p90
+    through the HDR log₂×16 weighted-count walk: count and mean stay
+    branch-identical (plain sums), and each estimate sits within the
+    documented ≤ 1/16 relative error of the exact order statistic
+    (+1 ms absolute slack for the sub-16 linear range). Lags span
+    octaves (hashed 1..997 ms and ~0.25–60 s) so the walk crosses real
+    log buckets."""
+    from dariadb_spark.ext.analytics import _FUNNEL, funnel_latency_op
+
+    rows = []
+    for u in range(400):
+        t1 = u * 100_000
+        lag1 = (u * 2654435761) % 997 + 1
+        rows.append((u, t1, 0.0, _FUNNEL[0]))
+        rows.append((u, t1 + lag1, 0.0, _FUNNEL[1]))
+        if u % 2 == 0:
+            lag2 = ((u * 998244353) % 241 + 1) * 250
+            rows.append((u, t1 + lag1 + lag2, 0.0, _FUNNEL[2]))
+    df = _meas(spark, rows)
+    exact = {
+        r.transition: tuple(r)[1:]
+        for r in funnel_latency_op(df, rank_threshold=10**9).collect()
+    }
+    hdr = {
+        r.transition: tuple(r)[1:]
+        for r in funnel_latency_op(df, rank_threshold=0).collect()
+    }
+    assert set(exact) == {"view_to_click", "click_to_purchase"} == set(hdr)
+    for tr in exact:
+        en, emean, emed, ep90 = exact[tr]
+        hn, hmean, hmed, hp90 = hdr[tr]
+        assert (en, emean) == (hn, hmean), (tr, exact[tr], hdr[tr])
+        assert abs(hmed - emed) <= emed / 16 + 1, (tr, emed, hmed)
+        assert abs(hp90 - ep90) <= ep90 / 16 + 1, (tr, ep90, hp90)
+
+
 def test_bloom_decontaminate_parity_and_guarantees(spark, oracle_sf_dir):
     # Staged operator: DuckDB parity plus Bloom's defining guarantees —
     # NO false negatives (every exactly-contaminated doc is flagged with
@@ -1180,8 +1225,7 @@ def test_corpus_mixture_apply_parity_and_yield(spark, oracle_sf_dir):
 
 
 def test_pq_encode_arrow_api_matches_argmin(spark):
-    # The production encode API (stress-validated at 500k with 100%
-    # agreement vs the expression path): on a small planted frame, the
+    # The production encode API: on a small planted frame, the
     # codes must equal a numpy argmin replay, identical vectors must
     # encode identically (the no-false-negatives property), and ties
     # must break to the smaller centroid id.
@@ -1212,12 +1256,64 @@ def test_pq_encode_arrow_api_matches_argmin(spark):
             assert got[i][m] == int(d.argmin()), (i, m)
 
 
+def test_ivf_index_persists_and_probes_exactly(spark, tmp_path, sf_dir):
+    """The persisted IVF index (build-once/query-many production API):
+    probing must equal a numpy brute-force over EXACTLY the probed
+    cells' members, the top-1 for an in-corpus query is itself
+    (cos = 1), and the posting scan prunes to the probed partitions
+    (PartitionFilters in the plan — the directory layout IS the
+    index)."""
+    from dariadb_spark.ext.similarity import (
+        build_ivf_index,
+        ivf_index_query,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
+        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
+    )
+    rows = emb.collect()
+    X = np.vstack([r["e"] for r in rows]).astype(np.float64)
+    ids = np.array([r["vec_id"] for r in rows])
+    C = X[:16]  # first-16 centroids, the registered IVF row's seed
+    stats = build_ivf_index(emb, str(tmp_path / "ivf"), C)
+    assert stats["n_vectors"] == len(rows) and stats["k_cells"] == 16
+
+    # centroid assignment replay (fp32, argmax first-occurrence)
+    Cn32 = (C / np.linalg.norm(C, axis=1, keepdims=True)).astype(np.float32)
+    Xn32 = (X / np.linalg.norm(X, axis=1, keepdims=True)).astype(np.float32)
+    cell_of = (Xn32 @ Cn32.T).argmax(axis=1)
+
+    queries = [(int(ids[i]), X[np.where(ids == ids[i])[0][0]]) for i in (0, 7, 33)]
+    out = ivf_index_query(
+        spark, str(tmp_path / "ivf"), queries, n_probe=2, topk=4
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    import re
+
+    assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
+    got = [(r.query_id, r.rank, r.vec_id, r.cos) for r in out.collect()]
+
+    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    for qid, qv in queries:
+        qn = qv / np.linalg.norm(qv)
+        sims = qn @ Cn.T
+        order = np.lexsort((np.arange(16), -sims))[:2]
+        members = np.isin(cell_of, order)
+        cos = (X[members] / np.linalg.norm(X[members], axis=1, keepdims=True)) @ qn
+        cand_ids = ids[members]
+        want = sorted(zip(-cos, cand_ids))[:4]
+        mine = [(r, v, c) for (q, r, v, c) in got if q == qid]
+        assert mine[0][1] == qid and abs(mine[0][2] - 1.0) < 1e-9  # self
+        for (rank, vec_id, c), (negc, wid) in zip(mine, want):
+            assert vec_id == wid, (qid, rank, vec_id, wid)
+            assert abs(c - (-negc)) < 1e-9
+
+
 def test_sem_dedup_blocked_complete_within_cells(spark):
-    # The production-scale API (stress-validated at 500k in
-    # bench_stress): on a small planted frame, the blocked pair set
-    # must equal the brute-force pair set restricted to shared cells —
-    # within-cell completeness, zero false positives, and every planted
-    # clone pair found (identical vectors always share a cell).
+    # The production-scale API: on a small planted frame, the blocked
+    # pair set must equal the brute-force pair set restricted to shared
+    # cells — within-cell completeness, zero false positives, and every
+    # planted clone pair found (identical vectors always share a cell).
     from dariadb_spark.ext.similarity import sem_dedup_blocked
 
     rng = np.random.RandomState(11)
@@ -1462,7 +1558,7 @@ def test_doremi_reweight_parity_loop_pin_and_invariants(spark, oracle_sf_dir):
     # Staged r12 operator: DoReMi-style domain reweighting — DuckDB
     # oracle parity, bit-identity of the driver-side production loop's
     # step 2 with the unrolled registered query, and the distribution /
-    # direction invariants the planted stress pins at 240k docs.
+    # direction invariants.
     import duckdb
 
     from dariadb_spark.ext.curation import (

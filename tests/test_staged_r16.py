@@ -317,59 +317,6 @@ def test_ohlc_fold_property_matches_batch_groupby(spark):
         ) == (want.open, want.high, want.low, want.close, want.n_samples), trial
 
 
-def test_ivf_index_persists_and_probes_exactly(spark, tmp_path, sf_dir):
-    """The persisted IVF index (build-once/query-many production API):
-    probing must equal a numpy brute-force over EXACTLY the probed
-    cells' members, the top-1 for an in-corpus query is itself
-    (cos = 1), and the posting scan prunes to the probed partitions
-    (PartitionFilters in the plan — the directory layout IS the
-    index)."""
-    from dariadb_spark.ext.similarity import (
-        build_ivf_index,
-        ivf_index_query,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
-    )
-    rows = emb.collect()
-    X = np.vstack([r["e"] for r in rows]).astype(np.float64)
-    ids = np.array([r["vec_id"] for r in rows])
-    C = X[:16]  # first-16 centroids, the registered IVF row's seed
-    stats = build_ivf_index(emb, str(tmp_path / "ivf"), C)
-    assert stats["n_vectors"] == len(rows) and stats["k_cells"] == 16
-
-    # centroid assignment replay (fp32, argmax first-occurrence)
-    Cn32 = (C / np.linalg.norm(C, axis=1, keepdims=True)).astype(np.float32)
-    Xn32 = (X / np.linalg.norm(X, axis=1, keepdims=True)).astype(np.float32)
-    cell_of = (Xn32 @ Cn32.T).argmax(axis=1)
-
-    queries = [(int(ids[i]), X[np.where(ids == ids[i])[0][0]]) for i in (0, 7, 33)]
-    out = ivf_index_query(
-        spark, str(tmp_path / "ivf"), queries, n_probe=2, topk=4
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
-    got = [(r.query_id, r.rank, r.vec_id, r.cos) for r in out.collect()]
-
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    for qid, qv in queries:
-        qn = qv / np.linalg.norm(qv)
-        sims = qn @ Cn.T
-        order = np.lexsort((np.arange(16), -sims))[:2]
-        members = np.isin(cell_of, order)
-        cos = (X[members] / np.linalg.norm(X[members], axis=1, keepdims=True)) @ qn
-        cand_ids = ids[members]
-        want = sorted(zip(-cos, cand_ids))[:4]
-        mine = [(r, v, c) for (q, r, v, c) in got if q == qid]
-        assert mine[0][1] == qid and abs(mine[0][2] - 1.0) < 1e-9  # self
-        for (rank, vec_id, c), (negc, wid) in zip(mine, want):
-            assert vec_id == wid, (qid, rank, vec_id, wid)
-            assert abs(c - (-negc)) < 1e-9
-
-
 # --- second r16 staging pass: heaps / benford / level shift / HITS -----------
 
 

@@ -720,31 +720,6 @@ def test_ranked_prefix_preserves_value_type(spark):
         assert got == want, ddl
 
 
-def test_abc_classes_distributed_equals_window_pareto(spark):
-    """The two-pass ABC summary byte-equals orders_pareto_op's on the
-    planted boundary grid AND pseudo-random revenues."""
-    from dariadb_spark.ext.relational import orders_pareto_op
-    from dariadb_spark.plans.prefix import abc_classes_distributed
-
-    for cents in (
-        [80, 15, 5],
-        [((i * 48271) % 9973) + 1 for i in range(400)],
-    ):
-        orders = _orders(spark, [
-            (i, i, "O", c / 100.0, _D, "P") for i, c in enumerate(cents)
-        ])
-        want = [tuple(r) for r in orders_pareto_op(orders).collect()]
-        per = orders.selectExpr(
-            "o_custkey",
-            "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
-        )
-        got = [
-            tuple(r)
-            for r in abc_classes_distributed(per, n_partitions=5).collect()
-        ]
-        assert got == want
-
-
 # --- ext_customer_migration -----------------------------------------------------
 
 def test_customer_migration_parity_and_planted_reversal(

@@ -824,41 +824,3 @@ def test_series_tail_excess_matches_python_reference(spark):
     got = [tuple(r) for r in
            series_tail_excess_op(_meas(spark, rows)).collect()]
     assert got == _tail_python(cents)
-
-
-# --- funnel rank→HDR-sketch adaptive swap (VERDICT r17 item 4) ---------------------
-
-def test_funnel_hdr_swap_bounded_error(spark):
-    """Forcing rank_threshold=0 routes median/p90 through the HDR
-    log₂×16 weighted-count walk: count and mean stay branch-identical
-    (plain sums), and each estimate sits within the documented ≤ 1/16
-    relative error of the exact order statistic (+1 ms absolute slack
-    for the sub-16 linear range). Lags span octaves (hashed 1..997 ms
-    and ~0.25–60 s) so the walk crosses real log buckets."""
-    from dariadb_spark.ext.analytics import _FUNNEL, funnel_latency_op
-
-    rows = []
-    for u in range(400):
-        t1 = u * 100_000
-        lag1 = (u * 2654435761) % 997 + 1
-        rows.append((u, t1, 0.0, _FUNNEL[0]))
-        rows.append((u, t1 + lag1, 0.0, _FUNNEL[1]))
-        if u % 2 == 0:
-            lag2 = ((u * 998244353) % 241 + 1) * 250
-            rows.append((u, t1 + lag1 + lag2, 0.0, _FUNNEL[2]))
-    df = _meas(spark, rows)
-    exact = {
-        r.transition: tuple(r)[1:]
-        for r in funnel_latency_op(df, rank_threshold=10**9).collect()
-    }
-    hdr = {
-        r.transition: tuple(r)[1:]
-        for r in funnel_latency_op(df, rank_threshold=0).collect()
-    }
-    assert set(exact) == {"view_to_click", "click_to_purchase"} == set(hdr)
-    for tr in exact:
-        en, emean, emed, ep90 = exact[tr]
-        hn, hmean, hmed, hp90 = hdr[tr]
-        assert (en, emean) == (hn, hmean), (tr, exact[tr], hdr[tr])
-        assert abs(hmed - emed) <= emed / 16 + 1, (tr, emed, hmed)
-        assert abs(hp90 - ep90) <= ep90 / 16 + 1, (tr, ep90, hp90)

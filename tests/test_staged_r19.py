@@ -465,25 +465,6 @@ def test_trade_flows_parity_and_planted_matrix(spark, oracle_sf_dir):
     assert got == want
 
 
-def test_bench_stress_module_constants_are_unique():
-    """Guard for the r18 constant-shadowing bug: a module-level
-    ALL_CAPS constant defined twice in bench_stress.py silently
-    overrides the earlier stress's sizing at import time (the second
-    BASKET_STRESS_ORDERS quadrupled market basket's input before the
-    full-suite run caught it). Module-level constant names must be
-    unique."""
-    import collections
-    import pathlib
-    import re
-
-    src = (pathlib.Path(__file__).parent.parent / "bench_stress.py").read_text()
-    names = collections.Counter(
-        m.group(1) for m in re.finditer(r"^([A-Z][A-Z0-9_]+) = ", src, re.M)
-    )
-    dups = {k: v for k, v in names.items() if v > 1}
-    assert not dups, dups
-
-
 # --- ext_referential_fsck -----------------------------------------------------------
 
 def test_referential_fsck_parity_and_planted_tears(spark, oracle_sf_dir):

@@ -1,8 +1,10 @@
-"""Full-registry sf0.1 oracle sweep — the rotation-gap closer
-(BASELINE.md records one row per round): every registered query vs its
-DuckDB oracle at 10× fixture scale, value-hash compared after the
-driver's canonicalization (tests/parity.py), one warm local[32]
-session. Exit nonzero on any mismatch."""
+"""Full-registry oracle sweep: every registered query vs its DuckDB
+oracle, value-hash compared after the driver's canonicalization
+(tests/parity.py), in one warm ``get_spark`` session. Scale defaults to
+sf0.1 (10× the fixture); ``SPARK_GRAFT_SF_DIR`` picks another. Exit
+nonzero on any mismatch.
+
+    SPARK_GRAFT_SF_DIR=/path/to/sf0.01 python3 tools/full_sweep.py"""
 
 from __future__ import annotations
 

@@ -1,14 +1,10 @@
-"""Staging-discipline checker (r18): every name in
-``registry.STAGED_NEXT`` must carry the FULL staging kit before its
-registration round — the op callable, the DuckDB oracle constant, a
-pytest that references it, a bench_stress stress entry, and membership
-in the staged plan pre-pin. Run standalone (exit 1 on gaps) or via
-tests/test_plans.py::test_staged_cohort_discipline_is_complete.
-
-The prose staged-cohort comments in registry.py remain the narrative
-record; THIS check is what makes the cohort list load-bearing (the r18
-constant-shadowing bug showed why prose conventions need a mechanical
-twin)."""
+"""Staging-discipline checker: every name in ``registry.STAGED_NEXT``
+must carry the staging kit before it registers — the op callable, the
+DuckDB oracle constant and a pytest that references it (membership in
+the staged plan pre-pin is checked by
+tests/test_plans.py::test_staged_cohort_matches_plan_pin). Run
+standalone (exit 1 on gaps) or via
+tests/test_plans.py::test_staged_cohort_discipline_is_complete."""
 
 from __future__ import annotations
 
@@ -29,7 +25,6 @@ def check() -> list[str]:
     tests_src = "\n".join(
         p.read_text() for p in (REPO / "tests").glob("test_*.py")
     )
-    stress_src = (REPO / "bench_stress.py").read_text()
     for name, (mod_name, fn_name, oracle_name) in STAGED_NEXT.items():
         if name in REGISTRY:
             problems.append(
@@ -52,12 +47,6 @@ def check() -> list[str]:
                 )
         if fn_name not in tests_src:
             problems.append(f"{name}: no pytest references {fn_name}")
-        # a streaming twin's stress drives the ingest machinery
-        # (<stem>_state / <stem>_log) rather than the parity wrapper —
-        # match on the stem
-        stem = fn_name.removesuffix("_parity")
-        if stem not in stress_src and f'"{name}"' not in stress_src:
-            problems.append(f"{name}: no bench_stress entry exercises it")
     return problems
 
 
