@@ -14,7 +14,7 @@ is whole-stage-codegen'd expressions with zero extra shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import MEAS_CTE_SQL, load_table, measurements
@@ -866,10 +866,6 @@ register("ext_events_paths", events_paths, EVENTS_PATHS_SQL)
 
 
 # --- funnel time-to-convert ---------------------------------------------------
-# Registered round 15 (staged round 14 with the full discipline:
-# implemented + oracled + pytest parity + planted stress first,
-# registered at the window rotation).
-#
 # The HOW-FAST companion to `ext_funnel_conversion` (which reports only
 # HOW MANY users reach each stage): the latency distribution of each
 # stage transition — mean, rank-walk median, and the rank-⌈0.9·m⌉ p90
@@ -877,7 +873,7 @@ register("ext_events_paths", events_paths, EVENTS_PATHS_SQL)
 # stage times, NEW output: the conversion-lag distribution.
 
 def funnel_latency(spark: SparkSession, sf: str) -> DataFrame:
-    """Fixture query for the r15 window (:func:`funnel_latency_op`)."""
+    """Fixture query for :func:`funnel_latency_op`."""
     return funnel_latency_op(measurements(spark, sf))
 
 
@@ -990,10 +986,11 @@ def funnel_latency_op(
     weighted-count walk (:func:`_hdr_rank_walk`): median and p90
     become bounded-error (≤ 1/16 relative) estimates off a
     dimension-sized bucket table, while count and mean stay exact
-    (plain sums). The branch decision is one dimension-sized count,
-    the adaptive pattern of ext/dedup.py's union-find/label-prop
-    split; ``lags`` is localCheckpoint-pinned across the count and the
-    stats pass so the funnel reduction runs once per invocation.
+    (plain sums). The branch decision reads the per-transition counts
+    observed while ``lags`` is localCheckpoint-pinned (the adaptive
+    pattern of ext/dedup.py's union-find/label-prop split), so the
+    funnel reduction runs once per invocation and the decision costs
+    no job of its own.
     """
     s1 = meas.where(F.col("flag") == _FUNNEL[0]).groupBy("id").agg(
         F.min("time").alias("t1")
@@ -1022,19 +1019,26 @@ def funnel_latency_op(
         F.col("id"),
         (F.col("t3") - F.col("t2")).alias("lag_ms"),
     )
-    # localCheckpoint pins the three-stage funnel reduction ONCE before
-    # the eager branch-decision count — without it the count job and the
-    # stats pass each re-ran the whole reduction (exchange reuse only
-    # applies within one action; the downsample/kcore rotation
-    # precedent, ADVICE r18). lags is n_converted rows of 3 columns.
-    lags = lag12.unionByName(lag23).localCheckpoint(eager=True)
+    # localCheckpoint pins the three-stage funnel reduction once, so the
+    # stats pass does not re-run it (exchange reuse only applies within
+    # one action). The per-transition counts for the branch decision ride
+    # on the checkpoint job as observed metrics: no action of their own.
+    # lags is n_converted rows of 3 columns.
+    counts = Observation()
+    lags = (
+        lag12.unionByName(lag23)
+        .observe(
+            counts,
+            *(
+                F.count(F.when(F.col("transition") == t, 1)).alias(t)
+                for t in ("view_to_click", "click_to_purchase")
+            ),
+        )
+        .localCheckpoint(eager=True)
+    )
     from dariadb_spark.ext.exact import ratio_round_spark
 
-    # dimension-sized branch decision (2 rows), the CC adaptive pattern
-    max_m = (
-        lags.groupBy("transition").count().agg(F.max("count")).collect()
-    )[0][0] or 0
-    if max_m > rank_threshold:
+    if max(counts.get.values()) > rank_threshold:
         stats = lags.groupBy("transition").agg(
             F.count("*").alias("n_users"),
             F.sum("lag_ms").alias("sum_lag"),
@@ -1134,9 +1138,6 @@ ORDER BY s.transition"""
 
 FUNNEL_LATENCY_SQL = _funnel_latency_sql()
 
-# Registered round 15 (staged round 14: implemented + oracled + pytest
-# parity incl. planted-lag fixtures + 100k-row stress + hash-matched at
-# sf0.1 in the staged second-pass sweep).
 register("ext_funnel_latency", funnel_latency, FUNNEL_LATENCY_SQL)
 
 

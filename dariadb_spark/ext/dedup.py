@@ -28,7 +28,7 @@ from dariadb_spark.ext.exact import (
     ratio_round_spark as _rr_s,
 )
 from dariadb_spark.ext.shingles import _SHINGLE_CTE, _shingled, pin_corpus
-from dariadb_spark.model import load_table
+from dariadb_spark.model import load_table, local_frame
 from dariadb_spark.registry import register
 
 JACCARD_THRESHOLD = 0.5
@@ -935,9 +935,11 @@ def _cc_union_find(spark: SparkSession, pairs: DataFrame) -> DataFrame:
                 parent[rb] = ra
             else:
                 parent[ra] = rb
-    rows = sorted((n, find(n)) for n in parent)
-    return spark.createDataFrame(
-        rows, "doc_id bigint, canonical_id bigint"
+    docs = sorted(parent)
+    return local_frame(
+        spark,
+        "doc_id bigint, canonical_id bigint",
+        {"doc_id": docs, "canonical_id": [find(n) for n in docs]},
     ).orderBy("doc_id")
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dariadb_spark.ext.hashes import _h60_duck, _h60_spark
-from dariadb_spark.model import load_table
+from dariadb_spark.model import load_table, local_frame
 from dariadb_spark.registry import register
 
 QUERY_VEC_IDS = [0, 1, 2, 3, 4]
@@ -2413,9 +2413,10 @@ def build_ivf_index(emb: DataFrame, path: str, centroids) -> dict:
     assigned.repartition("cell").write.partitionBy("cell").mode(
         "errorifexists"
     ).parquet(f"{path}/postings")
-    cent_rows = [(int(i), [float(x) for x in C[i]]) for i in range(len(C))]
-    spark.createDataFrame(
-        cent_rows, "cid long, ce array<double>"
+    local_frame(
+        spark,
+        "cid long, ce array<double>",
+        {"cid": list(range(len(C))), "ce": C.astype(np.float64).tolist()},
     ).coalesce(1).write.mode("errorifexists").parquet(f"{path}/centroids")
     return {"n_vectors": obs.get["n"], "k_cells": int(len(C)), "path": path}
 
@@ -2452,17 +2453,23 @@ def ivf_index_query(
     Q = np.vstack(qvecs)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     sims = Qn @ Cn.T
-    probe_rows = []
+    probe_qids, probe_cells = [], []
     for i, qid in enumerate(qids):
         # deterministic probe order: cos DESC, cid ASC
         order = np.lexsort((np.arange(sims.shape[1]), -sims[i]))[:n_probe]
         for c in order:
-            probe_rows.append((qid, int(c)))
-    cells = sorted({c for _, c in probe_rows})
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell long")
-    qdf = spark.createDataFrame(
-        [(qid, [float(x) for x in Q[i]]) for i, qid in enumerate(qids)],
+            probe_qids.append(qid)
+            probe_cells.append(int(c))
+    cells = sorted(set(probe_cells))
+    probes = local_frame(
+        spark,
+        "query_id long, cell long",
+        {"query_id": probe_qids, "cell": probe_cells},
+    )
+    qdf = local_frame(
+        spark,
         "query_id long, q array<double>",
+        {"query_id": qids, "q": Q.tolist()},
     )
     posts = spark.read.parquet(f"{path}/postings").where(
         F.col("cell").isin([int(c) for c in cells])

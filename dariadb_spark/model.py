@@ -19,8 +19,14 @@ mapping so the correctness harness compares like with like.
 
 from __future__ import annotations
 
+import operator
+import os
+import stat
+import threading
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dariadb_spark.session import ensure_runtime_confs
 
@@ -49,20 +55,19 @@ RAW_DAY = "_p_date"
 _DAY_MS = 86_400_000
 
 #: ms range whose UTC day renders as a 4-digit year (0001..9999); bounds
-#: outside it (e.g. the 2**60 "whole history" sentinel) simply skip the
-#: day-pruning predicate — correct, just unpruned.
+#: outside it (e.g. the 2**60 "whole history" sentinel) skip the raw-column
+#: and day-pruning predicates: correct, just unpruned.
 _DAY_STR_MIN = -62_135_596_800_000
 _DAY_STR_MAX = 253_402_300_799_000
 
 
-def _day_str(ms: int) -> str | None:
-    if not (_DAY_STR_MIN <= ms <= _DAY_STR_MAX):
-        return None
+def _day_str(ms: int) -> str:
     import datetime as _dt
 
     return _dt.datetime.fromtimestamp(
         (ms // _DAY_MS) * 86_400, tz=_dt.timezone.utc
     ).strftime("%Y-%m-%d")
+
 
 #: event_type → flag bitmask code (FIXTURES.md canonical mapping).
 EVENT_FLAG_CASE_SQL = (
@@ -78,14 +83,20 @@ MEAS_CTE_SQL = (
 )
 
 
-def local_frame(spark: SparkSession, ddl: str, columns: dict) -> DataFrame:
-    """A LocalRelation over columns already in driver memory (``name →
-    sequence``, in ``ddl`` order). It goes through Arrow, so neither
-    building nor scanning it launches a Spark job; ``createDataFrame``
-    over a Python list builds a Python RDD, which does."""
+def local_frame(spark: SparkSession, schema, columns) -> DataFrame:
+    """A LocalRelation over data already in driver memory: ``columns`` is
+    a ``pyarrow.Table`` or a mapping ``name → sequence`` in ``schema``
+    order; ``schema`` is a DDL string or a ``StructType``. It goes through
+    Arrow, so building it and ``collect`` launch no Spark job (the Arrow
+    ``toPandas`` path still runs one short JVM-only job).
+    ``createDataFrame`` over Python rows would build a Python RDD instead,
+    and every action on it would start Python workers. This is the one
+    place in the package that turns driver-side rows into a frame."""
     import pyarrow as pa
 
-    return spark.createDataFrame(pa.table(columns), ddl)
+    if not isinstance(columns, pa.Table):
+        columns = pa.table(columns)
+    return spark.createDataFrame(columns, schema)
 
 
 def meas_frame(spark: SparkSession, ids, times, values, flags) -> DataFrame:
@@ -98,10 +109,58 @@ def meas_frame(spark: SparkSession, ids, times, values, flags) -> DataFrame:
     ).coalesce(1)
 
 
+#: session confs that change the schema Spark infers from a parquet footer
+_PARQUET_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: (resolved path, size, mtime_ns, infer confs) → inferred schema; the
+#: schema depends on nothing else, so one memo serves every session
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file ``path``, inferred
+    once per file version. Inference runs a Spark job; a read given the
+    schema runs none. The memo key is the resolved path, size and
+    ``mtime_ns`` plus the session's inference confs, so a rewritten file
+    or a changed conf infers again. A path the local filesystem cannot
+    stat as a regular file (a directory, a remote URI) is inferred on
+    every call."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    key = (
+        real,
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(k, None) for k in _PARQUET_INFER_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMA_MEMO_LOCK:
+            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+                del _SCHEMA_MEMO[next(iter(_SCHEMA_MEMO))]
+            _SCHEMA_MEMO[key] = schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver fixture table (parquet, column-pruned at scan)."""
+    """Load one driver fixture table (parquet, column-pruned at scan),
+    reading with its memoized schema (:func:`parquet_schema`)."""
     ensure_runtime_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,37 +188,47 @@ def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load_table(spark, sf_dir, "events")
     ts_type = dict(events.dtypes)["ts"]
-    cols = [
-        F.col("user_id").alias("id"),
-        None,  # time, filled below
-        F.col("value").alias("value"),
-        F.expr(EVENT_FLAG_CASE_SQL).alias("flag"),
-        F.col("ts").alias(RAW_TS),
-    ]
     if ts_type == "bigint":
-        cols[1] = F.expr("ts DIV 1000000").alias("time")
+        time_sql = "ts DIV 1000000"
     elif ts_type == "timestamp_ntz":
-        cols[1] = F.unix_millis(F.col("ts").cast("timestamp")).alias("time")
+        time_sql = "unix_millis(CAST(ts AS TIMESTAMP))"
     else:  # "timestamp" (LTZ)
-        cols[1] = F.unix_millis(F.col("ts")).alias("time")
-    return events.select(*cols)
+        time_sql = "unix_millis(ts)"
+    return events.selectExpr(
+        "user_id AS id",
+        f"{time_sql} AS time",
+        "value",
+        f"{EVENT_FLAG_CASE_SQL} AS flag",
+        f"ts AS {RAW_TS}",
+    )
 
 
 def flag_predicate(flag: int) -> Column:
     """dariadb flag filter (reference: libdariadb/meas.h, Meas::inFlag):
     query flag 0 matches everything, otherwise bitmask containment
-    ``(meas.flag & q.flag) == q.flag``.
-    """
-    if flag == 0:
-        return F.lit(True)
-    return F.col("flag").bitwiseAND(F.lit(flag)) == F.lit(flag)
+    ``(meas.flag & q.flag) == q.flag``. One SQL expression, shared with
+    the oracle (:func:`flag_predicate_sql`)."""
+    return F.expr(flag_predicate_sql(flag))
 
 
 def flag_predicate_sql(flag: int) -> str:
-    """The oracle-side rendering of :func:`flag_predicate` (pre-folded)."""
+    """:func:`flag_predicate` as SQL text, for Spark and DuckDB alike.
+    ``flag`` may come off the wire, so anything but an integer raises
+    rather than reaching the SQL text."""
+    flag = operator.index(flag)
     if flag == 0:
         return "TRUE"
     return f"((flag & {flag}) = {flag})"
+
+
+def _sane_ms(ms: int | None) -> int | None:
+    """``ms`` if it is a wall-clock value whose UTC day has a 4-digit
+    year, else None. A sentinel like 2**60 would overflow the raw ns/µs
+    literal, so its raw-column and day bounds are skipped: correct, just
+    unpruned, since the ``time`` bound still applies."""
+    if ms is None or not (_DAY_STR_MIN <= ms <= _DAY_STR_MAX):
+        return None
+    return ms
 
 
 def pushdown_time_bounds(
@@ -167,72 +236,63 @@ def pushdown_time_bounds(
 ) -> Column:
     """Closed-interval containment ``from <= time <= to`` (reference:
     libdariadb/meas.h, Meas::inInterval; SURVEY.md §7.3.3 pins closed
-    ends, matching the oracle's BETWEEN), plus — when the frame still
-    carries the raw parquet ``ts`` column — the equivalent bound on it,
-    so the range reaches the scan as a PushedFilter (parquet row-group
-    min/max pruning, the reference's ``.pagei`` chunk index role).
-    ``time = ts DIV 1e6`` (floor), hence
-    ``time ∈ [a, b] ⟺ ts ∈ [a·1e6, b·1e6 + 999999]``."""
-    cond = F.lit(True)
+    ends, matching the oracle's BETWEEN), plus the equivalent bounds on
+    the raw columns the frame still carries, built as one SQL expression
+    (one py4j call instead of one per Column operation):
+
+    * raw parquet ``ts`` (``_raw_ts``): the range reaches the scan as a
+      PushedFilter (parquet row-group min/max pruning, the reference's
+      ``.pagei`` chunk index role). ``time = ts DIV 1e6`` (floor), hence
+      ``time ∈ [a, b] ⟺ ts ∈ [a·1e6, b·1e6 + 999999]``; at µs precision
+      ``ts ∈ [a·1e3, b·1e3 + 999]``.
+    * the store's hive day directory (``_p_date``): a bound on ``time``
+      does not imply one on the directory key, so without this every day
+      directory is listed and footer-read. yyyy-MM-dd compares
+      lexicographically == chronologically, and the filter lands in
+      PartitionFilters."""
+    conds = []
     if from_ms is not None:
-        cond = cond & (F.col("time") >= F.lit(from_ms))
+        conds.append(f"time >= {from_ms}")
     if to_ms is not None:
-        cond = cond & (F.col("time") <= F.lit(to_ms))
-    raw_type = dict(meas.dtypes).get(RAW_TS)
-    if raw_type is not None:
-        # Bounds only for sane wall-clock values: a sentinel like 2**60
-        # would overflow the int64 ns/µs literal — skip the scan-pruning
-        # predicate there (correct, just unpruned; `time` bound still
-        # applies).
-        def _sane(ms: int | None) -> int | None:
-            if ms is None or not (_DAY_STR_MIN <= ms <= _DAY_STR_MAX):
-                return None
-            return ms
+        conds.append(f"time <= {to_ms}")
+    types = dict(meas.dtypes)
+    raw_type = types.get(RAW_TS)
+    lo, hi = _sane_ms(from_ms), _sane_ms(to_ms)
+    if raw_type == "bigint":  # raw int64 ns: time = ts DIV 1e6
+        # the ns literal itself must fit int64: past ~year 2262 Spark
+        # would type it as a decimal and the row-group pushdown would be
+        # lost, and no int64 ts value can lie beyond it anyway
+        if lo is not None and lo * 1_000_000 >= -(2**63):
+            conds.append(f"{RAW_TS} >= {lo * 1_000_000}")
+        if hi is not None and hi * 1_000_000 + 999_999 <= 2**63 - 1:
+            conds.append(f"{RAW_TS} <= {hi * 1_000_000 + 999_999}")
+    elif raw_type is not None:  # timestamp[_ntz] at µs
+        def ts_lit(us: int) -> str:
+            lit = f"timestamp_micros({us})"  # LTZ from epoch-µs
+            # session tz is UTC → NTZ wall clock == UTC instant
+            if raw_type == "timestamp_ntz":
+                return f"CAST({lit} AS TIMESTAMP_NTZ)"
+            return lit
 
-        lo, hi = _sane(from_ms), _sane(to_ms)
-        if raw_type == "bigint":  # raw int64 ns: time = ts DIV 1e6
-            # tighter clamp than _sane: the ns literal itself must fit
-            # int64 (ms past ~year 2262 × 1e6 overflows; Spark would then
-            # emit a decimal literal — comparison still correct via
-            # widening, but the parquet row-group pushdown is silently
-            # lost, and int64 ts values can't exceed this anyway, so
-            # dropping the bound predicate loses nothing)
-            if lo is not None and lo * 1_000_000 >= -(2**63):
-                cond = cond & (F.col(RAW_TS) >= F.lit(lo * 1_000_000))
-            if hi is not None and hi * 1_000_000 + 999_999 <= 2**63 - 1:
-                cond = cond & (F.col(RAW_TS) <= F.lit(hi * 1_000_000 + 999_999))
-        else:  # timestamp[_ntz] at µs: time = floor(µs / 1000)
-            def _ts_lit(us: int) -> Column:
-                lit = F.timestamp_micros(F.lit(us))  # LTZ from epoch-µs
-                if raw_type == "timestamp_ntz":
-                    # session tz is UTC → NTZ wall clock == UTC instant
-                    lit = lit.cast("timestamp_ntz")
-                return lit
-
-            if lo is not None:
-                cond = cond & (F.col(RAW_TS) >= _ts_lit(lo * 1_000))
-            if hi is not None:
-                cond = cond & (F.col(RAW_TS) <= _ts_lit(hi * 1_000 + 999))
-    if RAW_DAY in meas.columns:
-        # hive PARTITION pruning: a bound on `time` does not imply one on
-        # the p_date directory key, so without this every day directory is
-        # listed and footer-read. yyyy-MM-dd compares lexicographically ==
-        # chronologically, and the filter lands in PartitionFilters.
-        lo = _day_str(from_ms) if from_ms is not None else None
-        hi = _day_str(to_ms) if to_ms is not None else None
         if lo is not None:
-            cond = cond & (F.col(RAW_DAY) >= F.lit(lo))
+            conds.append(f"{RAW_TS} >= {ts_lit(lo * 1_000)}")
         if hi is not None:
-            cond = cond & (F.col(RAW_DAY) <= F.lit(hi))
-    return cond
+            conds.append(f"{RAW_TS} <= {ts_lit(hi * 1_000 + 999)}")
+    if RAW_DAY in types:
+        if lo is not None:
+            conds.append(f"{RAW_DAY} >= '{_day_str(lo)}'")
+        if hi is not None:
+            conds.append(f"{RAW_DAY} <= '{_day_str(hi)}'")
+    return F.expr(" AND ".join(conds) if conds else "TRUE")
 
 
 def ids_predicate(ids: list[int] | None) -> Column:
     """QueryInterval.ids filter; empty/None = all series (reference:
-    libdariadb/query_param.h, struct QueryInterval)."""
+    libdariadb/query_param.h, struct QueryInterval). One SQL expression:
+    ``isin`` would make one py4j call per id."""
     if not ids:
         return F.lit(True)
-    return F.col("id").isin(ids)
+    return F.expr(f"id IN ({', '.join(str(int(i)) for i in ids)})")
 
 
 def sort_result(df: DataFrame, ids: list[int] | None, *cols: str) -> DataFrame:

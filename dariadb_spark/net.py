@@ -18,7 +18,7 @@ MeasArray results, never partitions). Interval reads accept a ``limit``
 to bound result transfer. For cluster-grade remote access the platform
 path is Spark Connect / Thrift JDBC (the server jar ships with this
 Spark; the Python client's grpcio dependency is absent in this
-environment — probed rounds 8–9, SCALE.md §6), and this module is the
+environment — SCALE.md §6), and this module is the
 reference-parity façade in front of the same plans.
 
 Every verb here round-trips through the SAME operators the driver
@@ -162,9 +162,20 @@ class _Handler(socketserver.StreamRequestHandler):
         self.wfile.flush()
 
     def _dispatch(self, eng: TsEngine, req: dict) -> dict[str, Any]:
-        op = req.get("op")
-        p = req.get("params") or {}
-        qid = req.get("qid")
+        """Answer one request. Its Spark jobs run under the job group
+        ``dariadb:<op>:<qid>``, cleared when the request ends, so each
+        job is attributed to the request that ran it: maintenance jobs
+        are never counted against the read before them. A caller that
+        sets its own job group inside a verb keeps it for that verb."""
+        op, qid = req.get("op"), req.get("qid")
+        sc = eng.spark.sparkContext
+        sc.setJobGroup(f"dariadb:{op}:{qid}", f"dariadb {op}")
+        try:
+            return self._serve(eng, op, req.get("params") or {}, qid)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    def _serve(self, eng: TsEngine, op, p: dict, qid) -> dict[str, Any]:
         if op == "ping":
             return {"qid": qid, "status": "ok", "pong": True}
         if op in _FRAME_VERBS:
@@ -216,8 +227,8 @@ class _Handler(socketserver.StreamRequestHandler):
         so an OPEN-ENDED push stream cannot be multiplexed with further
         requests: ``available_now=false`` is rejected up front, and on
         drain timeout the streaming query is stopped BEFORE the done
-        marker goes out (round-10 fix — previously a timed-out query
-        kept running and its pushes interleaved into later replies)."""
+        marker goes out, so no push of a timed-out query can interleave
+        into a later reply."""
         if not bool(p.get("available_now", True)):
             raise ValueError(
                 "subscribe over the line protocol requires "
@@ -299,7 +310,7 @@ class TsServer:
 
     # NOTE: "" is deliberately NOT loopback — to Python sockets an empty
     # host means INADDR_ANY (bind every interface), the exact accidental
-    # exposure this guard exists to stop (r10 ADVICE).
+    # exposure this guard exists to stop.
     _LOOPBACK = ("127.0.0.1", "localhost", "::1")
 
     def __init__(

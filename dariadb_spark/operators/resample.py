@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dariadb_spark.model import local_frame
 from dariadb_spark.operators.interval import scan_interval
 
 
@@ -65,9 +66,7 @@ def rate(
 
 def _grid(meas: DataFrame, ids: list[int], from_ms: int, to_ms: int,
           step_ms: int, col: str) -> DataFrame:
-    ids_df = meas.sparkSession.createDataFrame(
-        [(i,) for i in ids], "id bigint"
-    )
+    ids_df = local_frame(meas.sparkSession, "id bigint", {"id": list(ids)})
     return ids_df.select(
         "id",
         F.explode(

@@ -1,22 +1,20 @@
 """Scratch-dir hygiene for the streaming parity queries.
 
 Each parity query materializes a fixture slice into a ``mkdtemp`` dir,
-drives a real streaming query over it, and returns the result — which
-previously kept the scratch parquet (and the memory-sink temp view)
-alive for the life of the process, accumulating disk and driver memory
-across repeated test/benchmark sweeps.
+drives a real streaming query over it, and returns the result.
 
-:func:`localize_and_cleanup` closes that: it collects the (tiny —
-parity outputs are tens-to-hundreds of rows) result into a driver-local
-DataFrame whose lineage no longer references the scratch files, then
-removes the dir and drops the sink view in a ``finally``.
+:func:`localize_and_cleanup` collects that (tiny — parity outputs are
+tens-to-hundreds of rows) result into a driver-local Arrow LocalRelation
+whose lineage no longer references the scratch files, then removes the
+dir and drops the memory-sink view in a ``finally``, so repeated sweeps
+accumulate neither disk nor driver memory.
 
 :func:`parity_stream_partitions` sizes the streaming state layer to the
 parity workload: the harness streams cover ≤15 series, but a stream
 started under the session-wide OLAP default (32 shuffle partitions)
 instantiates 32 state-store partitions — each with its own Python
 worker round-trip, store init and commit — for a 15-group fold.
-Stage-level timing showed ``addBatch`` dropping ~2× (1.3–1.8 s → 0.6–1.1 s warm) when the
+``addBatch`` runs ~2× faster (1.3–1.8 s → 0.6–1.1 s warm) when the
 state partitions match the group cardinality. Production entry points
 (`streaming_anomaly_alerts`, `streaming_rollup`, …) are untouched and
 inherit the session conf — at 100 TB the series set is large and the
@@ -32,10 +30,12 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dariadb_spark.model import local_frame
+
 #: Hard ceiling on rows materialized through the driver by
 #: :func:`localize_and_cleanup`. Parity results are tens-to-hundreds of
-#: rows; anything beyond this is a misuse of the localize path (VERDICT
-#: r6 item 2) and must fail loudly, not OOM the driver.
+#: rows; anything beyond this is a misuse of the localize path and must
+#: fail loudly, not OOM the driver.
 MAX_LOCALIZED_ROWS = 100_000
 
 
@@ -46,9 +46,12 @@ def localize_and_cleanup(
     view_name: str | None = None,
     max_rows: int = MAX_LOCALIZED_ROWS,
 ) -> DataFrame:
-    """Return a local-relation copy of ``df`` (row order preserved),
-    deleting ``scratch_dir`` and dropping ``view_name`` afterwards even
-    if the collect fails.
+    """Return an Arrow LocalRelation copy of ``df`` (row order, schema
+    and nulls preserved), deleting ``scratch_dir`` and dropping
+    ``view_name`` afterwards even if the collect fails. The copy is a
+    :func:`~dariadb_spark.model.local_frame`: its ``collect`` runs no
+    Spark job and its ``toPandas`` one JVM-only job, where a frame built
+    from Python rows would start Python workers for every action.
 
     Driver-materialization guard: at most ``max_rows`` rows are ever
     collected (the fetch is ``limit(max_rows + 1)``, so driver memory
@@ -57,14 +60,14 @@ def localize_and_cleanup(
     are small by construction; a production query returns its (lazy)
     DataFrame directly and never localizes."""
     try:
-        rows = df.limit(max_rows + 1).collect()
-        if len(rows) > max_rows:
+        table = df.limit(max_rows + 1).toArrow()
+        if table.num_rows > max_rows:
             raise ValueError(
                 f"localize_and_cleanup: result exceeds {max_rows} rows; "
                 "this driver-materialization path is for small parity "
                 "results — return the lazy DataFrame instead"
             )
-        return spark.createDataFrame(rows, df.schema)
+        return local_frame(spark, df.schema, table)
     finally:
         if view_name is not None:
             try:
@@ -81,7 +84,7 @@ def await_parity_termination(q, timeout_s: int = 600) -> None:
     timeout WITHOUT stopping the query — a caller that ignores the
     boolean goes on to read a partially filled memory sink and hands an
     incomplete table to the oracle compare as if it were the parity
-    result (r10 ADVICE, mirroring net.py's subscribe-timeout handling).
+    result (net.py's subscribe-timeout handling does the same).
     On timeout the query is stopped first (releasing the scratch dir
     for cleanup), then ``TimeoutError`` is raised."""
     if not q.awaitTermination(timeout_s):
@@ -106,10 +109,8 @@ def persisted_slice(df: DataFrame) -> Iterator[DataFrame]:
     only applies within one action). Slices are parity-sized by
     construction (the same smallness contract ``localize_and_cleanup``
     enforces on results), so MEMORY_AND_DISK holds them trivially.
-    Measured at sf0.1 (r19 optimization round, best-of-3): the ltv
-    landing drops ~0.5 s and markov ~0.4 s — one base-table scan
-    instead of four (guide §1.2 step 1: don't recompute what you
-    already have)."""
+    At sf0.1 (best-of-3) this saves ~0.5 s of the ltv landing and
+    ~0.4 s of markov's: one base-table scan instead of four."""
     df = df.persist()
     try:
         yield df
@@ -126,16 +127,13 @@ def land_sorted(
     content identical to the previous ``orderBy(...).coalesce(1)``
     recipe (a total order inside a single partition) while skipping the
     range-partitioner sampling job a global sort submits per write —
-    one Spark job instead of two for every landed drop (guide §2.4:
-    remove shuffles/jobs outright). Measured at sf0.1 (r19 optimization
-    round): ~0.15 s saved per two-drop landing, identical streamed
-    bytes.
+    one Spark job instead of two for every landed drop (~0.15 s per
+    two-drop landing at sf0.1, identical streamed bytes).
 
-    ``mode``: pass ``"error"`` for the FIRST drop of a landing (ADVICE
-    r19 — a stale or double-landed data_dir would otherwise silently
-    double the streamed input; error-if-exists restores the original
-    recipes' first-write guard) and leave the default ``"append"`` for
-    subsequent drops."""
+    ``mode``: pass ``"error"`` for the FIRST drop of a landing (a stale
+    or double-landed data_dir would otherwise silently double the
+    streamed input) and leave the default ``"append"`` for subsequent
+    drops."""
     (
         df.repartition(1)
         .sortWithinPartitions(*sort_cols)
@@ -157,9 +155,9 @@ def land_time_split(
     precedes drop k+1 in the batch total order). One slice scan total:
     the slice is persisted across the quantile pass and every write
     (:func:`persisted_slice`), and each drop lands via
-    :func:`land_sorted` — the r19 landing-phase recipe."""
-    # the exact literals the modules previously inlined (0.33/0.66 for
-    # terciles, NOT 1/3, 2/3 — the landed split stays byte-identical)
+    :func:`land_sorted`."""
+    # the tercile literals are 0.33/0.66, NOT 1/3, 2/3: the landed split
+    # is byte-identical to the parity modules' original cuts
     if n_drops not in (2, 3):
         raise ValueError(f"land_time_split: n_drops must be 2 or 3, got {n_drops}")
     arr = "0.5" if n_drops == 2 else "0.33, 0.66"
@@ -178,7 +176,7 @@ def land_time_split(
             if hi is not None:
                 d = d.where(F.col("time") <= hi)
             # first drop error-if-exists: a stale/double-landed dir
-            # fails loudly instead of doubling the stream (ADVICE r19)
+            # fails loudly instead of doubling the stream
             land_sorted(d, data_dir, sort_cols, mode="append" if i else "error")
 
 
@@ -193,9 +191,9 @@ def parity_stream_partitions(
     ``n=None`` is a no-op: the stream keeps the session conf — for
     parity folds whose group cardinality is NOT parity-small (markov's
     ~1.5k users, ltv's ~750 customers at sf0.1), where shrinking the
-    state layer serializes the per-group python folds (the r12 stress
-    lesson: size state partitions to group cardinality; r19 A/B at
-    sf0.1 best-of-3: ltv 5.94 s at n=4 vs 5.40 s at the session's 32).
+    state layer serializes the per-group python folds: state partitions
+    are sized to group cardinality (at sf0.1, best-of-3, ltv takes
+    5.94 s at n=4 vs 5.40 s at the session's 32).
 
     Harness-only: the bench/test sweeps run queries sequentially on one
     session, so the temporary session-conf mutation cannot leak into a

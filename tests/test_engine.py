@@ -354,6 +354,8 @@ def _spark_jobs(spark, action) -> int:
         action()
     finally:
         sc._jsc.clearJobGroup()
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 

@@ -229,3 +229,32 @@ def test_non_loopback_bind_refused(served):
     # (round-11 ADVICE fix: it must hit the same guard, not slip past it)
     with pytest.raises(ValueError, match="allow_remote"):
         TsServer(eng, host="")
+
+
+def test_request_jobs_attributed_to_their_own_request(served, monkeypatch):
+    """Each request runs under its own job group, cleared when it ends.
+    A caller that tags a verb with a group of its own and never clears
+    it (as a tracer does) must not see the next request's jobs: a
+    ``compact`` after a read adds no job to the read's group."""
+    eng, srv = served
+    sc = eng.spark.sparkContext
+    st = sc.statusTracker()
+    read = eng.read_interval
+
+    def tagged_read(*args, **kwargs):
+        sc.setJobGroup("test-net-traced-read", "traced read")
+        return read(*args, **kwargs)
+
+    monkeypatch.setattr(eng, "read_interval", tagged_read)
+    with _cli(srv) as cli:
+        cli.ping()  # qid 1
+        _, rows = cli.read_interval([0, 1], T0, T0 + 5 * HOUR)  # qid 2
+        assert rows
+        read_jobs = set(st.getJobIdsForGroup("test-net-traced-read"))
+        assert read_jobs  # the read's collect ran under the caller's group
+        compact_before = set(st.getJobIdsForGroup("dariadb:compact:3"))
+        cli.compact()  # qid 3
+    assert set(st.getJobIdsForGroup("test-net-traced-read")) == read_jobs
+    compact_jobs = set(st.getJobIdsForGroup("dariadb:compact:3")) - compact_before
+    assert compact_jobs
+    assert not compact_jobs & read_jobs

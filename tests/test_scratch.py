@@ -1,4 +1,4 @@
-"""Scratch/localize hygiene guards (VERDICT r6 items 1-2)."""
+"""Scratch/localize hygiene guards for the streaming parity queries."""
 
 import os
 
@@ -9,6 +9,7 @@ from dariadb_spark.streaming.scratch import (
     localize_and_cleanup,
     parity_stream_partitions,
 )
+from tests.test_engine import _spark_jobs
 
 
 def test_localize_returns_rows_and_removes_scratch(spark, tmp_path):
@@ -18,6 +19,30 @@ def test_localize_returns_rows_and_removes_scratch(spark, tmp_path):
     df = spark.range(5).selectExpr("id", "id * 2 AS v")
     out = localize_and_cleanup(spark, df.orderBy("id"), str(scratch))
     assert [r.v for r in out.collect()] == [0, 2, 4, 6, 8]
+    assert not scratch.exists()
+
+
+def test_localize_keeps_order_schema_and_nulls_without_a_job(spark, tmp_path):
+    """The localized copy is an Arrow LocalRelation: same rows in the same
+    order, same schema (nullability included), nulls intact, and a
+    ``collect`` that runs no Spark job."""
+    scratch = tmp_path / "scratch_arrow"
+    scratch.mkdir()
+    df = spark.sql(
+        "SELECT id, IF(id % 3 = 0, NULL, id * 1.5) AS v, "
+        "IF(id % 2 = 0, NULL, concat('s', id)) AS s, "
+        "CAST(timestamp_micros(id * 1000000) AS TIMESTAMP_NTZ) AS ts, "
+        "array(id, NULL) AS arr FROM range(12) ORDER BY id DESC"
+    )
+    want = df.collect()
+    out = localize_and_cleanup(spark, df, str(scratch))
+    assert out.schema == df.schema
+    assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    got = []
+    assert _spark_jobs(spark, lambda: got.extend(out.collect())) == 0
+    assert got == want
+    assert [r.id for r in got] == list(range(11, -1, -1))
+    assert got[2].v is None and got[1].s is None and got[0].arr == [11, None]
     assert not scratch.exists()
 
 
