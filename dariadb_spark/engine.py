@@ -23,11 +23,12 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.functions.statistics import apply_functions
-from dariadb_spark.model import MEAS_FIELDS, meas_frame, measurements
+from dariadb_spark.model import MEAS_FIELDS, meas_table, measurements
 from dariadb_spark.operators.asof import current_value as _current_value
 from dariadb_spark.operators.asof import read_time_point as _read_time_point
 from dariadb_spark.operators.downsample import downsample as _downsample
@@ -121,23 +122,37 @@ class TsEngine:
 
     # -- write path ------------------------------------------------------
     def append(
-        self, rows: DataFrame | Iterable[tuple], isolated: bool = False
+        self,
+        rows: DataFrame | pa.Table | Iterable[tuple],
+        isolated: bool = False,
     ) -> int:
-        """Engine::append — ingest a DataFrame or iterable of
-        (id, time_ms, value, flag) tuples; returns rows written. Tuples
-        become one partition (:func:`~dariadb_spark.model.meas_frame`),
-        so a request-sized append writes one file per day.
-        ``isolated=True`` selects the multi-ingest-safe write path (see
-        ``ParquetTsStore.append`` for the contract and its trade)."""
+        """Engine::append — ingest a DataFrame, a ``pyarrow.Table``
+        (:func:`~dariadb_spark.model.meas_table`) or an iterable of
+        (id, time_ms, value, flag) tuples; returns rows written. Rows
+        already on the driver (tuples, a table) are written by the store
+        as one parquet segment per day and run no Spark job
+        (:func:`~dariadb_spark.sources.store_protocol.write_segments`);
+        a DataFrame is written by a Spark job. ``isolated=True`` selects
+        the multi-ingest-safe Spark write of a DataFrame (see
+        ``ParquetTsStore.append`` for the contract and its trade); with
+        driver rows it raises, since segment appends never share
+        staging."""
         if self.store is None:
             raise ValueError("append requires a writable store (TsEngine.open)")
-        if not isinstance(rows, DataFrame):
+        if isinstance(rows, DataFrame):
+            rows = rows.select(*MEAS_FIELDS)
+        elif isolated:
+            raise ValueError(
+                "isolated=True applies to DataFrame appends only: rows on "
+                "the driver are always written as uniquely named segments"
+            )
+        elif not isinstance(rows, pa.Table):
             tuples = [
                 (int(i), int(t), float(v), int(fl)) for (i, t, v, fl) in rows
             ]
             cols = [list(c) for c in zip(*tuples)] or [[]] * 4
-            rows = meas_frame(self.spark, *cols)
-        return self.store.append(rows.select(*MEAS_FIELDS), isolated=isolated)
+            rows = meas_table(*cols)
+        return self.store.append(rows, isolated=isolated)
 
     # -- read path -------------------------------------------------------
     def read_interval(

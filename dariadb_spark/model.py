@@ -24,6 +24,8 @@ import os
 import stat
 import threading
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -35,6 +37,17 @@ from dariadb_spark.session import ensure_runtime_confs
 FLAGS_NO_DATA: int = 0xFFFFFFFF  # 4294967295
 
 MEAS_FIELDS = ("id", "time", "value", "flag")
+
+#: the measurement schema as Arrow, for rows held on the driver
+#: (:func:`meas_table`) and the parquet segments written from them
+MEAS_ARROW_SCHEMA = pa.schema(
+    [
+        ("id", pa.int64()),
+        ("time", pa.int64()),
+        ("value", pa.float64()),
+        ("flag", pa.int64()),
+    ]
+)
 
 #: the measurement schema as DDL, for every explicit-schema read and
 #: every frame built from driver-side rows
@@ -92,21 +105,25 @@ def local_frame(spark: SparkSession, schema, columns) -> DataFrame:
     ``createDataFrame`` over Python rows would build a Python RDD instead,
     and every action on it would start Python workers. This is the one
     place in the package that turns driver-side rows into a frame."""
-    import pyarrow as pa
-
     if not isinstance(columns, pa.Table):
         columns = pa.table(columns)
     return spark.createDataFrame(columns, schema)
 
 
-def meas_frame(spark: SparkSession, ids, times, values, flags) -> DataFrame:
-    """Request-sized measurement rows as a one-partition frame, so that
-    appending them writes one file per day."""
-    return local_frame(
-        spark,
-        MEAS_DDL,
-        {"id": ids, "time": times, "value": values, "flag": flags},
-    ).coalesce(1)
+def meas_table(ids, times, values, flags) -> pa.Table:
+    """Measurement rows held on the driver as a ``pyarrow.Table`` of
+    :data:`MEAS_ARROW_SCHEMA`, which a store appends as one parquet
+    segment per day without a Spark job. Columns that are already numpy
+    arrays of the schema's dtypes (what the wire decoder returns) are
+    wrapped without a copy."""
+    cols = (ids, times, values, flags)
+    return pa.table(
+        [
+            pa.array(np.asarray(col, dtype=field.type.to_pandas_dtype()))
+            for col, field in zip(cols, MEAS_ARROW_SCHEMA)
+        ],
+        schema=MEAS_ARROW_SCHEMA,
+    )
 
 
 #: session confs that change the schema Spark infers from a parquet footer
@@ -292,7 +309,16 @@ def ids_predicate(ids: list[int] | None) -> Column:
     ``isin`` would make one py4j call per id."""
     if not ids:
         return F.lit(True)
-    return F.expr(f"id IN ({', '.join(str(int(i)) for i in ids)})")
+    return F.expr(ids_in_sql(ids))
+
+
+def ids_in_sql(ids: list[int]) -> str:
+    """``id IN (...)`` as SQL text, matching exactly ``ids``: an empty
+    list matches no row (unlike :func:`ids_predicate`, where it means
+    every series)."""
+    if not ids:
+        return "FALSE"
+    return f"id IN ({', '.join(str(int(i)) for i in ids)})"
 
 
 def sort_result(df: DataFrame, ids: list[int] | None, *cols: str) -> DataFrame:

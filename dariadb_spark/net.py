@@ -31,9 +31,10 @@ shipped PACKED Meas arrays, not text — measurement-shaped results
 (columns exactly ``id,time,value,flag``) and appends can opt into
 base64-wrapped column-major int64/float64 buffers inside the same JSON
 envelope. It removes the JSON row tax from the wire path while keeping
-one framing for every verb. Appends of either encoding enter Spark as a
-one-partition Arrow LocalRelation (``model.meas_frame``), so each
-writes one file per day.
+one framing for every verb. Appends of either encoding run no Spark job:
+the store writes the rows as one parquet segment per day, and a binary
+append's decoded buffers become that segment's columns without a copy
+(``model.meas_table``).
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ import threading
 from typing import Any
 
 from dariadb_spark.engine import TsEngine
-from dariadb_spark.model import meas_frame
+from dariadb_spark.model import meas_table
 
 _MEAS_COLS = ["id", "time", "value", "flag"]
 
@@ -185,12 +186,10 @@ class _Handler(socketserver.StreamRequestHandler):
             return {"qid": qid, "status": "ok", **payload}
         if op == "append":
             if "rows_bin" in p:
-                rows = meas_frame(
-                    eng.spark, *_unpack_meas(p["rows_bin"], int(p["n"]))
-                )
+                rows = meas_table(*_unpack_meas(p["rows_bin"], int(p["n"])))
             else:
                 rows = [tuple(r) for r in p["rows"]]
-            n = eng.append(rows, isolated=bool(p.get("isolated", False)))
+            n = eng.append(rows)
             return {"qid": qid, "status": "ok", "appended": n}
         if op == "scheme_add_param":
             # Scheme::addParam over the wire — the reference protocol's
@@ -382,7 +381,7 @@ class TsClient:
     def ping(self) -> bool:
         return bool(self._call("ping").get("pong"))
 
-    def append(self, rows, isolated: bool = False, binary: bool = False) -> int:
+    def append(self, rows, binary: bool = False) -> int:
         if binary:
             rows = list(rows)
             return self._call(
@@ -394,11 +393,8 @@ class TsClient:
                     [r[3] for r in rows],
                 ),
                 n=len(rows),
-                isolated=isolated,
             )["appended"]
-        return self._call(
-            "append", rows=[list(r) for r in rows], isolated=isolated
-        )["appended"]
+        return self._call("append", rows=[list(r) for r in rows])["appended"]
 
     def _frame(self, op: str, **params):
         resp = self._call(op, **params)

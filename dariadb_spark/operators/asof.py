@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from dariadb_spark.model import (
     FLAGS_NO_DATA,
     flag_predicate,
+    ids_in_sql,
     ids_predicate,
     local_frame,
     pushdown_time_bounds,
@@ -61,7 +62,7 @@ def read_time_point(
     """One row per requested id: latest point at/before ``time_point_ms``,
     or a ``_NO_DATA`` filler row (value=0, time=tp)."""
     hits = meas.where(
-        F.col("id").isin(ids)
+        F.expr(ids_in_sql(ids))
         & pushdown_time_bounds(meas, None, time_point_ms)
         & flag_predicate(flag)
     ).select(

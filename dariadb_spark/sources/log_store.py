@@ -6,8 +6,11 @@ tests/test_delta_seam.py proved the INTERFACE with a mock; this module is
 the backend a deployment without Delta/Iceberg jars can actually run: the
 same commit protocol a real transaction log uses (atomic O_EXCL version
 files, snapshot by log replay, logical deletes, optimistic-concurrency
-retry with conflict validation), with every data write executed BY SPARK —
-nothing funnels through the driver.
+retry with conflict validation). DataFrame writes (bulk loads, compaction,
+the retention rewrite) run as Spark jobs; rows already on the driver (a
+request-sized append) are written as one parquet segment per day by
+:func:`~dariadb_spark.sources.store_protocol.write_segments`, with no
+Spark job. Either way the files stay invisible until the log commit.
 
 Reference storage roles (libdariadb/storage/) under this backend:
   * WAL + Manifest  → the ``_log/`` versioned commits (one JSON per
@@ -66,11 +69,17 @@ import shutil
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import MEAS_FIELDS
-from dariadb_spark.sources.store_protocol import live_rows, read_days
+from dariadb_spark.sources.store_protocol import (
+    SEGMENT_TMP_GLOB,
+    live_rows,
+    read_days,
+    write_segments,
+)
 
 _DAY_MS = 86_400_000
 
@@ -94,7 +103,8 @@ class LogTsStore:
 
     Layout::
 
-        <root>/files/p_date=YYYY-MM-DD/<token>-part-*.parquet
+        <root>/files/p_date=YYYY-MM-DD/<token>-part-*.parquet  # Spark
+        <root>/files/p_date=YYYY-MM-DD/part-<token>.parquet    # segment
         <root>/_log/<version 020d>.json   # {"add": [{"path","p_date"}],
                                           #  "remove": ["path", ...]}
         <root>/stage-<token>/             # transient Spark write staging
@@ -282,7 +292,7 @@ class LogTsStore:
             f"lost {self.MAX_COMMIT_RETRIES} straight version races"
         )
 
-    # -- data-file writing (always by Spark) ------------------------------
+    # -- data-file writing ------------------------------------------------
     def _write_files(self, df: DataFrame) -> list[dict]:
         """Spark-write ``df`` hive-partitioned by day into a unique
         staging dir, then rename the part files into ``files/`` under
@@ -318,21 +328,31 @@ class LogTsStore:
         return adds
 
     # -- TsStore surface ---------------------------------------------------
-    def append(self, meas: DataFrame, isolated: bool = False) -> int:
-        """Ingest measurements; returns the appended row count (observed
-        during the write — no second pipeline run). Atomic and
-        multi-writer-safe by the log protocol itself: the whole append
-        becomes visible at its commit or not at all, so ``isolated`` is
+    def append(self, meas: DataFrame | pa.Table, isolated: bool = False) -> int:
+        """Ingest measurements; returns the appended row count. A
+        ``pyarrow.Table`` (rows already on the driver) is written as one
+        segment per day under ``files/p_date=D/`` without a Spark job; a
+        DataFrame is written by Spark, its count observed during the
+        write (no second pipeline run). All files of one append are added
+        in ONE log commit, so the whole append becomes visible at that
+        commit or not at all: it is acknowledged once committed, and a
+        segment that was never committed is invisible to every read.
+        Multi-writer-safe by the log protocol itself, so ``isolated`` is
         accepted for interface parity and ignored."""
-        from pyspark.sql import Observation
+        if isinstance(meas, pa.Table):
+            segments = write_segments(self.files_dir, meas)
+            adds = [{"path": str(p), "p_date": day} for day, p in segments]
+            n = meas.num_rows
+        else:
+            from pyspark.sql import Observation
 
-        obs = Observation()
-        adds = self._write_files(
-            meas.select(*MEAS_FIELDS).observe(
-                obs, F.count(F.lit(1)).alias("n")
+            obs = Observation()
+            adds = self._write_files(
+                meas.select(*MEAS_FIELDS).observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                )
             )
-        )
-        n = obs.get["n"]
+            n = obs.get["n"]
         if adds:
             self._commit(adds, [])
         return n
@@ -435,7 +455,10 @@ class LogTsStore:
         keeps working after GC; ``retain_last=0`` keeps only the current
         snapshot (the aggressive default). Safe because commits only ever
         add new unique names — a file absent from every retained live set
-        can never become live again.
+        can never become live again — provided no append is in flight: an
+        append's files are on disk before its commit names them, so run
+        vacuum in a maintenance window. Hidden temp segments an
+        interrupted append left behind are deleted too.
 
         The union of live sets over [horizon, latest] is computed as
         live(horizon) ∪ {files added after the horizon}: any file live at
@@ -454,6 +477,8 @@ class LogTsStore:
             if str(f) not in live:
                 f.unlink()
                 dropped += 1
+        for f in self.files_dir.glob(f"p_date=*/{SEGMENT_TMP_GLOB}"):
+            f.unlink()
         # prune now-empty day dirs so directory listings stay honest
         for d in sorted(self.files_dir.glob("p_date=*")):
             if not any(d.iterdir()):

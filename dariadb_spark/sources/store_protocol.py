@@ -8,10 +8,14 @@ them, so a transaction-log backend slots in without touching the engine.
 The contract each verb must keep, backend-agnostic:
 
 * ``append(meas, isolated=False) -> int`` — ingest (id, time, value,
-  flag) rows, return the count written. ``isolated=True`` must make
-  concurrent appends from separate writers safe (a log backend gets
-  this for free — commits are the log's job; the parquet backend
-  stages + renames).
+  flag) rows, return the count written. ``meas`` is a DataFrame (bulk
+  loads, derived series: a Spark write) or a ``pyarrow.Table`` of rows
+  already on the driver (a request-sized append: one parquet segment
+  per day, written by :func:`write_segments` without a Spark job).
+  ``isolated=True`` must make concurrent DataFrame appends from
+  separate writers safe (a log backend gets this for free — commits
+  are the log's job; the parquet backend stages + renames). It applies
+  to DataFrames only: segment appends are always concurrent-safe.
 * ``read() -> DataFrame`` — the LIVE rows: exactly the union of data
   files the backend currently considers committed. A log backend must
   resolve its snapshot here (adds minus removes), NOT list directories
@@ -46,13 +50,30 @@ parametrized lifecycle matrix in tests/test_engine.py.
 
 from __future__ import annotations
 
+import os
+import uuid
 from pathlib import Path
 from typing import Protocol, runtime_checkable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_FIELDS, RAW_DAY, STORE_DDL, local_frame
+from dariadb_spark.model import (
+    _DAY_MS,
+    MEAS_ARROW_SCHEMA,
+    MEAS_FIELDS,
+    RAW_DAY,
+    STORE_DDL,
+    _day_str,
+    local_frame,
+)
+
+#: name pattern of a segment not yet renamed into place: ``.``-prefixed
+#: and not ``*.parquet``, so no read or file-stream source lists it
+SEGMENT_TMP_GLOB = ".part-*.tmp"
 
 
 @runtime_checkable
@@ -66,7 +87,7 @@ class TsStore(Protocol):
     log on Delta/Iceberg — SURVEY.md §1.3 table).
     """
 
-    def append(self, meas: DataFrame, isolated: bool = False) -> int:
+    def append(self, meas: DataFrame | pa.Table, isolated: bool = False) -> int:
         ...
 
     def read(self) -> DataFrame:
@@ -107,3 +128,54 @@ def live_rows(days: DataFrame) -> DataFrame:
     a partition filter (a bound on ``time`` alone prunes row groups but
     not day directories). Operators project it away."""
     return days.select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))
+
+
+def write_segments(base_dir: Path, table: pa.Table) -> list[tuple[str, Path]]:
+    """Write driver-side measurement rows under ``<base_dir>/p_date=D/``
+    as one parquet segment per UTC day, without Spark; return
+    ``(day, path)`` per segment written.
+
+    Rows are split by ``time // 86_400_000`` and each day is named by
+    :func:`~dariadb_spark.model._day_str`, the function the ``_p_date``
+    pruning bound uses, so a row is always in the directory a read of
+    its time looks at. Each segment is written to a hidden temp name in
+    its day directory (``.``-prefixed, not ``*.parquet``: Spark's file
+    listing and the file-stream source skip it) and then renamed to a
+    unique ``part-<token>.parquet``, so a reader never sees half a file.
+
+    The contract: a row is acknowledged once its segment is renamed, and
+    that survives a crash of this process. Nothing is fsynced (Spark's
+    committer does not fsync either), so a machine crash may lose it.
+    Every day's temp file is written before the first rename, and an
+    append that raises (a full disk, a pyarrow error) deletes its temp
+    files and any segment it already renamed, so it publishes nothing
+    and a retry cannot duplicate rows. A crash before the renames leaves
+    only hidden temp files, which no read sees and maintenance deletes;
+    only a crash during the renames (one per day, in a tight loop) can
+    leave the earlier days of a multi-day append visible."""
+    table = table.select(list(MEAS_FIELDS)).cast(MEAS_ARROW_SCHEMA)
+    if table.num_rows == 0:
+        return []
+    days = np.floor_divide(table.column("time").to_numpy(), _DAY_MS)
+    token = uuid.uuid4().hex
+    uniq = np.unique(days)
+    staged: list[tuple[str, Path]] = []
+    out: list[tuple[str, Path]] = []
+    try:
+        for d in uniq:
+            rows = table if len(uniq) == 1 else table.filter(pa.array(days == d))
+            day = _day_str(int(d) * _DAY_MS)
+            day_dir = base_dir / f"p_date={day}"
+            day_dir.mkdir(parents=True, exist_ok=True)
+            tmp = day_dir / SEGMENT_TMP_GLOB.replace("*", token)
+            staged.append((day, tmp))
+            pq.write_table(rows, tmp)
+        for day, tmp in staged:
+            dest = tmp.with_name(f"part-{token}.parquet")
+            os.rename(tmp, dest)
+            out.append((day, dest))
+    except BaseException:
+        for _, path in staged + out:
+            path.unlink(missing_ok=True)
+        raise
+    return out

@@ -24,6 +24,7 @@ import json
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,7 +89,10 @@ class _LogTsStore:
         """Write one parquet file per day present in df; return add
         actions. (One file per day keeps the mock simple — a real
         client writes many per commit.)"""
-        pdf = df.select(*MEAS_FIELDS).toPandas()
+        if isinstance(df, pa.Table):  # rows already on the driver
+            pdf = df.select(list(MEAS_FIELDS)).to_pandas()
+        else:
+            pdf = df.select(*MEAS_FIELDS).toPandas()
         adds = []
         if not len(pdf):
             return adds
@@ -102,8 +106,10 @@ class _LogTsStore:
         return adds
 
     # -- TsStore surface ---------------------------------------------------
-    def append(self, meas: DataFrame, isolated: bool = False) -> int:
-        pdf_count_before = meas.count()
+    def append(self, meas: DataFrame | pa.Table, isolated: bool = False) -> int:
+        pdf_count_before = (
+            meas.num_rows if isinstance(meas, pa.Table) else meas.count()
+        )
         adds = self._write_files(meas)
         self._commit(adds, [])
         return pdf_count_before

@@ -104,6 +104,12 @@ def test_read_time_point_boundary_and_before_first(engine):
     assert rows[2].flag == FLAGS_NO_DATA
 
 
+def test_read_time_point_empty_ids_answers_no_rows(engine):
+    # no requested id, no row: an empty id list must not widen to "all
+    # series" the way ids_predicate([]) does for the other verbs
+    assert engine.read_time_point([], T0 + 5 * STEP).collect() == []
+
+
 def test_current_value_and_min_max(engine):
     cur = {r.id: r for r in engine.current_value().collect()}
     assert len(cur) == N_IDS
@@ -414,6 +420,356 @@ def test_id_bounded_read_interval_keeps_a_parallel_scan(engine):
     # the plan prints top-down: sort, then the exchange, then the scan
     sort, exchange = first("Sort ["), first("Exchange SinglePartition")
     assert sort < exchange < first("Scan parquet"), plan
+
+
+# -- request-sized appends: driver-written parquet segments ----------------
+
+DAY = 86_400_000
+
+
+def _files_by_day(store) -> dict[str, set[str]]:
+    """Every ``*.parquet`` file on disk under the store's day
+    directories, by day (the log store's committed files included)."""
+    out: dict[str, set[str]] = {}
+    for f in store.data_dir.glob("p_date=*/*.parquet"):
+        out.setdefault(f.parent.name.split("=", 1)[1], set()).add(str(f))
+    return out
+
+
+def _new_files_per_day(before, after) -> dict[str, int]:
+    return {
+        day: len(files - before.get(day, set()))
+        for day, files in after.items()
+        if files - before.get(day, set())
+    }
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_tuple_append_runs_no_job_and_writes_one_file_per_day(
+    spark, tmp_path, backend
+):
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    grid = _grid()  # 5 UTC days
+    for part in (grid[:30], grid[30:]):
+        before = _files_by_day(eng.store)
+        n = []
+        assert _spark_jobs(spark, lambda: n.append(eng.append(part))) == 0
+        assert n == [len(part)]
+        days = {datetime.datetime.fromtimestamp(t / 1000, datetime.UTC)
+                .strftime("%Y-%m-%d") for _i, t, _v, _f in part}
+        assert _new_files_per_day(before, _files_by_day(eng.store)) == {
+            d: 1 for d in days
+        }
+    got = eng.read_interval(None, 0, 2**60).collect()
+    assert [tuple(r) for r in got] == sorted(grid)
+
+
+def test_isolated_append_of_driver_rows_is_rejected(spark, tmp_path):
+    """``isolated=True`` selects a DataFrame write path; with rows on the
+    driver (tuples or a table) it raises instead of being ignored, and
+    writes nothing."""
+    from dariadb_spark.model import meas_table
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"))
+    rows = [(1, T0, 1.0, 1)]
+    for given in (rows, meas_table(*zip(*rows))):
+        with pytest.raises(ValueError, match="isolated"):
+            eng.append(given, isolated=True)
+    assert _files_by_day(eng.store) == {}
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_segment_day_matches_spark_day_and_pruning_bound(
+    spark, tmp_path, backend
+):
+    """A segment lands in the day directory Spark's ``_with_day`` and
+    the pruning bound's ``_day_str`` give its time: before 1970, at
+    midnight - 1 ms, at midnight, and for one append spanning two days
+    (one file in each)."""
+    from dariadb_spark.model import _day_str, local_frame
+    from dariadb_spark.sources.parquet_store import _with_day
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    appends = [
+        [(1, -DAY - 5, 1.0, 1)],  # 1969-12-30 23:59:59.995
+        [(2, -1, 2.0, 1)],  # 1969-12-31 23:59:59.999
+        [(3, T0 - 1, 3.0, 1)],  # midnight - 1 ms
+        [(4, T0, 4.0, 1)],  # midnight
+        [(5, T0 + DAY - 1, 5.0, 1), (5, T0 + DAY, 6.0, 1)],  # two days
+    ]
+    for rows in appends:
+        before = _files_by_day(eng.store)
+        eng.append(rows)
+        added = _new_files_per_day(before, _files_by_day(eng.store))
+        assert added == {_day_str(t): 1 for _i, t, _v, _f in rows}
+    landed = {
+        r.time: str(r._p_date)
+        for r in eng.store.read().select("time", "_p_date").collect()
+    }
+    times = sorted(landed)
+    spark_day = {
+        r.time: r.p_date
+        for r in _with_day(
+            local_frame(spark, "time bigint", {"time": times})
+        ).collect()
+    }
+    assert landed == spark_day == {t: _day_str(t) for t in times}
+    assert landed[-1] == "1969-12-31" and landed[T0] == "2024-01-01"
+    assert landed[T0 - 1] == "2023-12-31"
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_tuple_and_dataframe_appends_answer_identically(
+    spark, tmp_path, backend
+):
+    from dariadb_spark.model import MEAS_DDL, local_frame
+
+    grid = _grid()
+    by_tuples = TsEngine.open(spark, str(tmp_path / "t"), backend=backend)
+    by_frame = TsEngine.open(spark, str(tmp_path / "f"), backend=backend)
+    by_tuples.append(grid)
+    cols = {c: list(v) for c, v in zip(("id", "time", "value", "flag"),
+                                       zip(*grid))}
+    by_frame.append(local_frame(spark, MEAS_DDL, cols))
+    end = T0 + N_STEPS * STEP
+    for ask in (
+        lambda e: e.read_interval(None, T0, end),
+        lambda e: e.read_interval([1, 3], T0 + STEP, end - STEP, 4),
+        lambda e: e.current_value(None),
+        lambda e: e.current_value([0, 2], 2),
+        lambda e: e.stat(None, T0, end),
+        lambda e: e.stat([1, 4], T0 + 3 * STEP, end),
+    ):
+        assert ask(by_tuples).collect() == ask(by_frame).collect()
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_concurrent_tuple_appends_land_every_row_once(
+    spark, tmp_path, backend
+):
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    writers, per = 8, 500
+
+    def one(i: int) -> int:
+        # each writer spans two new days, so they race to create the
+        # day directories and then share them
+        return eng.append(
+            [(i, T0 - DAY // 2 + k * 300_000, float(k), 1)
+             for k in range(per)]
+        )
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=writers) as ex:
+            counts = list(ex.map(one, range(writers), timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+    assert counts == [per] * writers
+    got = eng.store.read().groupBy("id").count().collect()
+    assert {r.id: r["count"] for r in got} == {
+        i: per for i in range(writers)
+    }
+    tot = eng.store.read().groupBy().sum("value").collect()[0][0]
+    assert tot == writers * (per - 1) * per / 2
+    if backend == "log":
+        assert len(eng.store._version_files()) == writers
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_leftover_temp_segment_is_invisible_and_cleaned(
+    spark, tmp_path, backend
+):
+    """A crash between writing a segment and renaming it leaves a hidden
+    temp file: no read or subscription sees it, and maintenance
+    deletes it (compact on the parquet store, vacuum on the log store).
+    On the log store a segment renamed but never committed is invisible
+    too."""
+    import shutil
+
+    from dariadb_spark.model import meas_table
+    from dariadb_spark.sources.store_protocol import (
+        SEGMENT_TMP_GLOB,
+        write_segments,
+    )
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    grid = _grid()
+    eng.append(grid)
+    # a whole, readable parquet file under the temp name: were it listed,
+    # its rows would show up twice
+    seg = next(iter(eng.store.data_dir.glob("p_date=2024-01-01/*.parquet")))
+    leftover = seg.parent / SEGMENT_TMP_GLOB.replace("*", "interrupted")
+    shutil.copyfile(seg, leftover)
+    assert eng.store.read().count() == len(grid)
+    got: list[tuple] = []
+    q = eng.subscribe(
+        None,
+        0,
+        lambda df, _bid: got.extend(tuple(r) for r in df.collect()),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert sorted(got) == sorted(grid)
+    if backend == "log":
+        write_segments(
+            eng.store.data_dir, meas_table([9], [T0 + 60_000], [9.0], [1])
+        )
+        assert eng.store.read().count() == len(grid)
+    if backend == "parquet":
+        eng.compact()
+    else:
+        eng.store.vacuum()
+    assert not leftover.exists()
+    assert not list(eng.store.data_dir.glob(f"p_date=*/{SEGMENT_TMP_GLOB}"))
+    assert sorted(
+        tuple(r) for r in eng.read_interval(None, 0, 2**60).collect()
+    ) == sorted(grid)
+
+
+@pytest.mark.parametrize(
+    "crash",
+    [
+        "before_swap",
+        "between_renames",
+        "between_renames_after_append",
+        "after_swap",
+    ],
+)
+def test_reopen_recovers_interrupted_compaction(spark, tmp_path, crash):
+    """Each state an interrupted compact() swap can leave on disk reopens
+    with every row. compact() writes ``_compact_tmp/``, renames
+    ``data/`` to ``_old_data/``, renames ``_compact_tmp/`` to ``data/``
+    and deletes ``_old_data/``; an append between the two renames
+    creates a fresh ``data/`` holding only its own segment, and that
+    state must keep both the original rows and the appended one."""
+    import shutil
+
+    from dariadb_spark.model import meas_table
+    from dariadb_spark.sources.parquet_store import ParquetTsStore
+
+    grid = _grid()
+    # a compacted copy of the same rows, to plant as _compact_tmp/ or data/
+    twin = ParquetTsStore(spark, str(tmp_path / "twin"))
+    TsEngine(spark, twin.read, twin).append(grid)
+    twin.compact()
+
+    root = tmp_path / "s"
+    store = ParquetTsStore(spark, str(root))
+    for part in (grid[:30], grid[30:70], grid[70:]):
+        TsEngine(spark, store.read, store).append(part)
+    data, old, tmp = root / "data", root / "_old_data", root / "_compact_tmp"
+    expect = list(grid)
+    if crash == "before_swap":
+        # the rewrite died half way: one day of the compacted copy
+        day = next(twin.data_dir.glob("p_date=*"))
+        shutil.copytree(day, tmp / day.name)
+    elif crash.startswith("between_renames"):
+        shutil.copytree(twin.data_dir, tmp)
+        data.rename(old)
+        if crash == "between_renames_after_append":
+            late = [(7, T0 + 5 * DAY, 7.5, 1)]
+            store.append(meas_table(*zip(*late)))
+            expect += late
+    else:
+        data.rename(old)
+        shutil.copytree(twin.data_dir, data)
+        shutil.rmtree(next(old.glob("p_date=*")))  # half deleted
+    want = {
+        "before_swap": {"data", "_compact_tmp"},
+        "between_renames": {"_old_data", "_compact_tmp"},
+        "between_renames_after_append": {"data", "_old_data", "_compact_tmp"},
+        "after_swap": {"data", "_old_data"},
+    }[crash]
+    assert {p.name for p in root.iterdir()} == want
+
+    reopened = ParquetTsStore(spark, str(root))
+    assert {p.name for p in root.iterdir()} == {"data"}
+    got = reopened.read().select("id", "time", "value", "flag").collect()
+    assert sorted(map(tuple, got)) == sorted(expect)
+
+
+def test_compaction_swap_undone_when_an_append_races_it(
+    spark, tmp_path, monkeypatch
+):
+    """An append landing between compact()'s two renames makes the
+    second rename fail (``data/`` exists again). compact() raises and
+    leaves one whole ``data/`` in place: the original rows plus the
+    racing append, with nothing left to repair on reopen."""
+    import pathlib
+
+    from dariadb_spark.model import meas_table
+    from dariadb_spark.sources.parquet_store import ParquetTsStore
+
+    root = tmp_path / "s"
+    store = ParquetTsStore(spark, str(root))
+    eng = TsEngine(spark, store.read, store)
+    grid = _grid()
+    eng.append(grid)
+    late = [(7, T0 + 5 * DAY, 7.5, 1)]
+    rename = pathlib.Path.rename
+
+    def racing_rename(src, dst):
+        out = rename(src, dst)
+        if src.name == "data":
+            store.append(meas_table(*zip(*late)))
+        return out
+
+    monkeypatch.setattr(pathlib.Path, "rename", racing_rename)
+    with pytest.raises(OSError):
+        store.compact()
+    monkeypatch.undo()
+    assert {p.name for p in root.iterdir()} == {"data"}
+    got = store.read().select("id", "time", "value", "flag").collect()
+    assert sorted(map(tuple, got)) == sorted(grid + late)
+
+
+@pytest.mark.parametrize("fail_at", ["write", "rename"])
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_failed_segment_append_publishes_nothing(
+    spark, tmp_path, monkeypatch, backend, fail_at
+):
+    """An append spanning two days whose second day fails to write (or,
+    after both writes, to rename) raises and leaves no file of its own
+    behind: no read sees any of its rows, so a retry cannot duplicate
+    the first day."""
+    import os
+
+    from dariadb_spark.sources import store_protocol
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    grid = _grid()
+    eng.append(grid)
+    before = _files_by_day(eng.store)
+    real = {"write": store_protocol.pq.write_table, "rename": os.rename}[
+        fail_at
+    ]
+    calls = []
+
+    def second_fails(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 2:
+            raise OSError(28, "No space left on device")
+        return real(*args, **kwargs)
+
+    if fail_at == "write":
+        monkeypatch.setattr(store_protocol.pq, "write_table", second_fails)
+    else:
+        monkeypatch.setattr(store_protocol.os, "rename", second_fails)
+    rows = [(1, T0 + 6 * DAY - 1, 1.0, 1), (1, T0 + 6 * DAY, 2.0, 1)]
+    with pytest.raises(OSError):
+        eng.append(rows)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert _files_by_day(eng.store) == before
+    leftovers = eng.store.data_dir.glob("p_date=*/.*")
+    assert not list(leftovers)
+    got = eng.read_interval(None, 0, 2**60).collect()
+    assert sorted(map(tuple, got)) == sorted(grid)
 
 
 @pytest.mark.parametrize("backend", ["parquet", "log"])

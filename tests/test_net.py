@@ -258,3 +258,47 @@ def test_request_jobs_attributed_to_their_own_request(served, monkeypatch):
     compact_jobs = set(st.getJobIdsForGroup("dariadb:compact:3")) - compact_before
     assert compact_jobs
     assert not compact_jobs & read_jobs
+
+
+@pytest.fixture(scope="module", params=["parquet", "log"])
+def served_backend(spark, tmp_path_factory, request):
+    eng = TsEngine.open(
+        spark,
+        str(tmp_path_factory.mktemp("net_seg") / "store"),
+        backend=request.param,
+    )
+    srv = TsServer(eng).start()
+    yield eng, srv
+    srv.stop()
+
+
+@pytest.mark.parametrize("binary", [False, True], ids=["json", "bin"])
+def test_wire_append_runs_no_job_and_writes_one_file_per_day(
+    served_backend, binary
+):
+    """An append in either encoding is written as one parquet segment
+    per touched day, without a Spark job in its request's job group."""
+    eng, srv = served_backend
+    sc = eng.spark.sparkContext
+    sid = 20 + binary
+    # the last hour of one day and the first of the next
+    rows = [(sid, T0 + k * HOUR, float(k), 1) for k in (-1, 0, 1)]
+
+    def files() -> set:
+        return {str(p) for p in eng.store.data_dir.glob("p_date=*/*.parquet")}
+
+    before = files()
+    with _cli(srv) as cli:
+        # every client numbers its requests from 1, so the group may
+        # already hold an earlier client's jobs
+        group = f"dariadb:append:{cli._qid + 1}"
+        jobs_before = set(sc.statusTracker().getJobIdsForGroup(group))
+        assert cli.append(rows, binary=binary) == len(rows)
+        assert cli._qid == int(group.rsplit(":", 1)[1])
+        _, got = cli.read_interval([sid], T0 - HOUR, T0 + HOUR)
+    assert got == rows
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == jobs_before
+    added = sorted(p.rsplit("p_date=", 1)[1].split("/")[0]
+                   for p in files() - before)
+    assert added == ["2023-12-31", "2024-01-01"]
