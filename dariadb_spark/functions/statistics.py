@@ -100,8 +100,3 @@ def apply_functions(
         .agg(*aggs)
     )
     return sort_result(agg, ids, "id")
-
-
-def oracle_agg_sql(name: str) -> str:
-    """DuckDB aggregate expression equivalent to the Spark one."""
-    return FUNCTION_REGISTRY[name][1]

@@ -1,8 +1,7 @@
 """Streaming ANN index maintenance — PQ encode-on-ingest.
 
-STAGED for the next driver window (round-10's is full; the staging
-every late operator goes through — VERDICT r9 item 3). The PQ index's
-at-scale life cycle is: learn codebooks once offline (a persisted
+Registered as ``streaming_pq_ingest_parity`` from ext/similarity.py.
+The PQ index's at-scale life cycle is: learn codebooks once offline (a persisted
 KB-sized artifact), then ENCODE EVERY ARRIVING VECTOR against them as
 part of ingest, appending 4-byte code rows to the index table — the
 index is maintained incrementally, never rebuilt. This module is that
@@ -17,9 +16,8 @@ micro-batch costs exactly the batch encode of its rows (zero shuffle,
 zero driver round-trips). That statelessness IS the parity claim: the
 standing code table after any batching of the stream equals the
 one-shot batch encode of the same corpus, pinned in
-tests/test_streaming_ann.py and replayable in the DuckDB oracle
-(``STREAMING_PQ_CODES_SQL``, ext/similarity.py) for the r11
-registration.
+tests/test_streaming_ann.py and replayed by the DuckDB oracle
+(``STREAMING_PQ_CODES_SQL``, ext/similarity.py).
 
 At 100 TB: swap the memory sink for an append-only parquet/Delta code
 table partitioned like the corpus; the encode plan is unchanged. A
@@ -32,6 +30,13 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    land_halves,
+    run_parity,
+    to_memory,
+)
 
 #: matches the embeddings fixture; a production ingest would carry the
 #: same columns out of its landing zone.
@@ -53,24 +58,10 @@ def streaming_pq_encode(
     (vec_id, c0..c{M-1}) — the 128×-compressed index entries."""
     from dariadb_spark.ext.similarity import pq_encode_arrow
 
-    reader = (
-        spark.readStream.schema(_EMB_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    emb = reader.parquet(emb_dir).selectExpr(
-        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
-    )
-    codes = pq_encode_arrow(emb, codebooks)
-    return (
-        codes.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    emb = file_stream(
+        spark, _EMB_DDL, emb_dir, max_files_per_trigger
+    ).selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS e")
+    return to_memory(pq_encode_arrow(emb, codebooks), "append", query_name)
 
 
 def init_codebooks_from_corpus(spark: SparkSession, sf_dir: str):
@@ -103,37 +94,22 @@ def init_codebooks_from_corpus(spark: SparkSession, sf_dir: str):
 
 
 def streaming_pq_ingest_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible encode-on-ingest parity (STAGED for round 11; the
-    CMS/HDR/KMV staging pattern): land the embeddings fixture in TWO
-    parquet drops, fold one file per micro-batch through the streaming
-    PQ encode against the shared init codebook, and return the standing
-    code table. Oracle = the batch argmin encode over the same corpus
-    (statelessness makes batching invisible)."""
-    import shutil
-    import tempfile
-
+    """Driver-visible encode-on-ingest parity: land the embeddings
+    fixture in TWO parquet drops, fold one file per micro-batch through
+    the streaming PQ encode against the shared init codebook, and
+    return the standing code table. Oracle = the batch argmin encode
+    over the same corpus (statelessness makes batching invisible)."""
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
     codebooks = init_codebooks_from_corpus(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="dariadb_pq_ingest_")
-    data_dir = f"{base}/emb"
-    qname = "pq_ingest_" + base.rsplit("_", 1)[-1]
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        emb.where("vec_id % 2 = 0").write.parquet(data_dir)
-        emb.where("vec_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_pq_encode(
-                spark, data_dir, codebooks, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        codes = spark.table(qname).orderBy("vec_id")
-        return localize_and_cleanup(spark, codes, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "pq_ingest_parity",
+        lambda data_dir: land_halves(
+            load_table(spark, sf_dir, "embeddings"), "vec_id", data_dir
+        ),
+        lambda data_dir, qname: streaming_pq_encode(
+            spark, data_dir, codebooks, qname, max_files_per_trigger=1
+        ),
+        lambda sink: sink.orderBy("vec_id"),
+    )

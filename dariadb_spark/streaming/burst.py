@@ -9,7 +9,8 @@ each batch's gaps to the accumulators and the standing per-group
 partials finish through the SAME ``burstiness_report`` projection the
 batch operator uses — statefulness can only show up in the partials.
 
-In-order contract (the r17 fold-contract taxonomy, applied at birth):
+In-order contract (the fold-contract taxonomy of
+tests/test_fold_contracts.py):
 gap extraction reads the SEQUENCE, so a later micro-batch whose first
 sample sorts STRICTLY before the standing last arrival raises
 ValueError; an EXACT-duplicate arrival time is accepted as a
@@ -37,6 +38,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per batch per touched group: the standing partials —
 #: burstiness_report's input schema plus the group keys
@@ -137,31 +145,11 @@ def streaming_burst_log(
 ) -> StreamingQuery:
     """Maintain the per-(id, flag) gap accumulators incrementally
     (availableNow here; a production monitor runs unbounded)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(meas_dir)
+    stream = file_stream(spark, MEAS_DDL, meas_dir, max_files_per_trigger)
     log = stream.groupBy("id", "flag").applyInPandasWithState(
-        _burst_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _burst_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return to_memory(log, "update", query_name)
 
 def burst_from_log(log: DataFrame) -> DataFrame:
     """The standing report: the latest partials per (id, flag) (n_gaps
@@ -192,32 +180,14 @@ def streaming_burst_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulators must bridge both cuts), fold one file per micro-batch,
     and report the standing table. Oracle = the batch
     ``EVENTS_BURSTINESS_SQL``."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.registry import FROM_MS, IDS, TO_MS
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "burst_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=3
+        ),
+        lambda data_dir, qname: streaming_burst_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        burst_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_burst_parity_")
-    data_dir = f"{base}/meas"
-    qname = "burst_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=3)
-        with parity_stream_partitions(spark):
-            q = streaming_burst_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = burst_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

@@ -7,9 +7,8 @@ content hash. The measurement-stream twin
 member of the family — the ingest gate that keys on derived text
 content, the streaming half of ``ext_dedup_exact``.
 
-Registered round 13 as ``streaming_exact_dedup_parity`` (staged round
-12 with the full discipline; registration lives in ext/dedup.py next
-to its batch family). Arriving documents are keyed by their 60-bit content
+Registered as ``streaming_exact_dedup_parity`` from ext/dedup.py, next
+to its batch family. Arriving documents are keyed by their 60-bit content
 hash and duplicates are dropped in-flight, so the corpus lands
 already-exact-deduped (``ext_dedup_incremental`` is the batch
 backstop). The standing
@@ -28,7 +27,7 @@ e.g. crawler re-fetches) with the batch incremental pass
 backed. The operator and plan are identical either way — this parity
 pins the unbounded-exact semantics the backstop must reproduce, and
 ``test_streaming_dedup_watermarked_bounded_state`` pins the bounded
-variant itself (round 13, VERDICT r12 item 6): in-horizon re-fetch
+variant itself: in-horizon re-fetch
 deduped by live state, post-horizon re-fetch lands again after state
 eviction, one batch DISTINCT over the landed table restores global
 exactness — the claim is a test now, not prose.
@@ -38,6 +37,13 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    land_halves,
+    run_parity,
+    to_memory,
+)
 
 _DOC_DDL = (
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
@@ -82,14 +88,12 @@ def streaming_exact_dedup(
     lands again. That surviving duplicate is exactly what the batch
     incremental pass (``ext_dedup_incremental``) exists to catch."""
     bounded = watermark is not None
-    reader = (
-        spark.readStream.schema(_DOC_TS_DDL if bounded else _DOC_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(docs_dir).where("text IS NOT NULL")
+    docs = file_stream(
+        spark,
+        _DOC_TS_DDL if bounded else _DOC_DDL,
+        docs_dir,
+        max_files_per_trigger,
+    ).where("text IS NOT NULL")
     hashed = docs.selectExpr(
         "CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) AS h",
         "length(text) AS n_chars",
@@ -103,46 +107,24 @@ def streaming_exact_dedup(
         )
     else:
         deduped = hashed.dropDuplicates(["h"])
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(deduped, "append", query_name)
 
 
 def streaming_exact_dedup_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible ingest-dedup parity (the gate/PQ staging
-    pattern): land the corpus in TWO parquet drops — duplicates
-    deliberately SPLIT across drops so cross-micro-batch state is what
-    dedups them — fold one file per micro-batch, and return the
-    standing survivor table. Oracle = batch DISTINCT of the same
-    projections."""
-    import shutil
-    import tempfile
-
+    """Driver-visible ingest-dedup parity: land the corpus in TWO
+    parquet drops — duplicates deliberately SPLIT across drops so
+    cross-micro-batch state is what dedups them — fold one file per
+    micro-batch, and return the standing survivor table. Oracle = batch
+    DISTINCT of the same projections."""
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
     docs = load_table(spark, sf_dir, "documents").where("text IS NOT NULL")
-    base = tempfile.mkdtemp(prefix="dariadb_sdedup_")
-    data_dir = f"{base}/docs"
-    qname = "exact_dedup_" + base.rsplit("_", 1)[-1]
-    try:
-        docs.where("doc_id % 2 = 0").write.parquet(data_dir)
-        docs.where("doc_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_exact_dedup(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        survivors = spark.table(qname).orderBy("h")
-        return localize_and_cleanup(spark, survivors, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "exact_dedup_parity",
+        lambda data_dir: land_halves(docs, "doc_id", data_dir),
+        lambda data_dir, qname: streaming_exact_dedup(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        lambda sink: sink.orderBy("h"),
+    )

@@ -1,9 +1,7 @@
 """Streaming EWMA maintenance — the trailing-window smoother at ingest.
 
-Registered round 14 as ``streaming_ewma_parity`` (home-module bottom
-register in ext/timeseries.py, whose EWMA_SQL is the shared oracle;
-staged round 13: implemented + oracled + pytest parity + planted
-stress first, registered at the window rotation). The batch side is
+Registered as ``streaming_ewma_parity`` at the bottom of
+ext/timeseries.py, whose EWMA_SQL is the shared oracle. The batch side is
 ``ext_ewma`` (ext/timeseries.py): a 20-lag windowed Σ wₖ·lag(value, k)
 chain. THIS module is its ingest twin: the per-series trailing buffer
 (the last ≤20 deduped samples) is EXPLICIT operator state
@@ -24,8 +22,8 @@ pairs per series — independent of throughput and history; RocksDB-backed
 in production exactly like the other stateful twins. In-order arrival
 per series is the module contract (the parity lands drops cut on an
 epoch-ms boundary, so LWW-duplicate times never straddle a batch), and
-the fold ENFORCES it (r18, the r17 fold-contract taxonomy): this is an
-LWW-class fold like rate.py — its batch oracle LWW-dedups on time, so
+the fold ENFORCES it (the fold-contract taxonomy of
+tests/test_fold_contracts.py): this is an LWW-class fold like rate.py — its batch oracle LWW-dedups on time, so
 a cross-batch duplicate-or-before time raises (it would rewrite
 already-emitted smoothed rows); in-batch duplicates are LWW'd
 silently, matching the batch plan. An out-of-order production feed
@@ -45,6 +43,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per sample: the raw row plus the EXACT float num/den the
 #: batch lag-chain would produce; the division+round stay JVM-side
@@ -91,7 +96,7 @@ def _ewma_fold(
     keep[:-1] = t[1:] != t[:-1]
     t, v = t[keep], v[keep]
     if times and int(t[0]) <= times[-1]:
-        # LWW-class in-order contract (the r17 fold taxonomy, rate.py
+        # LWW-class in-order contract (the fold taxonomy, rate.py
         # precedent): EQUALITY raises too — this fold's batch oracle
         # LWW-DEDUPS on time, so a duplicate time arriving in a LATER
         # trigger would have to rewrite already-emitted smoothed rows
@@ -147,28 +152,11 @@ def streaming_ewma_log(
 ) -> StreamingQuery:
     """Maintain the smoothed stream incrementally (availableNow here; a
     production ingest runs unbounded into a parquet/Delta sink)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(meas_dir)
+    stream = file_stream(spark, MEAS_DDL, meas_dir, max_files_per_trigger)
     log = stream.groupBy("id").applyInPandasWithState(
-        _ewma_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _ewma_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(log, "update", query_name)
 
 
 def ewma_from_log(log: DataFrame) -> DataFrame:
@@ -193,35 +181,17 @@ def streaming_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batches — fold one file per batch, and close the
     arithmetic JVM-side. Oracle = the batch ``EWMA_SQL``: statefulness
     must make batching invisible."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.ext.timeseries import FROM_MS, IDS, TO_MS
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "ewma_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=2
+        ),
+        lambda data_dir, qname: streaming_ewma_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        ewma_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_ewma_parity_")
-    data_dir = f"{base}/meas"
-    qname = "ewma_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=2)
-        with parity_stream_partitions(spark):
-            q = streaming_ewma_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = ewma_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
 
 
 #: oracle: the standing smoothed log must equal the batch windowed EWMA

@@ -1,8 +1,7 @@
 """Streaming curation gate — quality-gate documents at ingest time.
 
-STAGED for the round-12 driver window (round-11's is full; the staging
-every late operator goes through — VERDICT r10 item 5). The batch side
-closes the curation loop offline (``ext_preprocess_funnel``,
+Registered as ``streaming_quality_gate_parity`` from ext/pipeline.py.
+The batch side closes the curation loop offline (``ext_preprocess_funnel``,
 ``ext_curate_gated_mixture``); this module is the INGEST half: arriving
 documents are gated per micro-batch against PERSISTED artifacts — the
 boilerplate chunk table learned offline from the historical corpus (the
@@ -14,8 +13,7 @@ the doc row and the broadcast artifact — so the streaming query needs no
 state store, no watermark, and append output mode; any batching of the
 stream yields the same standing verdict table as the one-shot batch gate
 (the parity claim, pinned in tests/test_streaming_gate.py and replayable
-in the DuckDB oracle built by ``_quality_gate_sql()``, ext/pipeline.py —
-registered as ``streaming_quality_gate_parity`` since round 12).
+in the DuckDB oracle built by ``_quality_gate_sql()``, ext/pipeline.py).
 
 Plan shape per micro-batch: the scalar rules (min chars, stopword
 ratio) are codegen'd column expressions fused into the scan; only the
@@ -34,6 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    land_halves,
+    run_parity,
+    to_memory,
+)
 
 #: documents landing-zone schema (matches the fixture).
 _DOC_DDL = (
@@ -154,56 +159,29 @@ def streaming_quality_gate(
     """Gate a document stream at ingest (availableNow here; a
     production ingest runs unbounded, writing kept docs onward and the
     full verdict table to the audit sink)."""
-    reader = (
-        spark.readStream.schema(_DOC_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(docs_dir).where("text IS NOT NULL")
-    return (
-        gate_verdicts(docs, boiler_chunks)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    docs = file_stream(
+        spark, _DOC_DDL, docs_dir, max_files_per_trigger
+    ).where("text IS NOT NULL")
+    return to_memory(gate_verdicts(docs, boiler_chunks), "append", query_name)
 
 
 def streaming_quality_gate_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible ingest-gate parity (the CMS/HDR/KMV/PQ staging
-    pattern): learn the boilerplate artifact from the corpus, land the
-    same corpus in TWO parquet drops, fold one file per micro-batch
-    through the streaming gate, and return the standing verdict table.
-    Oracle = the batch gate over the same corpus with the same
-    artifact definition (statelessness makes batching invisible)."""
-    import shutil
-    import tempfile
-
+    """Driver-visible ingest-gate parity: learn the boilerplate artifact
+    from the corpus, land the same corpus in TWO parquet drops, fold
+    one file per micro-batch through the streaming gate, and return the
+    standing verdict table. Oracle = the batch gate over the same
+    corpus with the same artifact definition (statelessness makes
+    batching invisible)."""
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
     docs = load_table(spark, sf_dir, "documents").where("text IS NOT NULL")
     artifact = boiler_chunk_artifact(docs)
-    base = tempfile.mkdtemp(prefix="dariadb_gate_")
-    data_dir = f"{base}/docs"
-    qname = "quality_gate_" + base.rsplit("_", 1)[-1]
-    try:
-        docs.where("doc_id % 2 = 0").write.parquet(data_dir)
-        docs.where("doc_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_quality_gate(
-                spark, data_dir, artifact, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        verdicts = spark.table(qname).orderBy("doc_id")
-        return localize_and_cleanup(spark, verdicts, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "quality_gate_parity",
+        lambda data_dir: land_halves(docs, "doc_id", data_dir),
+        lambda data_dir, qname: streaming_quality_gate(
+            spark, data_dir, artifact, qname, max_files_per_trigger=1
+        ),
+        lambda sink: sink.orderBy("doc_id"),
+    )

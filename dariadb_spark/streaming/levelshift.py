@@ -1,9 +1,8 @@
 """Streaming A/B level-shift maintenance — the ingest twin of
 ``ext_series_level_shift``.
 
-STAGED for the round-16 driver window (the staging every late operator
-goes through: implemented + oracled + pytest parity + planted stress
-now, registered at the next window rotation). The batch side is
+Registered as ``streaming_level_shift_parity`` from ext/timeseries.py.
+The batch side is
 ``series_level_shift_op`` (ext/timeseries.py): per-series Welch t²
 between the two sides of a split timestamp, from exact cent-quantized
 n/Σy/Σy² per side. THIS module is its ingest twin — the monitor a live
@@ -44,6 +43,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per batch per touched series: the cumulative sums table —
 #: the level_shift_report input schema
@@ -112,35 +118,19 @@ def streaming_level_shift_log(
 ) -> StreamingQuery:
     """Maintain the per-series side accumulators incrementally
     (availableNow here; a production monitor runs unbounded)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # quantization + side assignment are the BATCH plan's JVM
     # expressions, evaluated before rows reach Python
-    stream = reader.parquet(meas_dir).selectExpr(
+    stream = file_stream(
+        spark, MEAS_DDL, meas_dir, max_files_per_trigger
+    ).selectExpr(
         "id",
         f"CAST(time >= {split_ms} AS BIGINT) AS s",
         "CAST(round(value * 100) AS BIGINT) AS y",
     )
     log = stream.groupBy("id").applyInPandasWithState(
-        _shift_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _shift_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return to_memory(log, "update", query_name)
 
 def level_shift_from_log(log: DataFrame) -> DataFrame:
     """The standing report: the latest cumulative sums row per series
@@ -167,41 +157,20 @@ def streaming_level_shift_parity(
     per-side accumulators must carry across micro-batches — fold one
     file per batch, and report the standing table. Oracle = the batch
     ``SERIES_LEVEL_SHIFT_SQL``."""
-    import shutil
-    import tempfile
+    from dariadb_spark.ext.timeseries import LEVEL_SHIFT_SPLIT_MS
 
-    from dariadb_spark.ext.timeseries import (
-        FROM_MS,
-        IDS,
-        LEVEL_SHIFT_SPLIT_MS,
-        TO_MS,
+    return run_parity(
+        spark,
+        "lshift_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=3
+        ),
+        lambda data_dir, qname: streaming_level_shift_log(
+            spark,
+            data_dir,
+            LEVEL_SHIFT_SPLIT_MS,
+            qname,
+            max_files_per_trigger=1,
+        ),
+        level_shift_from_log,
     )
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
-
-    base = tempfile.mkdtemp(prefix="dariadb_lshift_parity_")
-    data_dir = f"{base}/meas"
-    qname = "lshift_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=3)
-        with parity_stream_partitions(spark):
-            q = streaming_level_shift_log(
-                spark,
-                data_dir,
-                LEVEL_SHIFT_SPLIT_MS,
-                qname,
-                max_files_per_trigger=1,
-            )
-        await_parity_termination(q)
-        out = level_shift_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

@@ -5,7 +5,8 @@ A growth dashboard wants the LTV curve LIVE as orders land. The curve
 is sums over (cohort, age, customer, cents) facts, and a customer's
 cohort is its FIRST order's year — a value that is only stable if
 orders arrive date-ordered per customer. So the fold carries the
-in-order contract (the r17 taxonomy): state per customer is TWO int64s
+in-order contract (the fold-contract taxonomy of
+tests/test_fold_contracts.py): state per customer is TWO int64s
 (cohort year + the last (epoch-day, orderkey) order key packed as two
 fields); a later micro-batch whose first order sorts strictly before
 the standing key raises (an earlier date would rewrite the cohort
@@ -34,6 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    land_sorted,
+    persisted_slice,
+    run_parity,
+    to_memory,
+)
 
 _ORDERS_DDL = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE,"
@@ -125,35 +134,18 @@ def streaming_ltv_log(
 ) -> StreamingQuery:
     """Maintain the per-customer cohort/age delta log incrementally
     (availableNow here; a production dashboard runs unbounded)."""
-    reader = (
-        spark.readStream.schema(_ORDERS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(orders_dir).selectExpr(
+    stream = file_stream(
+        spark, _ORDERS_DDL, orders_dir, max_files_per_trigger
+    ).selectExpr(
         "o_orderkey",
         "o_custkey",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
         "o_orderdate",
     )
     log = stream.groupBy("o_custkey").applyInPandasWithState(
-        _ltv_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _ltv_fold, _OUT_DDL, _STATE_DDL, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(log, "append", query_name)
 
 
 def ltv_from_log(log: DataFrame) -> DataFrame:
@@ -177,26 +169,13 @@ def streaming_ltv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity row uses: fold cost is per-group python overhead, so the
     slice measures the operator, not the harness; the 2M-row stress
     covers volume)."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.ext.relational import (
         LTV_PARITY_MOD,
         LTV_PARITY_RESIDUE,
     )
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_sorted,
-        localize_and_cleanup,
-        parity_stream_partitions,
-        persisted_slice,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_ltv_parity_")
-    data_dir = f"{base}/orders"
-    qname = "ltv_parity_" + base.rsplit("_", 1)[-1]
-    try:
+    def land(data_dir: str) -> None:
         sl = load_table(spark, sf_dir, "orders").where(
             f"o_custkey % {LTV_PARITY_MOD} = {LTV_PARITY_RESIDUE}"
         ).select(
@@ -219,21 +198,23 @@ def streaming_ltv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 land_sorted(
                     orders.where(pred), data_dir,
                     ("o_custkey", "o_orderdate", "o_orderkey"),
-                    mode="append" if i else "error",  # ADVICE r19
+                    # first drop error-if-exists: a stale dir fails loudly
+                    mode="append" if i else "error",
                 )
-        # n=32: ~750 customer groups per batch — the fold's cost is
-        # per-group python overhead, so the state layer is sized to
-        # group cardinality, not the 15-series parity default (r19 A/B
-        # at sf0.1 best-of-3: 5.94 s at n=4 vs 5.40 s at 32; explicit
-        # so an externally-built session's default, e.g. 200, cannot
-        # schedule 200 near-empty state tasks per batch)
-        with parity_stream_partitions(spark, 32):
-            q = streaming_ltv_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = ltv_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    # 32 partitions: ~750 customer groups per batch — the fold's cost is
+    # per-group python overhead, so the state layer is sized to group
+    # cardinality, not the 15-series parity default (at sf0.1
+    # best-of-3: 5.94 s at n=4 vs 5.40 s at 32; explicit so an
+    # externally-built session's default, e.g. 200, cannot schedule 200
+    # near-empty state tasks per batch)
+    return run_parity(
+        spark,
+        "ltv_parity",
+        land,
+        lambda data_dir, qname: streaming_ltv_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        ltv_from_log,
+        partitions=32,
+    )

@@ -1,9 +1,7 @@
 """Streaming event-transition maintenance — the Markov matrix at ingest.
 
-Registered round 13 as ``streaming_markov_parity`` (staged round 12
-with the full discipline: implemented + oracled + pytest parity +
-planted stress first; registration lives in ext/analytics.py next to
-the batch oracle it replays). The batch side is
+Registered as ``streaming_markov_parity`` from ext/analytics.py, next
+to the batch oracle it replays. The batch side is
 ``ext_event_markov`` (ext/analytics.py); this module is its INGEST
 twin: the per-user last-event handoff is maintained as EXPLICIT
 operator state (``applyInPandasWithState``), so every arriving event
@@ -17,7 +15,8 @@ independent of throughput and history length; transitions leave the
 operator as an append-style log the moment they are known, so the
 sink can be a parquet/Delta transition table compacted downstream
 (the memory sink here is the parity harness). The fold carries the
-sample-class in-order contract (r18, the r17 taxonomy): transition
+sample-class in-order contract (the fold-contract taxonomy of
+tests/test_fold_contracts.py): transition
 chains read the SEQUENCE, so a cross-batch strictly-before event
 raises (it would silently rewrite the chain); an exact-duplicate
 (ts, event_id) key is an in-order sample — the batch lag window
@@ -47,6 +46,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    persisted_slice,
+    run_parity,
+    to_memory,
+)
+
 #: events landing-zone schema (matches the fixture).
 _EVENTS_DDL = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING,"
@@ -57,8 +63,8 @@ _EVENTS_DDL = (
 _TRANSITION_DDL = "event_type STRING, next_type STRING"
 
 #: state: the user's last seen event type + its (ts-ns, event_id) key
-#: — the key exists to make cross-batch disorder DETECTABLE (r18, the
-#: r17 fold-contract taxonomy): transition chains read the sequence,
+#: — the key exists to make cross-batch disorder DETECTABLE (the
+#: fold-contract taxonomy): transition chains read the sequence,
 #: so a strictly-before arrival would silently rewrite the chain.
 _STATE_DDL = "last_type STRING, last_ts BIGINT, last_eid BIGINT"
 
@@ -121,35 +127,22 @@ def streaming_transition_log(
     """Maintain the transition log incrementally over an event stream
     (availableNow here; a production ingest runs unbounded into a
     parquet/Delta sink)."""
-    reader = (
-        spark.readStream.schema(_EVENTS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # project to the columns the fold reads (event_id, ts, event_type)
     # plus the group key BEFORE the state shuffle: the parquet scan then
     # prunes `value`/`props`, and the pruned rows are what crosses the
-    # shuffle and the JVM→Python Arrow boundary (guide §4.1 — an opaque
-    # fold otherwise ships, and reads from storage, every column)
-    stream = reader.parquet(events_dir).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
+    # shuffle and the JVM→Python Arrow boundary (an opaque fold
+    # otherwise ships, and reads from storage, every column)
+    stream = file_stream(
+        spark, _EVENTS_DDL, events_dir, max_files_per_trigger
+    ).select("event_id", "ts", "user_id", "event_type")
     log = stream.groupBy("user_id").applyInPandasWithState(
         _transition_fold,
-        outputStructType=_TRANSITION_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _TRANSITION_DDL,
+        _STATE_DDL,
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(log, "update", query_name)
 
 
 def matrix_from_log(log: DataFrame) -> DataFrame:
@@ -192,21 +185,9 @@ def streaming_markov_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standing log into the matrix. Oracle = the batch
     ``ext_event_markov`` SQL over the same fixture: statefulness must
     make batching invisible."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-        persisted_slice,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_markov_parity_")
-    data_dir = f"{base}/events"
-    qname = "markov_parity_" + base.rsplit("_", 1)[-1]
-    try:
+    def land(data_dir: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         # epoch-millisecond median cut: every event at ms ≤ cut lands in
         # drop 1 (sub-ms ties never split), so drop 1 strictly precedes
@@ -255,22 +236,22 @@ def streaming_markov_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             evp.where(F.col("_ms") > cut).drop("_ms").coalesce(
                 1
             ).write.mode("append").parquet(data_dir)
-        # n=32: ~1.5k user groups per batch — size the state layer to
-        # group cardinality (the r12 stress lesson), not the 15-series
-        # parity default (r19 A/B at sf0.1: 6.7 s at n=4 → 4.6 s after
-        # this + the persisted landing; explicit so an externally-built
-        # session's default, e.g. 200, cannot schedule 200 near-empty
-        # state tasks per batch)
-        with parity_stream_partitions(spark, 32):
-            q = streaming_transition_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = matrix_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    # 32 partitions: ~1.5k user groups per batch — size the state layer
+    # to group cardinality, not the 15-series parity default (at sf0.1:
+    # 6.7 s at n=4 → 4.6 s with this and the persisted landing;
+    # explicit so an externally-built session's default, e.g. 200,
+    # cannot schedule 200 near-empty state tasks per batch)
+    return run_parity(
+        spark,
+        "markov_parity",
+        land,
+        lambda data_dir, qname: streaming_transition_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        matrix_from_log,
+        partitions=32,
+    )
 
 
 #: oracle: the standing log's matrix must equal the batch matrix

@@ -1,8 +1,7 @@
 """Streaming OHLC bar maintenance — the ingest twin of ``ext_ohlc``.
 
-STAGED for the round-16 driver window (the staging every late operator
-goes through: implemented + oracled + pytest parity + planted stress
-now, registered at the next window rotation). The batch side is
+Registered as ``streaming_ohlc_parity`` from ext/timeseries.py.
+The batch side is
 ``ohlc_op`` (ext/timeseries.py): per (id, bucket) open/high/low/close
 via ``min_by``/``max_by`` on the (time, value, flag) total order. THIS
 module is its ingest twin — the fold a live bar-charting pipeline
@@ -38,6 +37,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per batch per touched bucket: the cumulative bar
 _OUT_DDL = (
@@ -121,31 +127,13 @@ def streaming_ohlc_log(
 ) -> StreamingQuery:
     """Maintain the per-(id, bucket) bars incrementally (availableNow
     here; a production ingest runs unbounded with a state timeout)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(meas_dir).withColumn(
-        "bucket_ms", F.col("time") - F.col("time") % F.lit(width_ms)
-    )
+    stream = file_stream(
+        spark, MEAS_DDL, meas_dir, max_files_per_trigger
+    ).withColumn("bucket_ms", F.col("time") - F.col("time") % F.lit(width_ms))
     log = stream.groupBy("id", "bucket_ms").applyInPandasWithState(
-        _ohlc_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _ohlc_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return to_memory(log, "update", query_name)
 
 def ohlc_from_log(log: DataFrame) -> DataFrame:
     """The standing bars: the latest cumulative row per (id, bucket)
@@ -166,32 +154,16 @@ def streaming_ohlc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars genuinely straddle the cut, so the bar state must carry across
     micro-batches — fold one file per batch, and keep the standing
     bars. Oracle = the batch ``OHLC_SQL``."""
-    import shutil
-    import tempfile
+    from dariadb_spark.ext.timeseries import HOUR_MS
 
-    from dariadb_spark.ext.timeseries import FROM_MS, HOUR_MS, IDS, TO_MS
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "ohlc_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=2
+        ),
+        lambda data_dir, qname: streaming_ohlc_log(
+            spark, data_dir, HOUR_MS, qname, max_files_per_trigger=1
+        ),
+        ohlc_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_ohlc_parity_")
-    data_dir = f"{base}/meas"
-    qname = "ohlc_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=2)
-        with parity_stream_partitions(spark):
-            q = streaming_ohlc_log(
-                spark, data_dir, HOUR_MS, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = ohlc_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

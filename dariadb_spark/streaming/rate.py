@@ -1,8 +1,7 @@
 """Streaming counter-rate maintenance — the PromQL ``rate()`` fold at ingest.
 
-Registered round 15 (staged round 14 with the full discipline:
-implemented + oracled + pytest parity + planted stress first,
-registered at the window rotation). The batch side is
+Registered as ``streaming_counter_rate_parity`` from ext/timeseries.py.
+The batch side is
 ``counter_rate_op`` (ext/timeseries.py): one lag-window pass with the
 reset convention (a negative delta means the counter restarted, so the
 increase is the new value itself). THIS module is its ingest twin — the
@@ -37,6 +36,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per sample past the first: the raw row plus the EXACT float
 #: increase; round + rate division stay JVM-side
@@ -83,13 +89,13 @@ def _rate_fold(
     for i in range(len(t)):
         ti, vi = int(t[i]), float(v[i])
         if last_t is not None and ti <= last_t:
-            # Out-of-contract input (ADVICE r14): a duplicate or
+            # Out-of-contract input: a duplicate or
             # out-of-order (id, time) arriving in a LATER micro-batch
             # than its successor. Silently treating it as new would
             # emit dt_ms <= 0 rows (garbage rate_per_s). The in-order
             # contract is documented in the module docstring; fail
             # loudly instead of corrupting the standing output.
-            # Class note (r17 audit): EQUALITY raises here, unlike the
+            # Class note (fold taxonomy): EQUALITY raises here, unlike the
             # turning fold which accepts an exact-duplicate key as a
             # plateau — the difference is principled, not drift: this
             # fold's batch oracle LWW-DEDUPS on time, so a duplicate
@@ -129,29 +135,11 @@ def streaming_counter_rate_log(
 ) -> StreamingQuery:
     """Maintain the increase stream incrementally (availableNow here; a
     production ingest runs unbounded into a parquet/Delta sink)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(meas_dir)
+    stream = file_stream(spark, MEAS_DDL, meas_dir, max_files_per_trigger)
     log = stream.groupBy("id").applyInPandasWithState(
-        _rate_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _rate_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return to_memory(log, "update", query_name)
 
 def counter_rate_from_log(log: DataFrame) -> DataFrame:
     """The JVM-side closure: the two rounds + the rate division,
@@ -179,32 +167,14 @@ def streaming_counter_rate_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     (last_time, last_value) pair must carry across micro-batches — fold
     one file per batch. Oracle = the batch ``COUNTER_RATE_SQL``:
     statefulness must make batching invisible."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.ext.timeseries import FROM_MS, IDS, TO_MS
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "rate_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=2
+        ),
+        lambda data_dir, qname: streaming_counter_rate_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        counter_rate_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_rate_parity_")
-    data_dir = f"{base}/meas"
-    qname = "rate_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=2)
-        with parity_stream_partitions(spark):
-            q = streaming_counter_rate_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = counter_rate_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

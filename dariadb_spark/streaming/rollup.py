@@ -39,6 +39,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dariadb_spark.model import MEAS_DDL
 from dariadb_spark.operators.downsample import MS, floor_bucket
+from dariadb_spark.streaming.scratch import (
+    await_parity_termination,
+    file_stream,
+    parity_stream_partitions,
+    persisted_slice,
+    run_parity,
+)
 
 _PARTIAL_COLS = ("id", "bucket_ms", "_cnt", "_sum", "_min", "_max")
 
@@ -84,12 +91,7 @@ def streaming_rollup(
     ``batch_id=<id>/`` with overwrite, so an at-least-once replay
     replaces rather than duplicates (see module docstring)."""
     width_ms = MS[interval]
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
+    stream = file_stream(spark, MEAS_DDL, data_dir)
 
     def write_partials(batch: DataFrame, batch_id: int) -> None:
         _partials(batch, width_ms).select(*_PARTIAL_COLS).write.mode(
@@ -122,35 +124,28 @@ def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
 
 
 def streaming_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible streaming parity (round-2 VERDICT item 3): run the
-    REAL incremental pipeline — two checkpointed availableNow streaming
-    runs over the fixture split at a fixed timestamp, then a
-    committed-batch-guarded compaction — and return the merge-on-read
-    rollup. The oracle is the plain batch ``downsample('day')`` SQL:
-    partials re-aggregate associatively, so streaming ingest must
-    reproduce the batch block bit-for-bit under the round(sum,6)/count
-    recipe. Upgrades T1/T3/T5 (streaming maintenance, SURVEY §2.8) from
-    pytest-only to a hash-checked driver CORRECTNESS row.
+    """Driver-visible streaming parity: run the REAL incremental
+    pipeline — two checkpointed availableNow streaming runs over the
+    fixture split at a fixed timestamp, then a committed-batch-guarded
+    compaction — and return the merge-on-read rollup. The oracle is the
+    plain batch ``downsample('day')`` SQL: partials re-aggregate
+    associatively, so streaming ingest must reproduce the batch block
+    bit-for-bit under the round(sum,6)/count recipe. This is the
+    hash-checked row for streaming maintenance (SURVEY §2.8 T1/T3/T5).
 
     The merge-on-read result is localized (it is bucket-count-sized)
     and the scratch tree removed before returning."""
-    import shutil
-    import tempfile
+    import os
 
     from dariadb_spark.model import measurements
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-        persisted_slice,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_stream_parity_")
-    data_dir = f"{base}/data"
-    rollup_dir = f"{base}/rollup"
-    ckpt = f"{base}/ckpt"
     split_ms = 1_705_276_800_000  # 2024-01-15 — mid-fixture
-    try:
+    # the partials layer and the checkpoint sit next to the landed data
+    layer: dict[str, str] = {}
+
+    def land(data_dir: str) -> None:
+        base = os.path.dirname(data_dir)
+        layer.update(rollup=f"{base}/rollup", ckpt=f"{base}/ckpt")
         sl = measurements(spark, sf_dir).select("id", "time", "value", "flag")
         with persisted_slice(sl) as m:
             m.where(F.col("time") < split_ms).write.parquet(data_dir)
@@ -158,19 +153,27 @@ def streaming_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             # scratch.py); the checkpoint pins partitioning at first
             # start, so both runs are wrapped for consistency
             with parity_stream_partitions(spark):
-                q = streaming_rollup(spark, data_dir, rollup_dir, ckpt, "day")
+                q = streaming_rollup(
+                    spark, data_dir, layer["rollup"], layer["ckpt"], "day"
+                )
             await_parity_termination(q)
             m.where(F.col("time") >= split_ms).write.mode("append").parquet(
                 data_dir
             )
-        with parity_stream_partitions(spark):
-            q = streaming_rollup(spark, data_dir, rollup_dir, ckpt, "day")
-        await_parity_termination(q)
-        compact_rollup(spark, rollup_dir, checkpoint_dir=ckpt)
-        return localize_and_cleanup(spark, read_rollup(spark, rollup_dir), base)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    def finish(_no_sink: None) -> DataFrame:
+        compact_rollup(spark, layer["rollup"], checkpoint_dir=layer["ckpt"])
+        return read_rollup(spark, layer["rollup"])
+
+    return run_parity(
+        spark,
+        "stream_parity",
+        land,
+        lambda data_dir, _qname: streaming_rollup(
+            spark, data_dir, layer["rollup"], layer["ckpt"], "day"
+        ),
+        finish,
+    )
 
 
 def streaming_current_value_parity(
@@ -186,33 +189,21 @@ def streaming_current_value_parity(
     by tests/test_engine.py's checkpointed two-append test; the memory
     sink cannot restart from a checkpoint, so the driver query runs one
     pass.)"""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import measurements
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
     from dariadb_spark.streaming.subscribe import streaming_current_value
 
-    base = tempfile.mkdtemp(prefix="dariadb_cv_parity_")
-    data_dir = f"{base}/data"
-    qname = "cv_parity_" + base.rsplit("_", 1)[-1]
-    try:
+    def land(data_dir: str) -> None:
         m = measurements(spark, sf_dir).select("id", "time", "value", "flag")
         m.write.parquet(data_dir)
-        # 15-series harness slice → small state layer (see scratch.py)
-        with parity_stream_partitions(spark):
-            q = streaming_current_value(spark, data_dir, qname)
-        await_parity_termination(q)
-        return localize_and_cleanup(
-            spark, spark.table(qname).orderBy("id"), base, qname
-        )
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    # 15-series harness slice → small state layer (see scratch.py)
+    return run_parity(
+        spark,
+        "cv_parity",
+        land,
+        lambda data_dir, qname: streaming_current_value(spark, data_dir, qname),
+        lambda sink: sink.orderBy("id"),
+    )
 
 
 def last_committed_batch(checkpoint_dir: str) -> int:

@@ -1,8 +1,7 @@
 """Streaming exceedance-episode maintenance — the alerting fold at ingest.
 
-Registered round 15 (staged round 14 with the full discipline:
-implemented + oracled + pytest parity + planted stress first,
-registered at the window rotation). The batch side is
+Registered as ``streaming_run_lengths_parity`` from ext/timeseries.py.
+The batch side is
 ``series_run_lengths_op`` (ext/timeseries.py): gaps-and-islands on the
 ``value > threshold`` predicate. THIS module is its ingest twin — the
 fold a real alerting pipeline runs, where "the episode is still open"
@@ -38,6 +37,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: one cumulative summary row per series per batch
 _OUT_DDL = (
@@ -90,11 +96,11 @@ def _runlen_fold(
     keep[:-1] = t[1:] != t[:-1]
     t, v = t[keep], v[keep]
     if last_time is not None and len(t) and int(t[0]) <= last_time:
-        # Out-of-contract input (ADVICE r14): a duplicate or
+        # Out-of-contract input: a duplicate or
         # out-of-order (id, time) arriving in a LATER micro-batch than
         # its successor would be silently folded as a NEW sample,
         # double-counting the episode walk. Fail loudly instead.
-        # Class note (r17 audit): equality raises here for the same
+        # Class note (fold taxonomy): equality raises here for the same
         # reason as the rate fold — the batch oracle LWW-dedups on
         # time, so a cross-batch duplicate is unresolvable; the
         # turning fold's equality-accept is the OTHER correct answer
@@ -144,29 +150,11 @@ def streaming_run_lengths_log(
 ) -> StreamingQuery:
     """Maintain the per-series episode summary incrementally
     (availableNow here; a production ingest runs unbounded)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(meas_dir)
+    stream = file_stream(spark, MEAS_DDL, meas_dir, max_files_per_trigger)
     log = stream.groupBy("id").applyInPandasWithState(
-        _runlen_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _runlen_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return to_memory(log, "update", query_name)
 
 def run_lengths_from_log(log: DataFrame) -> DataFrame:
     """The standing summary: the latest cumulative row per series
@@ -199,32 +187,14 @@ def streaming_run_lengths_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     must carry across micro-batches — fold one file per batch, and keep
     the standing summary. Oracle = the batch ``SERIES_RUN_LENGTHS_SQL``:
     statefulness must make batching invisible."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.ext.timeseries import FROM_MS, IDS, TO_MS
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "runlen_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=2
+        ),
+        lambda data_dir, qname: streaming_run_lengths_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        run_lengths_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_runlen_parity_")
-    data_dir = f"{base}/meas"
-    qname = "runlen_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=2)
-        with parity_stream_partitions(spark):
-            q = streaming_run_lengths_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = run_lengths_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

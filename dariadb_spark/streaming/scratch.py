@@ -1,13 +1,24 @@
-"""Scratch-dir hygiene for the streaming parity queries.
+"""The harness the streaming parity queries share.
 
-Each parity query materializes a fixture slice into a ``mkdtemp`` dir,
-drives a real streaming query over it, and returns the result.
+A parity query lands a fixture slice as parquet files in a ``mkdtemp``
+directory, folds them through a real Structured Streaming query under
+``trigger(availableNow=True)``, and returns the finished result as a
+driver-local frame. The pieces:
 
-:func:`localize_and_cleanup` collects that (tiny — parity outputs are
-tens-to-hundreds of rows) result into a driver-local Arrow LocalRelation
-whose lineage no longer references the scratch files, then removes the
-dir and drops the memory-sink view in a ``finally``, so repeated sweeps
-accumulate neither disk nor driver memory.
+* :func:`file_stream` — the one streaming reader over a directory of
+  parquet files (optionally one file per micro-batch);
+* :func:`to_memory` — the one memory sink, an ``availableNow`` stream
+  named ``query_name`` whose table is the temp view of that name;
+* :func:`run_parity` — the driver: scratch dir, landing, stream start
+  under :func:`parity_stream_partitions`, bounded await, finish
+  projection, then :func:`localize_and_cleanup`. On any failure it
+  stops the stream, drops the sink view and removes the directory.
+
+:func:`localize_and_cleanup` collects the (tiny: parity outputs are
+tens-to-hundreds of rows) result into a driver-local Arrow
+LocalRelation whose lineage no longer references the scratch files,
+then removes the dir and drops the memory-sink view, so repeated sweeps
+accumulate neither disk nor catalog entries.
 
 :func:`parity_stream_partitions` sizes the streaming state layer to the
 parity workload: the harness streams cover ≤15 series, but a stream
@@ -23,12 +34,16 @@ session default (or a larger explicit setting) is correct.
 
 from __future__ import annotations
 
+import os
 import shutil
+import tempfile
+from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from dariadb_spark.model import local_frame
 
@@ -149,15 +164,14 @@ def land_time_split(
     sort_cols: Sequence[str] = ("id", "time"),
 ) -> None:
     """Land a measurement slice as ``n_drops`` sorted single-file drops
-    cut at the ``time`` quantiles (median for 2 drops, terciles for 3 —
-    the exact cut expressions the parity modules previously inlined;
+    cut at the ``time`` quantiles (median for 2 drops, terciles for 3;
     ms-integer cuts never split sub-ms ties, so drop k strictly
     precedes drop k+1 in the batch total order). One slice scan total:
     the slice is persisted across the quantile pass and every write
     (:func:`persisted_slice`), and each drop lands via
     :func:`land_sorted`."""
-    # the tercile literals are 0.33/0.66, NOT 1/3, 2/3: the landed split
-    # is byte-identical to the parity modules' original cuts
+    # the tercile literals are 0.33/0.66, NOT 1/3, 2/3: the split they
+    # land is part of each parity's fixed, reproducible input
     if n_drops not in (2, 3):
         raise ValueError(f"land_time_split: n_drops must be 2 or 3, got {n_drops}")
     arr = "0.5" if n_drops == 2 else "0.33, 0.66"
@@ -178,6 +192,26 @@ def land_time_split(
             # first drop error-if-exists: a stale/double-landed dir
             # fails loudly instead of doubling the stream
             land_sorted(d, data_dir, sort_cols, mode="append" if i else "error")
+
+
+def interval_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The registry's interval-scan slice of the measurements fixture
+    (series ``IDS`` over the closed ``[FROM_MS, TO_MS]``, every flag) —
+    the batch input the measurement parities replay as a stream."""
+    from dariadb_spark.model import measurements
+    from dariadb_spark.operators.interval import scan_interval
+    from dariadb_spark.registry import FROM_MS, IDS, TO_MS
+
+    return scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
+
+
+def land_halves(frame: DataFrame, key: str, data_dir: str) -> None:
+    """Land ``frame`` as two parquet drops split on the parity of the
+    integer column ``key`` (even keys first, then odd), so a fold that
+    reads one file per micro-batch sees two batches. No ordering is
+    implied: the parities that land this way fold order-free state."""
+    frame.where(f"{key} % 2 = 0").write.parquet(data_dir)
+    frame.where(f"{key} % 2 = 1").write.mode("append").parquet(data_dir)
 
 
 @contextmanager
@@ -209,3 +243,88 @@ def parity_stream_partitions(
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def file_stream(
+    spark: SparkSession,
+    ddl: str,
+    path: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Stream the ``*.parquet`` files anywhere under ``path`` with the
+    declared schema ``ddl``. ``max_files_per_trigger`` bounds each
+    micro-batch (1 makes every landed file its own batch, so a fold's
+    state genuinely carries across batch boundaries; ``availableNow``
+    honors it)."""
+    reader = (
+        spark.readStream.schema(ddl)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
+
+
+def to_memory(df: DataFrame, mode: str, query_name: str) -> StreamingQuery:
+    """Start ``df`` into a memory sink in output ``mode`` under
+    ``queryName(query_name)``, draining what exists and stopping
+    (``availableNow``). The sink table is the temp view ``query_name``;
+    a production ingest swaps this sink for a parquet/Delta table."""
+    return (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def run_parity(
+    spark: SparkSession,
+    name: str,
+    land: Callable[[str], None],
+    start: Callable[[str, str], StreamingQuery],
+    finish: Callable[[DataFrame | None], DataFrame],
+    partitions: int | None = 4,
+    timeout_s: int = 600,
+) -> DataFrame:
+    """Drive one streaming parity query and return its localized result.
+
+    ``land(data_dir)`` writes the input files under a fresh scratch
+    directory; ``start(data_dir, query_name)`` starts the stream over
+    them (under :func:`parity_stream_partitions` with ``partitions``);
+    once it terminates, ``finish(sink)`` builds the result from the
+    sink view ``query_name`` — or from ``None`` when the stream has no
+    memory sink of that name (the rollup writes its partials through
+    ``foreachBatch``). The scratch directory is ``dariadb_<name>_*``
+    and the query name ``<name>_*``, unique per call.
+
+    On any failure — landing, stream, timeout or finish — the stream is
+    stopped, the sink view dropped and the directory removed before the
+    error propagates, so a failed query leaks no active stream, catalog
+    entry or disk."""
+    base = tempfile.mkdtemp(prefix=f"dariadb_{name}_")
+    data_dir = f"{base}/data"
+    qname = os.path.basename(base)[len("dariadb_"):]
+    q = None
+    try:
+        land(data_dir)
+        with parity_stream_partitions(spark, partitions):
+            q = start(data_dir, qname)
+        await_parity_termination(q, timeout_s)
+        out = finish(spark.table(qname) if q.name == qname else None)
+    except BaseException:
+        # best-effort cleanup: the original error is what propagates
+        try:
+            if q is not None:
+                q.stop()
+        except Exception:
+            pass
+        try:
+            spark.catalog.dropTempView(qname)
+        except Exception:
+            pass
+        shutil.rmtree(base, ignore_errors=True)
+        raise
+    return localize_and_cleanup(spark, out, base, qname)

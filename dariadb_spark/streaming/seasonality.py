@@ -3,15 +3,16 @@
 
 A demand planner wants the month-of-year mix LIVE as orders land. The
 mix is sums over (month, count, cents) facts — commutative-class in
-the r17 fold taxonomy: per-month count/cents addition is
-order-insensitive over the input multiset, so there is NO in-order
+the fold-contract taxonomy (tests/test_fold_contracts.py): per-month
+count/cents addition is order-insensitive over the input multiset, so
+there is NO in-order
 contract by construction (like the OHLC bar merge and unlike the
 LWW/sequence folds). State per month is TWO int64s — twelve groups
 total, the tightest state bound of any stateful twin in the repo.
 
 Cents are rounded HALF-UP in the Spark projection BEFORE the fold
-(the ADVICE r17 lesson from the LTV twin: numpy's banker's rounding
-diverges from Spark/DuckDB ``round`` on exact .5 cents), and the month
+(as in the LTV twin: numpy's banker's rounding diverges from
+Spark/DuckDB ``round`` on exact .5 cents), and the month
 comes from Spark's own ``month()`` so both engines bin identically.
 
 Each trigger EMITS the standing per-month row (update mode); the
@@ -33,6 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    persisted_slice,
+    run_parity,
+    to_memory,
+)
 
 _ORDERS_DDL = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE,"
@@ -93,33 +101,16 @@ def streaming_seasonality_state(
 ) -> StreamingQuery:
     """Maintain the per-month (count, cents) pairs incrementally
     (availableNow here; a production dashboard runs unbounded)."""
-    reader = (
-        spark.readStream.schema(_ORDERS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(orders_dir).selectExpr(
+    stream = file_stream(
+        spark, _ORDERS_DDL, orders_dir, max_files_per_trigger
+    ).selectExpr(
         "month(o_orderdate) AS month",
         "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
     )
     live = stream.groupBy("month").applyInPandasWithState(
-        _season_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _season_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        live.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(live, "update", query_name)
 
 
 def seasonality_from_state(standing: DataFrame) -> DataFrame:
@@ -150,21 +141,9 @@ def streaming_seasonality_parity(
     the standing mix. Oracle = ``ORDERS_SEASONALITY_SQL`` — the batch
     mix over the same table. No slice: the fold has exactly 12 groups,
     so per-group python overhead is nil regardless of volume."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-        persisted_slice,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_season_parity_")
-    data_dir = f"{base}/orders"
-    qname = "season_parity_" + base.rsplit("_", 1)[-1]
-    try:
+    def land(data_dir: str) -> None:
         sl = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
         )
@@ -185,13 +164,13 @@ def streaming_seasonality_parity(
                 orders.where(pred).coalesce(1).write.mode("append").parquet(
                     data_dir
                 )
-        with parity_stream_partitions(spark):
-            q = streaming_seasonality_state(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = seasonality_from_state(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    return run_parity(
+        spark,
+        "season_parity",
+        land,
+        lambda data_dir, qname: streaming_seasonality_state(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        seasonality_from_state,
+    )

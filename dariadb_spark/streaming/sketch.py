@@ -12,17 +12,25 @@ of O(buckets).
 
 The batch-equality contract (streamed cells == one-shot batch cells
 over the same corpus, regardless of how ingestion was batched) is
-pinned in tests/test_sketches.py (round 7) and driver-hash-checked via
-``streaming_sketch_parity`` (round 8), which folds the corpus one file
-per micro-batch against the batch-cell DuckDB oracle.
+pinned in tests/test_sketches.py and driver-hash-checked via
+``streaming_sketch_parity``, which folds the corpus one file per
+micro-batch against the batch-cell DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    land_halves,
+    run_parity,
+    to_memory,
+)
 
 #: matches the documents fixture; a production ingest would carry the
 #: same columns out of its landing zone.
@@ -60,16 +68,9 @@ def streaming_cms_cells(
         _h60_spark("concat(cast(depth AS string), ':', bg)")
         + f" % {CMS_WIDTH}"
     )
-    reader = (
-        spark.readStream.schema(_DOCS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        # bound each micro-batch (the parity uses 1 to force a genuine
-        # multi-batch incremental fold; availableNow honors it)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
+    # the parity passes max_files_per_trigger=1 to force a genuine
+    # multi-batch incremental fold
+    stream = file_stream(spark, _DOCS_DDL, docs_dir, max_files_per_trigger)
     cells = (
         stream.where("size(split(text, ' ')) >= 2")
         .selectExpr(f"explode({_BG_SPARK}) AS bg")
@@ -78,21 +79,25 @@ def streaming_cms_cells(
         .groupBy("depth", "bucket")
         .count()
     )
+    return to_memory(cells, "complete", query_name)
+
+
+def _latest_per_lang(sink: DataFrame, *cols: str) -> DataFrame:
+    """The standing sketch per language: the rows of the highest update
+    ordinal ``upd`` each group emitted."""
+    w = Window.partitionBy("lang")
     return (
-        cells.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        sink.withColumn("max_upd", F.max("upd").over(w))
+        .where("upd = max_upd")
+        .select("lang", *cols)
+        .orderBy("lang", cols[0])
     )
 
 
 def streaming_sketch_parity(spark: SparkSession, docs_sf_dir: str):
-    """Driver-visible CMS-maintenance parity (round 8, upgrading the
-    r7 pytest-only batch-equality pin to a hash-checked CORRECTNESS
-    row, the staging the interval-join/dedup parities went through):
-    land the documents fixture in TWO parquet drops, fold them through
-    the complete-mode streaming aggregation one file per micro-batch
+    """Driver-visible CMS-maintenance parity: land the documents
+    fixture in TWO parquet drops, fold them through the complete-mode
+    streaming aggregation one file per micro-batch
     (``maxFilesPerTrigger=1`` — the incremental fold is genuinely
     exercised, not a single-batch replay; two batches prove the
     additivity exactly as well as N, at ~1.2 s fixed machinery per
@@ -100,37 +105,21 @@ def streaming_sketch_parity(spark: SparkSession, docs_sf_dir: str):
     batch cell build over the same corpus (``STREAMING_CMS_CELLS_SQL``
     in ext/sketches.py): because CMS is additive, batching must be
     invisible."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_cms_parity_")
-    data_dir = f"{base}/docs"
-    qname = "cms_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        docs = load_table(spark, docs_sf_dir, "documents")
-        docs.where("doc_id % 2 = 0").write.parquet(data_dir)
-        docs.where("doc_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_cms_cells(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        cells = (
-            spark.table(qname)
-            .selectExpr("depth", "bucket", "count AS cnt")
-            .orderBy("depth", "bucket")
-        )
-        return localize_and_cleanup(spark, cells, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "cms_parity",
+        lambda data_dir: land_halves(
+            load_table(spark, docs_sf_dir, "documents"), "doc_id", data_dir
+        ),
+        lambda data_dir, qname: streaming_cms_cells(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        lambda sink: sink.selectExpr(
+            "depth", "bucket", "count AS cnt"
+        ).orderBy("depth", "bucket"),
+    )
 
 
 def streaming_hdr_cells(
@@ -144,10 +133,9 @@ def streaming_hdr_cells(
     percentiles per flag group, queryable mid-ingest, the quantile twin
     of :func:`streaming_cms_cells`.
 
-    STAGED for the round-9 driver window (round-8's is full): the
-    batch-equality contract is pinned in tests/test_sketches.py; the
-    driver upgrade replays it against the batch HDR bucket table like
-    every streaming parity before it.
+    The batch-equality contract is pinned in tests/test_sketches.py;
+    ``streaming_hdr_parity`` replays it against the batch HDR bucket
+    table.
 
     Same state story as the CMS: the complete-mode aggregation's state
     IS the sketch — ≤ 16·log₂(max) rows per group, bounded by
@@ -164,28 +152,15 @@ def streaming_hdr_cells(
         f"  + (shiftright(x, length(bin(x)) - {HDR_SUB_BITS + 1}) "
         f"     & {sub - 1}) END"
     )
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     cells = (
-        reader.parquet(meas_dir)
+        file_stream(spark, MEAS_DDL, meas_dir, max_files_per_trigger)
         .where("value > 0")
         .selectExpr("flag", "CAST(round(value * 100, 0) AS BIGINT) AS x")
         .selectExpr("flag", f"{bucket} AS bucket")
         .groupBy("flag", "bucket")
         .count()
     )
-    return (
-        cells.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(cells, "complete", query_name)
 
 
 def streaming_kmv_state(
@@ -196,9 +171,9 @@ def streaming_kmv_state(
 ) -> StreamingQuery:
     """Maintain per-language KMV distinct-count sketches as EXPLICIT
     bounded state (≤ KMV_K hashes per group) via
-    ``applyInPandasWithState`` — the third streaming sketch twin (CMS
-    cells round 8, HDR buckets round 9): live distinct-cardinality
-    estimates queryable mid-ingest.
+    ``applyInPandasWithState`` — the third streaming sketch twin (after
+    the CMS cells and HDR buckets): live distinct-cardinality estimates
+    queryable mid-ingest.
 
     Why a custom stateful operator instead of a streaming aggregation:
     a ``collect_set`` state grows with the TRUE distinct count — the
@@ -209,20 +184,11 @@ def streaming_kmv_state(
     union equal the k smallest of merged k-mins), so batching is
     invisible. Each emission carries an update ordinal so a consumer
     (and the parity) can select the latest standing sketch per group."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from dariadb_spark.ext.hashes import _h60_spark
     from dariadb_spark.ext.sketches import _BG_SPARK, KMV_K
 
-    reader = (
-        spark.readStream.schema(_DOCS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     hashed = (
-        reader.parquet(docs_dir)
+        file_stream(spark, _DOCS_DDL, docs_dir, max_files_per_trigger)
         .where("size(split(text, ' ')) >= 2")
         .selectExpr("lang", f"explode(array_distinct({_BG_SPARK})) AS bg")
         .selectExpr("lang", f"{_h60_spark('bg')} AS h")
@@ -253,114 +219,66 @@ def streaming_kmv_state(
 
     updated = hashed.groupBy("lang").applyInPandasWithState(
         update,
-        outputStructType="lang string, upd int, rn int, h long",
-        stateStructType="upd int, hs array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "lang string, upd int, rn int, h long",
+        "upd int, hs array<long>",
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
-    return (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(updated, "update", query_name)
 
 
 def streaming_kmv_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible KMV-maintenance parity (STAGED for round 10; the
-    CMS/HDR staging pattern): land the documents fixture in TWO parquet
-    drops, fold one file per micro-batch through the bounded-state KMV
-    update, and return the LATEST standing sketch per language (the
-    max-ordinal emission). Oracle = the batch k-smallest-distinct-hash
-    table over the same corpus — mergeability makes batching
-    invisible."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    """Driver-visible KMV-maintenance parity: land the documents
+    fixture in TWO parquet drops, fold one file per micro-batch through
+    the bounded-state KMV update, and return the LATEST standing sketch
+    per language (the max-ordinal emission). Oracle = the batch
+    k-smallest-distinct-hash table over the same corpus — mergeability
+    makes batching invisible."""
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_kmv_parity_")
-    data_dir = f"{base}/docs"
-    qname = "kmv_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        docs.where("doc_id % 2 = 0").write.parquet(data_dir)
-        docs.where("doc_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_kmv_state(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        w = Window.partitionBy("lang")
-        latest = (
-            spark.table(qname)
-            .withColumn("max_upd", F.max("upd").over(w))
-            .where("upd = max_upd")
-            .select("lang", "rn", "h")
-            .orderBy("lang", "rn")
-        )
-        return localize_and_cleanup(spark, latest, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "kmv_parity",
+        lambda data_dir: land_halves(
+            load_table(spark, sf_dir, "documents"), "doc_id", data_dir
+        ),
+        lambda data_dir, qname: streaming_kmv_state(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        lambda sink: _latest_per_lang(sink, "rn", "h"),
+    )
 
 
 def streaming_hdr_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible HDR-maintenance parity, STAGED for round 9 (the
-    streaming_sketch_parity staging pattern): land the measurements
+    """Driver-visible HDR-maintenance parity: land the measurements
     slice in TWO parquet drops, fold one file per micro-batch through
     the complete-mode HDR aggregation, return the standing bucket
     table. Oracle = the batch HDR cell build over the same rows
     (``STREAMING_HDR_CELLS_SQL`` in ext/sketches.py) — additive cells
     make batching invisible, same contract as the CMS twin."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import measurements
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_hdr_parity_")
-    data_dir = f"{base}/meas"
-    qname = "hdr_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        meas = measurements(spark, sf_dir).select(
-            "id", "time", "value", "flag"
-        )
-        meas.where("id % 2 = 0").write.parquet(data_dir)
-        meas.where("id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_hdr_cells(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        cells = (
-            spark.table(qname)
-            .selectExpr("flag", "bucket", "count AS cnt")
-            .orderBy("flag", "bucket")
-        )
-        return localize_and_cleanup(spark, cells, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "hdr_parity",
+        lambda data_dir: land_halves(
+            measurements(spark, sf_dir).select("id", "time", "value", "flag"),
+            "id",
+            data_dir,
+        ),
+        lambda data_dir, qname: streaming_hdr_cells(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        lambda sink: sink.selectExpr(
+            "flag", "bucket", "count AS cnt"
+        ).orderBy("flag", "bucket"),
+    )
 
 
 def _hll_fold(key, pdfs, state):
     """Per-language register merge (module-level so the fold-contract
     pytest can drive it): pure per-index max over the occurrence
-    stream. Commutative-class (the r17 fold taxonomy): max is
+    stream. Commutative-class (the fold taxonomy): max is
     associative/commutative AND idempotent, so re-ordered or duplicate
     occurrences can never change the registers — no in-order contract,
     by construction rather than by enforcement."""
@@ -408,20 +326,11 @@ def streaming_hll_state(
     (max is associative/commutative, the mergeability the batch union
     operator pins). Each emission carries an update ordinal so the
     parity can select the latest standing registers per group."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from dariadb_spark.ext.hashes import _h60_spark
     from dariadb_spark.ext.sketches import _BG_SPARK, HLL_M, HLL_RHO_MAX
 
-    reader = (
-        spark.readStream.schema(_DOCS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     ranked = (
-        reader.parquet(docs_dir)
+        file_stream(spark, _DOCS_DDL, docs_dir, max_files_per_trigger)
         .where("size(split(text, ' ')) >= 2")
         .selectExpr("lang", f"explode({_BG_SPARK}) AS item")
         .selectExpr("lang", f"{_h60_spark('item')} AS h")
@@ -439,62 +348,31 @@ def streaming_hll_state(
 
     updated = ranked.groupBy("lang").applyInPandasWithState(
         _hll_fold,
-        outputStructType="lang string, upd int, idx int, m int",
-        stateStructType="upd int, regs array<int>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "lang string, upd int, idx int, m int",
+        "upd int, regs array<int>",
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
-    return (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(updated, "update", query_name)
 
 
 def streaming_hll_parity(spark: SparkSession, sf_dir: str):
-    """Driver-visible HLL-maintenance parity (STAGED for round 12; the
-    CMS/HDR/KMV staging pattern): land the documents fixture in TWO
-    parquet drops, fold one file per micro-batch through the 16-int
-    register update, and return the LATEST standing registers per
-    language. Oracle = the batch dense register table over the same
-    corpus (``STREAMING_HLL_REGS_SQL`` in ext/sketches.py) — per-index
-    max makes batching invisible."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    """Driver-visible HLL-maintenance parity: land the documents
+    fixture in TWO parquet drops, fold one file per micro-batch through
+    the 16-int register update, and return the LATEST standing
+    registers per language. Oracle = the batch dense register table
+    over the same corpus (``STREAMING_HLL_REGS_SQL`` in ext/sketches.py)
+    — per-index max makes batching invisible."""
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_hll_parity_")
-    data_dir = f"{base}/docs"
-    qname = "hll_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        docs.where("doc_id % 2 = 0").write.parquet(data_dir)
-        docs.where("doc_id % 2 = 1").write.mode("append").parquet(data_dir)
-        with parity_stream_partitions(spark):
-            q = streaming_hll_state(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        w = Window.partitionBy("lang")
-        latest = (
-            spark.table(qname)
-            .withColumn("max_upd", F.max("upd").over(w))
-            .where("upd = max_upd")
-            .select("lang", "idx", "m")
-            .orderBy("lang", "idx")
-        )
-        return localize_and_cleanup(spark, latest, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+    return run_parity(
+        spark,
+        "hll_parity",
+        lambda data_dir: land_halves(
+            load_table(spark, sf_dir, "documents"), "doc_id", data_dir
+        ),
+        lambda data_dir, qname: streaming_hll_state(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        lambda sink: _latest_per_lang(sink, "idx", "m"),
+    )

@@ -4,7 +4,7 @@
 A catalog service wants the per-brand (price, size) dominance front
 LIVE as parts land. The front is a SET statistic — order-insensitive
 over the input multiset — so this twin sits in the commutative class
-of the r17 fold taxonomy (like the seasonality mix and unlike the
+of the fold-contract taxonomy (like the seasonality mix and unlike the
 LWW/sequence folds): there is no in-order contract by construction,
 and the batching-invariance pin asserts the FINAL front is identical
 however the stream is cut.
@@ -27,8 +27,8 @@ through the SHARED ``skyline_filter`` — the same two-frame window
 pass the batch operator runs, column-identical to the oracle.
 
 Cents are rounded HALF-UP in the Spark projection BEFORE the fold
-(the ADVICE r17 lesson: numpy's banker's rounding diverges from
-Spark/DuckDB ``round`` on exact .5 cents).
+(numpy's banker's rounding diverges from Spark/DuckDB ``round`` on
+exact .5 cents).
 
 Scale: state is O(front) per brand — value-domain bounded, not
 throughput bounded; per-batch work is O(batch · log front); the
@@ -46,6 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    persisted_slice,
+    run_parity,
+    to_memory,
+)
 
 _PART_DDL = (
     "p_partkey BIGINT, p_brand STRING, p_size INT,"
@@ -139,38 +146,21 @@ def streaming_skyline_log(
 ) -> StreamingQuery:
     """Maintain the per-brand front-candidate log incrementally
     (availableNow here; a production catalog runs unbounded)."""
-    reader = (
-        spark.readStream.schema(_PART_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
     # the batch operator's NULL-coordinate contract, applied BEFORE
     # the fold: a row without both measures is not a point (and a NaN
     # reaching the fold's to_numpy(int64) would kill the stream)
-    stream = reader.parquet(part_dir).selectExpr(
+    stream = file_stream(
+        spark, _PART_DDL, part_dir, max_files_per_trigger
+    ).selectExpr(
         "p_brand",
         "p_partkey",
         "CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents",
         "CAST(p_size AS BIGINT) AS p_size",
     ).where("price_cents IS NOT NULL AND p_size IS NOT NULL")
     log = stream.groupBy("p_brand").applyInPandasWithState(
-        _skyline_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _skyline_fold, _OUT_DDL, _STATE_DDL, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(log, "append", query_name)
 
 
 def skyline_from_log(log: DataFrame) -> DataFrame:
@@ -195,21 +185,9 @@ def streaming_skyline_parity(
     definitional dominance test over the same table. No slice: the
     fold has exactly |brands| groups (25 at fixture scale), so
     per-group python overhead is nil regardless of volume."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.model import load_table
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-        persisted_slice,
-    )
 
-    base = tempfile.mkdtemp(prefix="dariadb_skyline_parity_")
-    data_dir = f"{base}/part"
-    qname = "skyline_parity_" + base.rsplit("_", 1)[-1]
-    try:
+    def land(data_dir: str) -> None:
         sl = load_table(spark, sf_dir, "part").select(
             "p_partkey", "p_brand", "p_size", "p_retailprice"
         )
@@ -231,13 +209,13 @@ def streaming_skyline_parity(
                 part.where(pred).coalesce(1).write.mode("append").parquet(
                     data_dir
                 )
-        with parity_stream_partitions(spark):
-            q = streaming_skyline_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = skyline_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    return run_parity(
+        spark,
+        "skyline_parity",
+        land,
+        lambda data_dir, qname: streaming_skyline_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        skyline_from_log,
+    )

@@ -20,6 +20,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dariadb_spark.model import MEAS_DDL, flag_predicate, ids_predicate
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    persisted_slice,
+    run_parity,
+    to_memory,
+)
 
 
 def subscribe(
@@ -38,12 +45,8 @@ def subscribe(
     ``available_now=True`` drains what exists then stops (test mode);
     the default runs continuously with small triggers.
     """
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-        .where(ids_predicate(ids) & flag_predicate(flag))
+    stream = file_stream(spark, MEAS_DDL, data_dir).where(
+        ids_predicate(ids) & flag_predicate(flag)
     )
     writer = stream.writeStream.foreachBatch(callback)
     if checkpoint:
@@ -76,12 +79,7 @@ def streaming_downsample(
     from dariadb_spark.operators.downsample import MS
 
     width_ms = MS[interval]
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
+    stream = file_stream(spark, MEAS_DDL, data_dir)
     agg = (
         stream.withColumn("ts", F.timestamp_millis(F.col("time")))
         .withWatermark("ts", watermark)
@@ -103,75 +101,7 @@ def streaming_downsample(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_downsample_append(
-    spark: SparkSession,
-    data_dir: str,
-    interval: str = "hour",
-    watermark: str = "2 hours",
-    query_name: str = "downsample_append",
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """The APPEND-mode twin of :func:`streaming_downsample`: each
-    (id, bucket) row is emitted exactly once, when the event-time
-    watermark passes the bucket end — the production shape for a
-    downstream sink that can't upsert. This is where the T3 late-data
-    policy actually bites (complete mode re-emits everything, so
-    lateness is invisible there):
-
-    * a row later than its bucket but NEWER than the watermark merges
-      into the still-open bucket state (kept);
-    * a row OLDER than the watermark is dropped at ingest — its bucket
-      has already been finalized and emitted (the trade documented in
-      SCALE.md §5: state size vs late acceptance; the batch path is the
-      reconciliation of record, exactly like the reference's
-      merge-on-read accepts any lateness).
-
-    ``max_files_per_trigger`` bounds each micro-batch so a backlog
-    replays as many ordered batches — the watermark advances batch by
-    batch, which is what lets tests (and reprocessing audits) drive a
-    controlled out-of-order sequence through the real engine.
-    """
-    from dariadb_spark.operators.downsample import MS
-
-    width_ms = MS[interval]
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_dir)
-    )
-    agg = (
-        stream.withColumn("ts", F.timestamp_millis(F.col("time")))
-        .withWatermark("ts", watermark)
-        .groupBy("id", F.window("ts", f"{width_ms} milliseconds"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "id",
-            F.unix_millis(F.col("window.start")).alias("bucket_ms"),
-            "cnt",
-            "sum_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(agg, "complete", query_name)
 
 
 def streaming_current_value(
@@ -181,12 +111,7 @@ def streaming_current_value(
 ) -> StreamingQuery:
     """Latest (time, value, flag) per id maintained incrementally; query the
     in-memory table ``query_name`` for the live snapshot (update mode)."""
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
+    stream = file_stream(spark, MEAS_DDL, data_dir)
     # ordering key must be the FULL (time, value, flag) tuple — the same
     # LWW total order the batch current_value uses; ordering by
     # (time, value) alone could surface a different flag on exact
@@ -197,13 +122,7 @@ def streaming_current_value(
             F.struct("time", "value", "flag"),
         ).alias("m")
     ).select("id", "m.time", "m.value", "m.flag")
-    return (
-        latest.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(latest, "complete", query_name)
 
 
 def streaming_sessionize(
@@ -221,12 +140,7 @@ def streaming_sessionize(
     and evict (T3 policy knob — the reference instead accepts all late
     appends via merge-on-read; reconcile with the batch query for exact
     reference semantics)."""
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
+    stream = file_stream(spark, MEAS_DDL, data_dir)
     agg = (
         stream.withColumn("ts", F.timestamp_millis(F.col("time")))
         .withWatermark("ts", watermark)
@@ -239,13 +153,7 @@ def streaming_sessionize(
             "n_events",
         )
     )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(agg, "complete", query_name)
 
 
 def streaming_sessionize_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,38 +165,16 @@ def streaming_sessionize_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental session merge must reproduce batch sessions exactly
     (the fixture has no late data beyond the 1-day watermark, so no
     sessions evict early)."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.registry import FROM_MS, IDS, TO_MS
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    # 15-series harness slice → small state layer (see scratch.py)
+    return run_parity(
+        spark,
+        "sess_parity",
+        lambda data_dir: interval_slice(spark, sf_dir).write.parquet(data_dir),
+        lambda data_dir, qname: streaming_sessionize(
+            spark, data_dir, query_name=qname
+        ),
+        lambda sink: sink.orderBy("id", "session_start_ms"),
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_sess_parity_")
-    data_dir = f"{base}/data"
-    qname = "sess_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        scan_interval(
-            measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0
-        ).write.parquet(data_dir)
-        # 15-series harness slice → small state layer (see scratch.py)
-        with parity_stream_partitions(spark):
-            q = streaming_sessionize(spark, data_dir, query_name=qname)
-        await_parity_termination(q)
-        return localize_and_cleanup(
-            spark,
-            spark.table(qname).orderBy("id", "session_start_ms"),
-            base,
-            qname,
-        )
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
 
 
 def streaming_interval_join(
@@ -310,10 +196,7 @@ def streaming_interval_join(
     watermarks pass the join window)."""
     def side(flag: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(MEAS_DDL)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(data_dir)
+            file_stream(spark, MEAS_DDL, data_dir)
             .where(flag_predicate(flag))
             .select(
                 F.col("id").alias(f"{prefix}_id"),
@@ -338,116 +221,70 @@ def streaming_interval_join(
         F.col("r_time").alias("ctx_time"),
         F.col("r_value").alias("ctx_value"),
     )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(joined, "append", query_name)
 
 
 def streaming_interval_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible stream-stream join parity (the T-join surface,
-    upgraded from pytest-only to a hash-checked driver query in round
-    7): run the REAL watermarked interval join — error events ⋈ the
-    same-series events of their trailing 15 minutes — over the fixture
-    slice via one availableNow pass, then aggregate the emitted pairs
-    per error event. Oracle = the equivalent batch range-join SQL
+    """Driver-visible stream-stream join parity (the T-join surface as
+    a hash-checked driver query): run the REAL watermarked interval
+    join — error events ⋈ the same-series events of their trailing 15
+    minutes — over the fixture slice via one availableNow pass, then
+    aggregate the emitted pairs per error event. Oracle = the equivalent batch range-join SQL
     (the `ext_range_context` shape without the flag column the stream
     join doesn't carry): the stream's closed [t−W, t] join bounds and
     inner-join eager emission must reproduce the batch pair set
     exactly. The pair aggregation runs on the memory sink (batch), so
     what is hash-checked is the full pair multiset, not a lossy
     summary."""
-    import shutil
-    import tempfile
-
     from dariadb_spark.ext.timeseries import RANGE_W_MS
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.registry import FLAG_ERROR, FROM_MS, IDS, TO_MS
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
+    from dariadb_spark.registry import FLAG_ERROR
 
-    base = tempfile.mkdtemp(prefix="dariadb_ssj_parity_")
-    data_dir = f"{base}/data"
-    qname = "ssj_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        scan_interval(
-            measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0
-        ).write.parquet(data_dir)
-        # 15-series harness slice → small state layer (see scratch.py)
-        with parity_stream_partitions(spark):
-            q = streaming_interval_join(
-                spark,
-                data_dir,
-                left_flag=FLAG_ERROR,
-                right_flag=0,  # pass-all context side (F3 semantics)
-                lookback_ms=RANGE_W_MS,
-                query_name=qname,
-            )
-        await_parity_termination(q)
-        agg = (
-            spark.table(qname)
-            .groupBy("id", "time", "value")
+    def finish(sink: DataFrame) -> DataFrame:
+        return (
+            sink.groupBy("id", "time", "value")
             .agg(
                 F.count("*").alias("n_ctx"),
                 F.round(F.sum("ctx_value"), 4).alias("sum_ctx_value"),
             )
             .orderBy("id", "time", "value")
         )
-        return localize_and_cleanup(spark, agg, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    # 15-series harness slice → small state layer (see scratch.py)
+    return run_parity(
+        spark,
+        "ssj_parity",
+        lambda data_dir: interval_slice(spark, sf_dir).write.parquet(data_dir),
+        lambda data_dir, qname: streaming_interval_join(
+            spark,
+            data_dir,
+            left_flag=FLAG_ERROR,
+            right_flag=0,  # pass-all context side (F3 semantics)
+            lookback_ms=RANGE_W_MS,
+            query_name=qname,
+        ),
+        finish,
+    )
 
 
 def streaming_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible ingest-idempotence parity (round 7): write the
+    """Driver-visible ingest-idempotence parity: write the
     fixture slice TWICE (the at-least-once replay failure mode the
     operator exists for), run the REAL streaming exact-dedup over the
     doubled store, and return the emitted rows. Oracle = ``SELECT
     DISTINCT`` over the single slice: every row must come through
-    exactly once despite arriving twice — the fifth-plus streaming
-    surface under the hash gate, previously pytest-only."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.registry import FROM_MS, IDS, TO_MS
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        localize_and_cleanup,
-        parity_stream_partitions,
-    )
-
-    base = tempfile.mkdtemp(prefix="dariadb_dedup_parity_")
-    data_dir = f"{base}/data"
-    qname = "dedup_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        from dariadb_spark.streaming.scratch import persisted_slice
-
-        with persisted_slice(sl) as s:
+    exactly once despite arriving twice."""
+    def land(data_dir: str) -> None:
+        with persisted_slice(interval_slice(spark, sf_dir)) as s:
             s.write.parquet(data_dir)
             s.write.mode("append").parquet(data_dir)  # the replay
-        with parity_stream_partitions(spark):
-            q = streaming_dedup_exact(spark, data_dir, qname)
-        await_parity_termination(q)
-        return localize_and_cleanup(
-            spark,
-            spark.table(qname).orderBy("id", "time", "value", "flag"),
-            base,
-            qname,
-        )
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
+
+    return run_parity(
+        spark,
+        "dedup_parity",
+        land,
+        lambda data_dir, qname: streaming_dedup_exact(spark, data_dir, qname),
+        lambda sink: sink.orderBy("id", "time", "value", "flag"),
+    )
 
 
 def streaming_dedup_exact(
@@ -467,12 +304,7 @@ def streaming_dedup_exact(
     ``dropDuplicatesWithinWatermark``: state holds only the watermark
     window — the 100 TB deployment knob, catching the actual failure
     mode (replays arrive close to the original) with bounded memory."""
-    stream = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
+    stream = file_stream(spark, MEAS_DDL, data_dir)
     if watermark is None:
         deduped = stream.dropDuplicates(["id", "time", "value", "flag"])
     else:
@@ -481,10 +313,4 @@ def streaming_dedup_exact(
         ).withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
             ["id", "time", "value", "flag"]
         ).drop("ts")
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(deduped, "append", query_name)

@@ -1,9 +1,8 @@
 """Streaming turning-points maintenance — the ingest twin of
 ``ext_series_turning_points``.
 
-STAGED for the round-17 driver window (the staging every late operator
-goes through: implemented + oracled + pytest parity + planted stress
-now, registered at the next window rotation). The batch side is
+Registered as ``streaming_turning_parity`` from ext/timeseries.py.
+The batch side is
 ``series_turning_points_op`` (ext/timeseries.py): per-series count of
 STRICT local extrema in the tie-safe (time, value, flag) sample order,
 plus the Kendall E/Var normalization. THIS module is its ingest twin —
@@ -19,7 +18,7 @@ sums — extremum detection reads the SEQUENCE, so there IS an in-order
 contract: within a batch rows are sorted by the tie-safe total order,
 and a row arriving in a LATER micro-batch that sorts at-or-before the
 standing last key raises ``ValueError`` loudly instead of silently
-corrupting the census (the r14/r15 rate-fold hardening precedent;
+corrupting the census (the rate fold's in-order guard;
 exact-duplicate rows are fine WITHIN a batch, where the sort makes
 them adjacent and equal neighbors never count as extrema).
 
@@ -44,6 +43,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dariadb_spark.model import MEAS_DDL
+from dariadb_spark.streaming.scratch import (
+    file_stream,
+    interval_slice,
+    land_time_split,
+    run_parity,
+    to_memory,
+)
 
 #: emitted per batch per touched series: the standing census counts —
 #: the turning_report input schema
@@ -94,7 +100,7 @@ def _turning_fold(
         # a later micro-batch is an in-order plateau sample (equal
         # neighbors are never strict extrema, so the batch operator
         # counts duplicate-bearing input fine — the streaming twin must
-        # too; ADVICE r16).
+        # too).
         raise ValueError(
             f"turning-points fold: sample (id={key[0]}, time={int(t[0])})"
             f" sorts before the standing last key"
@@ -127,33 +133,16 @@ def streaming_turning_log(
 ) -> StreamingQuery:
     """Maintain the per-series census incrementally (availableNow here;
     a production monitor runs unbounded)."""
-    reader = (
-        spark.readStream.schema(MEAS_DDL)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(meas_dir).selectExpr(
+    stream = file_stream(
+        spark, MEAS_DDL, meas_dir, max_files_per_trigger
+    ).selectExpr(
         "id", "time", "value", "flag",
         "CAST(round(value * 100) AS BIGINT) AS y",
     )
     log = stream.groupBy("id").applyInPandasWithState(
-        _turning_fold,
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _turning_fold, _OUT_DDL, _STATE_DDL, "update", GroupStateTimeout.NoTimeout
     )
-    return (
-        log.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_memory(log, "update", query_name)
 
 
 def turning_from_log(log: DataFrame) -> DataFrame:
@@ -178,32 +167,14 @@ def streaming_turning_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-window must carry ypp/yp across both cuts), fold one file per
     micro-batch, and report the standing table. Oracle = the batch
     ``SERIES_TURNING_POINTS_SQL``."""
-    import shutil
-    import tempfile
-
-    from dariadb_spark.model import measurements
-    from dariadb_spark.operators.interval import scan_interval
-    from dariadb_spark.registry import FROM_MS, IDS, TO_MS
-    from dariadb_spark.streaming.scratch import (
-        await_parity_termination,
-        land_time_split,
-        localize_and_cleanup,
-        parity_stream_partitions,
+    return run_parity(
+        spark,
+        "turning_parity",
+        lambda data_dir: land_time_split(
+            interval_slice(spark, sf_dir), data_dir, n_drops=3
+        ),
+        lambda data_dir, qname: streaming_turning_log(
+            spark, data_dir, qname, max_files_per_trigger=1
+        ),
+        turning_from_log,
     )
-
-    base = tempfile.mkdtemp(prefix="dariadb_turning_parity_")
-    data_dir = f"{base}/meas"
-    qname = "turning_parity_" + base.rsplit("_", 1)[-1]
-    try:
-        sl = scan_interval(measurements(spark, sf_dir), IDS, FROM_MS, TO_MS, 0)
-        land_time_split(sl, data_dir, n_drops=3)
-        with parity_stream_partitions(spark):
-            q = streaming_turning_log(
-                spark, data_dir, qname, max_files_per_trigger=1
-            )
-        await_parity_termination(q)
-        out = turning_from_log(spark.table(qname))
-        return localize_and_cleanup(spark, out, base, qname)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise

@@ -896,71 +896,6 @@ def test_streaming_downsample_matches_batch(spark, tmp_path):
     assert live == batch
 
 
-def test_streaming_watermark_late_data_policy(spark, tmp_path):
-    """T3's late-data corner, driven through the REAL engine: six
-    ordered micro-batches (maxFilesPerTrigger=1, one file each) with
-    out-of-order appends straddling the 2h watermark of an append-mode
-    hourly downsample. A late row NEWER than the watermark merges into
-    its (still-open) bucket; a row OLDER than the watermark is dropped
-    — its bucket was already finalized and emitted. This is the policy
-    documented in SCALE.md §5 (batch path = reconciliation of record)."""
-    import os
-    import shutil
-
-    from dariadb_spark.streaming.subscribe import streaming_downsample_append
-
-    H = 3_600_000
-    base = 1_704_067_200_000  # 2024-01-01 00:00:00 UTC
-    batches = [
-        # b1: two rows in the 00:00 bucket
-        [(0, base + 600_000, 1.0, 1), (0, base + 1_200_000, 2.0, 1)],
-        # b2: 04:00 → watermark after batch = 02:00; 00:00 bucket closes
-        [(0, base + 4 * H, 3.0, 1)],
-        # b3: 03:30 — LATE but newer than the 02:00 watermark → KEPT
-        [(0, base + 3 * H + 1_800_000, 4.0, 1)],
-        # b4: 00:25 — older than the watermark → DROPPED (bucket 00:00
-        # already emitted with cnt=2)
-        [(0, base + 1_500_000, 99.0, 1)],
-        # b5: 08:00 → watermark 06:00; buckets 03:00 and 04:00 close
-        [(0, base + 8 * H, 5.0, 1)],
-        # b6: 12:00 → watermark 10:00; bucket 08:00 closes (12:00 itself
-        # never closes — append emits only watermark-passed buckets)
-        [(0, base + 12 * H, 6.0, 1)],
-    ]
-    stream_dir = tmp_path / "late_stream"
-    stream_dir.mkdir()
-    for i, rows in enumerate(batches):
-        staging = str(tmp_path / f"stage_{i}")
-        spark.createDataFrame(
-            rows, "id bigint, time bigint, value double, flag bigint"
-        ).coalesce(1).write.parquet(staging)
-        part = next(
-            p for p in os.listdir(staging) if p.endswith(".parquet")
-        )
-        dst = str(stream_dir / f"batch_{i}.parquet")
-        shutil.move(f"{staging}/{part}", dst)
-        # the file source replays pre-existing files oldest-mtime-first;
-        # pin distinct mtimes so batch order is deterministic
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    q = streaming_downsample_append(
-        spark, str(stream_dir), "hour", "2 hours",
-        query_name="late_policy_test",
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.id, r.bucket_ms): (r.cnt, r.sum_value)
-        for r in spark.table("late_policy_test").collect()
-    }
-    assert got == {
-        (0, base): (2, 3.0),              # late 99.0 NOT here — dropped
-        (0, base + 3 * H): (1, 4.0),      # in-watermark late row kept
-        (0, base + 4 * H): (1, 3.0),
-        (0, base + 8 * H): (1, 5.0),
-        # base+12h absent: its bucket never passed the watermark
-    }
-    assert not any(s == 99.0 for _, s in got.values())
-
-
 def test_streaming_anomaly_alerts_batch_split_invariant(spark, tmp_path):
     """Alerts are a pure fold over the per-series time order, so HOW the
     ordered stream is chopped into micro-batches must not matter: one

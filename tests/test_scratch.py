@@ -1,6 +1,8 @@
-"""Scratch/localize hygiene guards for the streaming parity queries."""
+"""Scratch/localize hygiene guards and the shared parity driver of the
+streaming parity queries."""
 
-import os
+import glob
+import tempfile
 
 import pytest
 
@@ -80,3 +82,136 @@ def test_parity_stream_partitions_scopes_and_restores(spark):
         with parity_stream_partitions(spark, 4):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+# --- run_parity: the shared parity driver ----------------------------------
+
+_MEAS_DDL = "id BIGINT, time BIGINT, value DOUBLE, flag BIGINT"
+
+
+def _land_six_rows(spark):
+    def land(data_dir):
+        spark.range(6).selectExpr(
+            "id % 2 AS id", "id AS time", "CAST(id AS DOUBLE) AS value",
+            "0L AS flag",
+        ).coalesce(1).write.parquet(data_dir)
+
+    return land
+
+
+def _drive(spark, name, land, start, finish, **kw):
+    """Run ``run_parity`` with ``start`` wrapped to record the query name
+    it was handed; return (result or raised exception, query names)."""
+    from dariadb_spark.streaming.scratch import run_parity
+
+    qnames = []
+
+    def recording_start(data_dir, qname):
+        qnames.append(qname)
+        return start(data_dir, qname)
+
+    try:
+        out = run_parity(
+            spark, name, land, recording_start, finish, partitions=3, **kw
+        )
+    except Exception as exc:  # noqa: BLE001 — the caller asserts on it
+        out = exc
+    return out, qnames
+
+
+def _assert_clean(spark, name, qnames, prev_partitions):
+    assert glob.glob(f"{tempfile.gettempdir()}/dariadb_{name}_*") == []
+    for qname in qnames:
+        assert not spark.catalog.tableExists(qname)
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_partitions
+
+
+def test_run_parity_returns_localized_rows_and_cleans_up(spark):
+    from dariadb_spark.streaming.scratch import file_stream, to_memory
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    out, qnames = _drive(
+        spark,
+        "harness_ok",
+        _land_six_rows(spark),
+        lambda data_dir, qname: to_memory(
+            file_stream(spark, _MEAS_DDL, data_dir, 1).groupBy("id").count(),
+            "complete",
+            qname,
+        ),
+        lambda sink: sink.orderBy("id"),
+    )
+    assert [tuple(r) for r in out.collect()] == [(0, 3), (1, 3)]
+    assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(qnames) == 1 and qnames[0].startswith("harness_ok_")
+    _assert_clean(spark, "harness_ok", qnames, prev)
+
+
+def test_run_parity_cleans_up_when_the_landing_raises(spark):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def land(data_dir):
+        raise RuntimeError("landing failed")
+
+    out, qnames = _drive(
+        spark, "harness_land", land, None, lambda sink: sink
+    )
+    assert isinstance(out, RuntimeError) and "landing failed" in str(out)
+    assert qnames == []  # the stream never started
+    _assert_clean(spark, "harness_land", qnames, prev)
+
+
+def test_run_parity_cleans_up_when_the_fold_raises(spark):
+    """A fold that raises inside the stream terminates it with an error;
+    its memory-sink view would otherwise stay in the catalog."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from dariadb_spark.streaming.scratch import file_stream, to_memory
+
+    def bad_fold(key, pdfs, state):
+        raise ValueError("fold boom")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    out, qnames = _drive(
+        spark,
+        "harness_fold",
+        _land_six_rows(spark),
+        lambda data_dir, qname: to_memory(
+            file_stream(spark, _MEAS_DDL, data_dir)
+            .groupBy("id")
+            .applyInPandasWithState(
+                bad_fold, "id BIGINT", "n BIGINT", "update",
+                GroupStateTimeout.NoTimeout,
+            ),
+            "update",
+            qname,
+        ),
+        lambda sink: sink,
+    )
+    assert isinstance(out, Exception) and "fold boom" in str(out)
+    assert len(qnames) == 1
+    _assert_clean(spark, "harness_fold", qnames, prev)
+
+
+def test_run_parity_cleans_up_when_the_await_times_out(spark):
+    """A stream that never terminates (an unbounded rate source, not
+    availableNow) hits ``timeout_s``: the harness stops it, drops its
+    sink view and removes the scratch dir before raising."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    out, qnames = _drive(
+        spark,
+        "harness_timeout",
+        lambda data_dir: None,
+        lambda data_dir, qname: spark.readStream.format("rate")
+        .option("rowsPerSecond", 1)
+        .load()
+        .writeStream.format("memory")
+        .queryName(qname)
+        .start(),
+        lambda sink: sink,
+        timeout_s=2,
+    )
+    assert isinstance(out, TimeoutError)
+    assert len(qnames) == 1
+    _assert_clean(spark, "harness_timeout", qnames, prev)
