@@ -25,10 +25,15 @@ from collections.abc import Callable, Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
 from dariadb_spark.functions.statistics import apply_functions
-from dariadb_spark.model import MEAS_FIELDS, meas_table, measurements
+from dariadb_spark.model import (
+    MEAS_FIELDS,
+    meas_table,
+    measurements,
+    scan_predicate_sql,
+    verb_sql,
+)
 from dariadb_spark.operators.asof import current_value as _current_value
 from dariadb_spark.operators.asof import read_time_point as _read_time_point
 from dariadb_spark.operators.downsample import downsample as _downsample
@@ -180,18 +185,32 @@ class TsEngine:
     ) -> DataFrame:
         """J2+F1–F3 composed: resolve a hierarchical name glob
         (``host1.*``) through the catalog and scan the matching series —
-        a broadcast join against the matched catalog slice, so the id
-        set never round-trips through the driver (the scale-safe form of
-        ``read_interval(ids=...)`` when names drive the query). Returns
-        (id, name, time, value, flag) time-ordered per series."""
-        from dariadb_spark.operators.interval import scan_interval
+        a broadcast join against the catalog filtered by the glob, so the
+        id set never round-trips through the driver (the scale-safe form
+        of ``read_interval(ids=...)`` when names drive the query).
+        Returns (id, name, time, value, flag) time-ordered per series.
 
-        matched = self.scheme.match(pattern)
-        scanned = scan_interval(self.meas(), None, from_ms, to_ms, flag)
-        return (
-            scanned.join(F.broadcast(matched), "id")
-            .select("id", "name", "time", "value", "flag")
-            .orderBy("id", "time", "value", "flag")
+        One SQL statement in the store frame's session: the catalog
+        frame is built in that session too, and the glob reaches the
+        text only as the named parameter ``:pattern`` (a LIKE pattern
+        in which every character but ``*`` and ``?`` matches itself).
+        Like ``read_interval`` with ids, the answer is a request's: it is
+        sorted in one partition above the parallel scan and join
+        (``REPARTITION(1)`` + ``SORT BY``), one Spark job rather than a
+        range sort's sampling jobs."""
+        meas = self.meas()
+        return verb_sql(
+            meas,
+            "m.id AS id, c.name AS name, m.time AS time, m.value AS value, "
+            "m.flag AS flag FROM {m} m JOIN {c} c ON m.id = c.id "
+            "WHERE c.name LIKE :pattern AND "
+            + scan_predicate_sql(meas, None, from_ms, to_ms, flag),
+            True,
+            "id, time, value, flag",
+            gather="REPARTITION",
+            hints=("BROADCAST(c)",),
+            args={"pattern": self.scheme._glob_to_like(pattern)},
+            c=self.scheme._frame(meas.sparkSession),
         )
 
     def foreach(
@@ -211,7 +230,7 @@ class TsEngine:
     def read_time_point(
         self, ids: list[int], time_point_ms: int, flag: int = 0
     ) -> DataFrame:
-        return _read_time_point(self.spark, self.meas(), ids, time_point_ms, flag)
+        return _read_time_point(self.meas(), ids, time_point_ms, flag)
 
     def current_value(self, ids: list[int] | None = None, flag: int = 0) -> DataFrame:
         return _current_value(self.meas(), ids, flag)
@@ -438,6 +457,9 @@ class TsEngine:
             n_buckets,
             path=str(self.store.root / "bucketed"),
         )
+        # the write ran in the store frame's (serving) session; this
+        # session may still hold the table's earlier file listing
+        self.spark.catalog.refreshTable(name)
         return TsEngine(
             self.spark, lambda: self.spark.table(name), scheme=self.scheme
         )

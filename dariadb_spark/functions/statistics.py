@@ -4,9 +4,10 @@ percentile90, percentile99, sigma, minimum, maximum, count, sum).
 
 The reference evaluates functions requested *by name* over one series'
 interval, silently ignoring unknown names (Calculator::apply). Here each
-name maps to a pair of equivalent expressions:
+name maps to a pair of equivalent aggregate texts:
 
-* a Spark ``Column`` aggregate (JVM-side, whole-stage-codegen'd), and
+* the Spark SQL rendering, used by :func:`apply_functions` and (through
+  ``F.expr``) by ``downsample_to_series``, and
 * the DuckDB SQL rendering used by the correctness oracle,
 
 so the registry is the single source of truth for both engines.
@@ -21,53 +22,44 @@ SURVEY.md §7.3):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from dariadb_spark.model import (
-    flag_predicate,
-    ids_predicate,
-    pushdown_time_bounds,
-    sort_result,
-)
+from dariadb_spark.model import scan_predicate_sql, verb_sql
 
 ROUND = 4
 
 
-def _r(col: Column) -> Column:
-    return F.round(col, ROUND)
-
-
-#: name → (spark aggregate over `value`, duckdb aggregate SQL over `value`)
-FUNCTION_REGISTRY: dict[str, tuple[Callable[[], Column], str]] = {
+#: name → (Spark SQL aggregate over `value`, DuckDB aggregate over `value`)
+FUNCTION_REGISTRY: dict[str, tuple[str, str]] = {
     # average as round(sum,6)/count, NOT round(avg,4): fixture values are
     # 2-decimal so true means land exactly on .xxxx5 rounding boundaries,
     # where Spark (HALF_UP on shortest decimal repr) and DuckDB (binary
     # rounding) disagree. The rounded sum is bit-identical across engines
     # and IEEE division is deterministic → exact float equality.
     "average": (
-        lambda: F.round(F.sum("value"), 6) / F.count("value"),
+        "(round(sum(value), 6) / count(value))",
         "(round(sum(value), 6) / count(value))",
     ),
     "median": (
-        lambda: _r(F.expr("percentile(value, 0.5)")),
+        f"round(percentile(value, 0.5), {ROUND})",
         f"round(quantile_cont(value, 0.5), {ROUND})",
     ),
     "percentile90": (
-        lambda: _r(F.expr("percentile(value, 0.9)")),
+        f"round(percentile(value, 0.9), {ROUND})",
         f"round(quantile_cont(value, 0.9), {ROUND})",
     ),
     "percentile99": (
-        lambda: _r(F.expr("percentile(value, 0.99)")),
+        f"round(percentile(value, 0.99), {ROUND})",
         f"round(quantile_cont(value, 0.99), {ROUND})",
     ),
-    "sigma": (lambda: _r(F.stddev_pop("value")), f"round(stddev_pop(value), {ROUND})"),
-    "minimum": (lambda: F.min("value"), "min(value)"),
-    "maximum": (lambda: F.max("value"), "max(value)"),
-    "count": (lambda: F.count("value"), "count(value)"),
-    "sum": (lambda: _r(F.sum("value")), f"round(sum(value), {ROUND})"),
+    "sigma": (
+        f"round(stddev_pop(value), {ROUND})",
+        f"round(stddev_pop(value), {ROUND})",
+    ),
+    "minimum": ("min(value)", "min(value)"),
+    "maximum": ("max(value)", "max(value)"),
+    "count": ("count(value)", "count(value)"),
+    "sum": (f"round(sum(value), {ROUND})", f"round(sum(value), {ROUND})"),
 }
 
 
@@ -85,18 +77,21 @@ def apply_functions(
 ) -> DataFrame:
     """Per-series evaluation of the named statistic functions over a closed
     interval. Unknown names are ignored (Calculator semantics). One output
-    column per function, aliased by function name."""
+    column per function, aliased by function name.
+
+    Plan shape: one SQL statement (:func:`~dariadb_spark.model.verb_sql`),
+    filter → ``GROUP BY id`` with every function's aggregate; only
+    registry names reach the text. With ``ids`` given the answer is
+    gathered into one partition and sorted there (``COALESCE(1)`` +
+    ``SORT BY``); ``ids=None`` keeps the global ``ORDER BY``."""
     known = [n for n in names if n in FUNCTION_REGISTRY]
     if not known:
         raise ValueError(f"no known statistic functions in {names!r}")
-    aggs = [FUNCTION_REGISTRY[n][0]().alias(n) for n in known]
-    agg = (
-        meas.where(
-            ids_predicate(ids)
-            & pushdown_time_bounds(meas, from_ms, to_ms)
-            & flag_predicate(flag)
-        )
-        .groupBy("id")
-        .agg(*aggs)
+    aggs = ", ".join(f"{FUNCTION_REGISTRY[n][0]} AS {n}" for n in known)
+    return verb_sql(
+        meas,
+        f"id, {aggs} FROM {{m}} WHERE "
+        f"{scan_predicate_sql(meas, ids, from_ms, to_ms, flag)} GROUP BY id",
+        bool(ids),
+        "id",
     )
-    return sort_result(agg, ids, "id")

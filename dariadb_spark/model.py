@@ -251,11 +251,19 @@ def _sane_ms(ms: int | None) -> int | None:
 def pushdown_time_bounds(
     meas: DataFrame, from_ms: int | None, to_ms: int | None
 ) -> Column:
+    """:func:`time_bounds_sql` as a Column."""
+    return F.expr(time_bounds_sql(meas, from_ms, to_ms))
+
+
+def time_bounds_sql(
+    meas: DataFrame, from_ms: int | None, to_ms: int | None
+) -> str:
     """Closed-interval containment ``from <= time <= to`` (reference:
     libdariadb/meas.h, Meas::inInterval; SURVEY.md §7.3.3 pins closed
     ends, matching the oracle's BETWEEN), plus the equivalent bounds on
-    the raw columns the frame still carries, built as one SQL expression
-    (one py4j call instead of one per Column operation):
+    the raw columns the frame still carries, as one SQL expression. The
+    bounds may come off the wire, so anything but an integer raises
+    rather than reaching the SQL text.
 
     * raw parquet ``ts`` (``_raw_ts``): the range reaches the scan as a
       PushedFilter (parquet row-group min/max pruning, the reference's
@@ -269,8 +277,10 @@ def pushdown_time_bounds(
       PartitionFilters."""
     conds = []
     if from_ms is not None:
+        from_ms = operator.index(from_ms)
         conds.append(f"time >= {from_ms}")
     if to_ms is not None:
+        to_ms = operator.index(to_ms)
         conds.append(f"time <= {to_ms}")
     types = dict(meas.dtypes)
     raw_type = types.get(RAW_TS)
@@ -300,32 +310,79 @@ def pushdown_time_bounds(
             conds.append(f"{RAW_DAY} >= '{_day_str(lo)}'")
         if hi is not None:
             conds.append(f"{RAW_DAY} <= '{_day_str(hi)}'")
-    return F.expr(" AND ".join(conds) if conds else "TRUE")
+    return " AND ".join(conds) if conds else "TRUE"
 
 
 def ids_predicate(ids: list[int] | None) -> Column:
+    """:func:`ids_predicate_sql` as a Column."""
+    return F.expr(ids_predicate_sql(ids))
+
+
+def ids_predicate_sql(ids: list[int] | None) -> str:
     """QueryInterval.ids filter; empty/None = all series (reference:
-    libdariadb/query_param.h, struct QueryInterval). One SQL expression:
-    ``isin`` would make one py4j call per id."""
-    if not ids:
-        return F.lit(True)
-    return F.expr(ids_in_sql(ids))
+    libdariadb/query_param.h, struct QueryInterval)."""
+    return ids_in_sql(ids) if ids else "TRUE"
 
 
 def ids_in_sql(ids: list[int]) -> str:
     """``id IN (...)`` as SQL text, matching exactly ``ids``: an empty
-    list matches no row (unlike :func:`ids_predicate`, where it means
-    every series)."""
+    list matches no row (unlike :func:`ids_predicate_sql`, where it means
+    every series). Ids may come off the wire, so anything but an integer
+    raises rather than reaching the SQL text."""
     if not ids:
         return "FALSE"
-    return f"id IN ({', '.join(str(int(i)) for i in ids)})"
+    return f"id IN ({', '.join(str(operator.index(i)) for i in ids)})"
 
 
-def sort_result(df: DataFrame, ids: list[int] | None, *cols: str) -> DataFrame:
-    """Order a per-series answer by ``cols``. Given ``ids``, the answer
-    is bounded by what the caller passed in, so it is gathered into one
-    partition and sorted there: no range-partition exchange and no
-    sampling job. ``ids=None`` (all series) keeps the global sort."""
-    if ids:
-        return df.coalesce(1).sortWithinPartitions(*cols)
-    return df.orderBy(*cols)
+def scan_predicate_sql(
+    meas: DataFrame,
+    ids: list[int] | None,
+    from_ms: int | None,
+    to_ms: int | None,
+    flag: int,
+) -> str:
+    """The WHERE text of an interval scan of ``meas``: ids (None or
+    empty = all series), closed time bounds with their raw-column
+    pushdowns, flag."""
+    return " AND ".join(
+        (
+            ids_predicate_sql(ids),
+            time_bounds_sql(meas, from_ms, to_ms),
+            flag_predicate_sql(flag),
+        )
+    )
+
+
+def verb_sql(
+    meas: DataFrame,
+    select: str,
+    bounded: bool,
+    order: str,
+    gather: str = "COALESCE",
+    hints: tuple[str, ...] = (),
+    args: dict | None = None,
+    **frames: DataFrame,
+) -> DataFrame:
+    """One store verb as one ``spark.sql`` statement, ``SELECT <select>``
+    plus its sort, run in ``meas``'s own session with ``meas`` bound as
+    ``{m}`` (and each of ``frames`` as ``{name}``) in ``select``. A bound
+    frame becomes a temp view of the session the statement runs in, and
+    is dropped once the statement is analyzed, so every frame must come
+    from ``meas``'s session. Request values reach ``select`` only as
+    integers (:func:`ids_in_sql`, :func:`time_bounds_sql`,
+    :func:`flag_predicate_sql`) or as named parameters in ``args``.
+
+    ``bounded`` (the request named its ids) marks the answer as
+    request-sized: the ``gather`` hint puts it into one partition
+    (``COALESCE`` merges the partitions below it, ``REPARTITION``
+    shuffles into one and keeps the scan below parallel) and ``SORT BY``
+    sorts it there, with no range-partition exchange and no sampling
+    job. Otherwise (all series) the statement keeps the global
+    ``ORDER BY``."""
+    if bounded:
+        hints = (*hints, f"{gather}(1)")
+    head = f"SELECT /*+ {', '.join(hints)} */" if hints else "SELECT"
+    sort = "SORT BY" if bounded else "ORDER BY"
+    return meas.sparkSession.sql(
+        f"{head} {select} {sort} {order}", args, m=meas, **frames
+    )

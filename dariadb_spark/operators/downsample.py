@@ -6,7 +6,14 @@ derived series (scheme/scheme.cpp, SURVEY.md §2.5 W1/W2).
 Fixed-width intervals bucket by pure int64 arithmetic on the epoch-ms
 ``time`` column — identical in Spark and DuckDB, no timezone/calendar
 ambiguity. Calendar intervals (month) go through ``date_trunc`` on a UTC
-timestamp reconstructed from ms, then back to ms.
+timestamp reconstructed from ms, then back to ms. The interval names are
+an allow-list: only their bucket texts reach SQL.
+
+Plan shape of ``downsample``: one SQL statement
+(:func:`~dariadb_spark.model.verb_sql`): filter → ``GROUP BY id,
+bucket``, partially aggregated on the map side. With ``ids`` given the
+answer is gathered into one partition (``COALESCE(1)``) and sorted there
+(``SORT BY``); ``ids=None`` keeps the global ``ORDER BY``.
 """
 
 from __future__ import annotations
@@ -14,12 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import (
-    flag_predicate,
-    ids_predicate,
-    pushdown_time_bounds,
-    sort_result,
-)
+from dariadb_spark.model import scan_predicate_sql, verb_sql
 
 MS = {"second": 1_000, "minute": 60_000, "minute30": 1_800_000,
       "hour": 3_600_000, "day": 86_400_000, "week": 604_800_000}
@@ -45,13 +47,20 @@ def floor_bucket_sql(expr: str, width_ms: int) -> str:
 
 def bucket_column(interval: str) -> Column:
     """Bucket start (epoch ms) for a named interval, over col ``time``."""
+    return F.expr(bucket_spark_sql(interval)).alias("bucket_ms")
+
+
+def bucket_spark_sql(interval: str) -> str:
+    """Spark SQL text of the bucket start of a named interval: the
+    :func:`floor_bucket` floor for fixed widths, ``date_trunc`` in UTC
+    for calendar intervals. An unknown name raises."""
     if interval in MS:
-        return floor_bucket(F.col("time"), MS[interval]).alias("bucket_ms")
+        return f"(time - pmod(time, {MS[interval]}))"
     if interval in CALENDAR:
-        unit = CALENDAR[interval]
-        return F.unix_millis(
-            F.date_trunc(unit, F.timestamp_millis(F.col("time")))
-        ).alias("bucket_ms")
+        return (
+            f"unix_millis(date_trunc('{CALENDAR[interval]}', "
+            "timestamp_millis(time)))"
+        )
     raise ValueError(f"unknown interval {interval!r}")
 
 
@@ -175,7 +184,7 @@ def downsample_to_series(
         catalog.register_bulk(map_df)
     return (
         meas.groupBy("id", bucket_column(interval))
-        .agg(FUNCTION_REGISTRY[fn_name][0]().alias("value"))
+        .agg(F.expr(FUNCTION_REGISTRY[fn_name][0]).alias("value"))
         .join(F.broadcast(map_df.select("id", "derived_id")), "id")
         .select(
             F.col("derived_id").alias("id"),
@@ -197,27 +206,24 @@ def downsample(
     """Per-series per-bucket aggregate block (the derived-series payload:
     avg/min/max/sum/count). Partial aggregation is map-side; the single
     shuffle is on (id, bucket) — the natural key a 100 TB rollup would
-    also partition its output by."""
-    cond = ids_predicate(ids) & flag_predicate(flag)
-    if from_ms is not None or to_ms is not None:
-        cond = cond & pushdown_time_bounds(meas, from_ms, to_ms)
-    agg = (
-        meas.where(cond)
-        .groupBy(F.col("id"), bucket_column(interval))
-        .agg(
-            F.count("value").alias("cnt"),
-            # avg as round(sum,6)/count with NO final rounding: the rounded
-            # sum is bit-identical across engines (accumulation noise ~1e-8
-            # << 5e-7 boundary gap) and IEEE division is deterministic, so
-            # the quotient compares exactly. A final round(…,4) would
-            # diverge: fixture values are 2-decimal and bucket counts are
-            # powers of two, so averages land EXACTLY on .xxxx5 boundaries
-            # where Spark (HALF_UP on shortest decimal repr) and DuckDB
-            # (binary-value rounding) disagree.
-            (F.round(F.sum("value"), 6) / F.count("value")).alias("avg_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
+    also partition its output by.
+
+    avg is round(sum,6)/count with NO final rounding: the rounded sum is
+    bit-identical across engines (accumulation noise ~1e-8 << 5e-7
+    boundary gap) and IEEE division is deterministic, so the quotient
+    compares exactly. A final round(…,4) would diverge: fixture values
+    are 2-decimal and bucket counts are powers of two, so averages land
+    EXACTLY on .xxxx5 boundaries where Spark (HALF_UP on shortest
+    decimal repr) and DuckDB (binary-value rounding) disagree."""
+    bucket = bucket_spark_sql(interval)
+    return verb_sql(
+        meas,
+        f"id, {bucket} AS bucket_ms, count(value) AS cnt, "
+        "round(sum(value), 6) / count(value) AS avg_value, "
+        "min(value) AS min_value, max(value) AS max_value, "
+        "round(sum(value), 4) AS sum_value FROM {m} WHERE "
+        f"{scan_predicate_sql(meas, ids, from_ms, to_ms, flag)} "
+        f"GROUP BY id, {bucket}",
+        bool(ids),
+        "id, bucket_ms",
     )
-    return sort_result(agg, ids, "id", "bucket_ms")

@@ -6,16 +6,22 @@ them by time and filters per point (storage/readers.cpp, MergeSortReader).
 On Spark the whole pipeline is one declarative plan: parquet scan with the
 id/time/flag predicates pushed to the reader (row-group pruning = the
 ``.pagei`` min/max index), then a sort. Catalyst owns layer-merge, pruning
-and decompression. With ``ids`` given the answer is request-sized, so the
-sort runs in one partition behind a single-partition exchange (the scan
-stays parallel); ``ids=None`` keeps the global range-partitioned sort.
+and decompression.
+
+Plan shape: ``read_interval`` is one SQL statement
+(:func:`~dariadb_spark.model.verb_sql`): scan → filter → sort. With
+``ids`` given the answer is request-sized, so a ``REPARTITION(1)`` hint
+puts a single-partition exchange above the still-parallel scan and
+``SORT BY`` sorts inside that one partition; ``ids=None`` keeps the
+global range-partitioned ``ORDER BY``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from dariadb_spark.model import flag_predicate, ids_predicate, pushdown_time_bounds
+from dariadb_spark.model import scan_predicate_sql, verb_sql
 
 
 def scan_interval(
@@ -33,9 +39,7 @@ def scan_interval(
     shuffle of the scan at 100 TB). Use ``read_interval`` only where the
     per-series time order is itself the contract being returned."""
     return meas.where(
-        ids_predicate(ids)
-        & pushdown_time_bounds(meas, from_ms, to_ms)
-        & flag_predicate(flag)
+        F.expr(scan_predicate_sql(meas, ids, from_ms, to_ms, flag))
     ).select("id", "time", "value", "flag")
 
 
@@ -48,7 +52,11 @@ def read_interval(
 ) -> DataFrame:
     """All measurements of ``ids`` with ``from <= time <= to`` matching
     ``flag``, time-ordered per series (the MeasArray contract)."""
-    scanned = scan_interval(meas, ids, from_ms, to_ms, flag)
-    if ids:
-        return scanned.repartition(1).sortWithinPartitions("id", "time")
-    return scanned.orderBy("id", "time")
+    return verb_sql(
+        meas,
+        "id, time, value, flag FROM {m} WHERE "
+        + scan_predicate_sql(meas, ids, from_ms, to_ms, flag),
+        bool(ids),
+        "id, time",
+        gather="REPARTITION",
+    )

@@ -2,11 +2,17 @@
 
 * ``min_max_time`` — reference ``Engine::minMaxTime(id)`` /
   ``Engine::loadMinMax()`` (libdariadb/engine.cpp): earliest/latest
-  timestamp per series, merged across storage layers. On Spark a single
-  partial-aggregating groupBy (map-side combine, no full shuffle of rows).
+  timestamp per series, merged across storage layers.
 * ``stat_block`` — reference ``Engine::stat(id, from, to)`` returning
   ``Statistic {count, minTime, maxTime, min/max value, sum, mean}``
   (libdariadb/stat.h): one aggregation pass over the filtered interval.
+
+Plan shape: each verb is one SQL statement
+(:func:`~dariadb_spark.model.verb_sql`): filter → ``GROUP BY id``, a
+partial aggregate on the map side (no full shuffle of rows). With
+``ids`` given the answer is gathered into one partition
+(``COALESCE(1)``) and sorted there (``SORT BY``); ``ids=None`` keeps the
+global ``ORDER BY``.
 
 Sum/avg are rounded to 4 decimals in both engine and oracle so the
 value-hash is insensitive to floating-point accumulation order across
@@ -18,23 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import (
-    flag_predicate,
-    ids_predicate,
-    pushdown_time_bounds,
-    sort_result,
-)
+from dariadb_spark.model import ids_predicate_sql, scan_predicate_sql, verb_sql
 
 
 def min_max_time(meas: DataFrame, ids: list[int] | None = None) -> DataFrame:
     """(id, min_time, max_time) per series; ids=None → all series
     (reference loadMinMax → Id2MinMax)."""
-    agg = (
-        meas.where(ids_predicate(ids))
-        .groupBy("id")
-        .agg(F.min("time").alias("min_time"), F.max("time").alias("max_time"))
+    return verb_sql(
+        meas,
+        "id, min(time) AS min_time, max(time) AS max_time FROM {m} "
+        f"WHERE {ids_predicate_sql(ids)} GROUP BY id",
+        bool(ids),
+        "id",
     )
-    return sort_result(agg, ids, "id")
 
 
 def stat_block(
@@ -44,28 +46,20 @@ def stat_block(
     to_ms: int,
     flag: int = 0,
 ) -> DataFrame:
-    """The reference's Statistic block per series over a closed interval."""
-    agg = (
-        meas.where(
-            ids_predicate(ids)
-            & pushdown_time_bounds(meas, from_ms, to_ms)
-            & flag_predicate(flag)
-        )
-        .groupBy("id")
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("time").alias("min_time"),
-            F.max("time").alias("max_time"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-            # mean as round(sum,6)/count — bit-identical across engines;
-            # round(avg,4) diverges when 2-decimal inputs put the true
-            # mean exactly on a .xxxx5 boundary (see downsample.py).
-            (F.round(F.sum("value"), 6) / F.count("value")).alias("mean_value"),
-        )
+    """The reference's Statistic block per series over a closed interval.
+    The mean is round(sum, 6)/count, bit-identical across engines;
+    round(avg, 4) diverges when 2-decimal inputs put the true mean
+    exactly on a .xxxx5 boundary (see downsample.py)."""
+    return verb_sql(
+        meas,
+        "id, count(value) AS cnt, min(time) AS min_time, "
+        "max(time) AS max_time, min(value) AS min_value, "
+        "max(value) AS max_value, round(sum(value), 4) AS sum_value, "
+        "round(sum(value), 6) / count(value) AS mean_value FROM {m} WHERE "
+        f"{scan_predicate_sql(meas, ids, from_ms, to_ms, flag)} GROUP BY id",
+        bool(ids),
+        "id",
     )
-    return sort_result(agg, ids, "id")
 
 
 def partition_stats_op(meas: DataFrame) -> DataFrame:

@@ -90,9 +90,7 @@ ORDER BY id, time""",
 
 register(
     "timepoint_asof",
-    lambda spark, sf: read_time_point(
-        spark, measurements(spark, sf), ASOF_IDS, TP_MS, 0
-    ),
+    lambda spark, sf: read_time_point(measurements(spark, sf), ASOF_IDS, TP_MS, 0),
     f"""WITH {MEAS_CTE_SQL},
 requested(id) AS (SELECT CAST(v AS BIGINT) FROM (VALUES {_values_sql(ASOF_IDS)}) t(v)),
 ranked AS (
@@ -413,20 +411,18 @@ def _partition_file_stats_multi(spark: SparkSession, sf: str) -> DataFrame:
     the op runs directly on the production store
     (``TsEngine.partition_file_stats``, one map-side agg per file); the
     temp store here exists only to hand the driver a deterministic
-    multi-file fixture to hash."""
-    import shutil
-    import tempfile
-
+    multi-file fixture to hash. The scratch directory comes from
+    :func:`~dariadb_spark.streaming.scratch.scratch_dir`; the store
+    read runs in the serving session."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dariadb_spark.model import ids_predicate, pushdown_time_bounds
     from dariadb_spark.operators.stats import partition_file_stats_op
     from dariadb_spark.sources.parquet_store import ParquetTsStore
-    from dariadb_spark.streaming.scratch import localize_and_cleanup
+    from dariadb_spark.streaming.scratch import localize_and_cleanup, scratch_dir
 
-    base = tempfile.mkdtemp(prefix="dariadb_fstats_multi_")
-    try:
+    with scratch_dir("fstats_multi") as base:
         meas = measurements(spark, sf)
         sl = meas.where(
             ids_predicate(IDS) & pushdown_time_bounds(meas, FROM_MS, TO_MS)
@@ -498,9 +494,6 @@ def _partition_file_stats_multi(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("p_date", "file_rank")
         )
         return localize_and_cleanup(spark, out, base)
-    except BaseException:
-        shutil.rmtree(base, ignore_errors=True)
-        raise
 
 
 register(

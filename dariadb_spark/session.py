@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Confs the engine semantics depend on; all runtime-settable.
@@ -32,9 +34,31 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: Confs of the serving session (:func:`serving_session`), applied over
+#: :data:`RUNTIME_CONFS`. A store verb answers a request-sized read, for
+#: which Spark's per-query fixed costs outweigh what these features buy.
+SERVING_CONFS: dict[str, str] = {
+    # AQE runs each shuffle's map side as a job of its own and re-plans
+    # after it: one verb, two jobs. Without it a verb is one job.
+    "spark.sql.adaptive.enabled": "false",
+    # Generated code inlines each request's ids and bounds as literals,
+    # so a new request means new classes to compile. NO_CODEGEN evaluates
+    # predicates and projections interpreted, and Spark then inserts no
+    # whole-stage codegen either; the parquet scan stays vectorized. This
+    # is an internal Spark conf, set here on the serving session only; a
+    # deployment that rejects it keeps the compiled form.
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply the confs the engine requires to an externally-built session."""
-    for key, value in RUNTIME_CONFS.items():
+    """Apply the confs the engine requires to an externally-built session.
+    On the serving session (:func:`serving_session`) the serving confs
+    stay applied over them."""
+    confs = RUNTIME_CONFS
+    if getattr(spark, "_dariadb_serving_of", None) is not None:
+        confs = {**RUNTIME_CONFS, **SERVING_CONFS}
+    for key, value in confs.items():
         try:
             if spark.conf.get(key, None) != value:
                 spark.conf.set(key, value)
@@ -44,6 +68,38 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             pass
     _ship_package(spark)
     return spark
+
+
+_SERVING_LOCK = threading.Lock()
+
+
+def serving_session(spark: SparkSession) -> SparkSession:
+    """The session the store verbs run in: a child of ``spark``
+    (``newSession()``: same SparkContext, cache and catalog, its own confs
+    and temp views), made once per session. It starts from ``spark``'s
+    SQL confs, then :data:`RUNTIME_CONFS`, then :data:`SERVING_CONFS`.
+    ``spark`` itself keeps its confs (AQE on), which the analytics
+    queries need. Given a serving session, returns it."""
+    if getattr(spark, "_dariadb_serving_of", None) is not None:
+        return spark
+    serving = getattr(spark, "_dariadb_serving", None)
+    if serving is not None:
+        return serving
+    with _SERVING_LOCK:
+        serving = getattr(spark, "_dariadb_serving", None)
+        if serving is None:
+            serving = spark.newSession()
+            own = serving.conf.getAll
+            for key, value in spark.conf.getAll.items():
+                if key.startswith("spark.sql.") and own.get(key) != value:
+                    try:
+                        serving.conf.set(key, value)
+                    except AnalysisException:
+                        pass  # a static conf: the child shares its value
+            serving._dariadb_serving_of = spark
+            ensure_runtime_confs(serving)
+            spark._dariadb_serving = serving
+    return serving
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -12,7 +12,10 @@ driver-local frame. The pieces:
 * :func:`run_parity` — the driver: scratch dir, landing, stream start
   under :func:`parity_stream_partitions`, bounded await, finish
   projection, then :func:`localize_and_cleanup`. On any failure it
-  stops the stream, drops the sink view and removes the directory.
+  stops the stream, drops the sink view and removes the directory;
+* :func:`scratch_dir` — the one scratch directory of a harness query
+  (the parity driver's and the registry's multi-file store fixture),
+  removed however its block ends.
 
 :func:`localize_and_cleanup` collects the (tiny: parity outputs are
 tens-to-hundreds of rows) result into a driver-local Arrow
@@ -52,6 +55,20 @@ from dariadb_spark.model import local_frame
 #: rows; anything beyond this is a misuse of the localize path and must
 #: fail loudly, not OOM the driver.
 MAX_LOCALIZED_ROWS = 100_000
+
+
+@contextmanager
+def scratch_dir(name: str) -> Iterator[str]:
+    """A fresh ``dariadb_<name>_*`` temp directory for one harness query,
+    removed when the block ends, whether it returns or raises. A block
+    that returns a frame localizes it first
+    (:func:`localize_and_cleanup`), so nothing it returns reads the
+    directory."""
+    base = tempfile.mkdtemp(prefix=f"dariadb_{name}_")
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def localize_and_cleanup(
@@ -304,27 +321,26 @@ def run_parity(
     stopped, the sink view dropped and the directory removed before the
     error propagates, so a failed query leaks no active stream, catalog
     entry or disk."""
-    base = tempfile.mkdtemp(prefix=f"dariadb_{name}_")
-    data_dir = f"{base}/data"
-    qname = os.path.basename(base)[len("dariadb_"):]
-    q = None
-    try:
-        land(data_dir)
-        with parity_stream_partitions(spark, partitions):
-            q = start(data_dir, qname)
-        await_parity_termination(q, timeout_s)
-        out = finish(spark.table(qname) if q.name == qname else None)
-    except BaseException:
-        # best-effort cleanup: the original error is what propagates
+    with scratch_dir(name) as base:
+        data_dir = f"{base}/data"
+        qname = os.path.basename(base)[len("dariadb_"):]
+        q = None
         try:
-            if q is not None:
-                q.stop()
-        except Exception:
-            pass
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(base, ignore_errors=True)
-        raise
-    return localize_and_cleanup(spark, out, base, qname)
+            land(data_dir)
+            with parity_stream_partitions(spark, partitions):
+                q = start(data_dir, qname)
+            await_parity_termination(q, timeout_s)
+            out = finish(spark.table(qname) if q.name == qname else None)
+        except BaseException:
+            # best-effort cleanup: the original error is what propagates
+            try:
+                if q is not None:
+                    q.stop()
+            except Exception:
+                pass
+            try:
+                spark.catalog.dropTempView(qname)
+            except Exception:
+                pass
+            raise
+        return localize_and_cleanup(spark, out, base, qname)

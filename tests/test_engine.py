@@ -381,8 +381,9 @@ def test_store_read_launches_no_job(engine):
 
 def test_id_bounded_verbs_sort_in_one_partition(engine):
     """Given ids, an answer is request-sized: no verb range-partitions it
-    (no sampling job), and each runs in at most two jobs (the scan's
-    shuffle and the result). ids=None keeps the global range sort."""
+    (no sampling job), and each runs as one job in the serving session
+    (no adaptive re-planning job for its shuffle). ids=None keeps the
+    global range sort."""
     end = T0 + N_STEPS * STEP
     bounded = {
         "read_time_point": lambda: engine.read_time_point([0, 3, 999], end),
@@ -395,7 +396,7 @@ def test_id_bounded_verbs_sort_in_one_partition(engine):
     }
     for verb, build in bounded.items():
         assert "rangepartitioning" not in _final_plan(build()), verb
-        assert _spark_jobs(engine.spark, lambda: build().collect()) <= 2, verb
+        assert _spark_jobs(engine.spark, lambda: build().collect()) == 1, verb
     unbounded = {
         "current_value": lambda: engine.current_value(None),
         "read_interval": lambda: engine.read_interval(None, T0, end),
@@ -406,6 +407,29 @@ def test_id_bounded_verbs_sort_in_one_partition(engine):
     }
     for verb, build in unbounded.items():
         assert "rangepartitioning" in _final_plan(build()), verb
+
+
+def test_pattern_scan_runs_at_most_two_jobs(engine):
+    """read_interval_by_pattern sorts its answer in one partition above
+    the scan and the catalog join: the catalog's broadcast and the scan,
+    no range sort's sampling jobs."""
+    for sid in (1, 2):
+        engine.scheme.register(f"pin.sensor{sid}", sid)
+    end = T0 + N_STEPS * STEP
+    rows = []
+    n = _spark_jobs(
+        engine.spark,
+        lambda: rows.extend(
+            engine.read_interval_by_pattern("pin.*", T0, end).collect()
+        ),
+    )
+    assert n <= 2
+    direct = engine.read_interval([1, 2], T0, end).collect()
+    assert [(r.id, r.time) for r in rows] == [(r.id, r.time) for r in direct]
+    assert len(rows) > 0
+    assert "rangepartitioning" not in _final_plan(
+        engine.read_interval_by_pattern("pin.*", T0, end)
+    )
 
 
 def test_id_bounded_read_interval_keeps_a_parallel_scan(engine):

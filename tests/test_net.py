@@ -155,6 +155,23 @@ def test_scheme_verbs_over_the_wire(served):
         }
 
 
+def test_pattern_special_characters_over_the_wire(served):
+    """A glob off the wire reaches SQL only as a parameter: ``'``, ``\\``,
+    ``%`` and ``_`` match themselves and raise no SQL error."""
+    eng, srv = served
+    tw = T0 + 500 * HOUR + 7  # no other test writes this instant
+    names = ["w'q.x", "w\\q.x", "w%q.x", "w_q.x", "wZq.x"]
+    with _cli(srv) as cli:
+        ids = [cli.scheme_add_param(n) for n in names]
+        cli.append([(i, tw, float(i), 1) for i in ids])
+        for sid, name in zip(ids, names):
+            cols, rows = cli.read_interval_by_pattern(name, tw, tw)
+            assert [(r[0], r[1]) for r in rows] == [(sid, name)], name
+        cols, rows = cli.read_interval_by_pattern("w?q.x", tw, tw)
+        assert [r[1] for r in rows] == names
+        assert cli.read_interval_by_pattern("x' OR '1'='1", tw, tw)[1] == []
+
+
 def test_subscribe_binary_push_matches_json(served):
     eng, srv = served
     with _cli(srv) as cli:

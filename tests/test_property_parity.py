@@ -59,6 +59,16 @@ def _engine(spark, rows) -> TsEngine:
     return TsEngine.from_dataframe(spark, df)
 
 
+def _engines(spark, rows) -> list[TsEngine]:
+    """``rows`` as an engine over a main-session frame and one over a
+    serving-session frame: the verbs run compiled, with AQE, in the first
+    and interpreted, without AQE, in the second, which is where store
+    reads run them."""
+    from dariadb_spark.session import serving_session
+
+    return [_engine(spark, rows), _engine(serving_session(spark), rows)]
+
+
 def _flag_ok(f: int, q: int) -> bool:
     return q == 0 or (f & q) == q
 
@@ -68,19 +78,21 @@ def _flag_ok(f: int, q: int) -> bool:
 @_SETTINGS
 def test_read_interval_property(spark, rows, lo, hi, flag):
     from_ms, to_ms = T0 + min(lo, hi) * STEP, T0 + max(lo, hi) * STEP
-    got = [
-        (r.id, r.time, r.value, r.flag)
-        for r in _engine(spark, rows).read_interval(
-            None, from_ms, to_ms, flag
-        ).collect()
-    ]
     expect = sorted(
         t for t in rows if from_ms <= t[1] <= to_ms and _flag_ok(t[3], flag)
     )
-    # engine orders by (id, time); rows tied on both are emitted in any
-    # order — compare fully-sorted lists (same multiset, same key order)
-    assert sorted(got) == expect
-    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in expect]
+    for eng in _engines(spark, rows):
+        for ids in (None, [0, 2, 5]):
+            got = [
+                (r.id, r.time, r.value, r.flag)
+                for r in eng.read_interval(ids, from_ms, to_ms, flag).collect()
+            ]
+            want = [t for t in expect if ids is None or t[0] in ids]
+            # engine orders by (id, time); rows tied on both are emitted
+            # in any order — compare fully-sorted lists (same multiset,
+            # same key order)
+            assert sorted(got) == want
+            assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in want]
 
 
 # As-of verbs pick the greatest (time, value, flag) per id. These rows put
@@ -140,57 +152,66 @@ def _same(got, want) -> bool:
 def test_read_time_point_property(spark, rows, tp_slot, flag):
     tp = T0 + tp_slot * STEP
     ids = [0, 1, 2, 3, 4, 5, 77]  # 77 never exists
-    out = _engine(spark, rows).read_time_point(ids, tp, flag).collect()
-    assert [r.id for r in out] == ids  # one row per requested id, in order
-    got = {r.id: (r.time, r.value, r.flag) for r in out}
-    for i in ids:
-        cand = [
-            t for t in rows if t[0] == i and t[1] <= tp and _flag_ok(t[3], flag)
-        ]
-        if cand:
-            best = max(cand, key=_latest_key)
-            assert _same(got[i], best[1:]), (i, got[i], best)
-        else:
-            assert got[i] == (tp, 0.0, FLAGS_NO_DATA)
+    for eng in _engines(spark, rows):
+        out = eng.read_time_point(ids, tp, flag).collect()
+        assert [r.id for r in out] == ids  # one row per requested id, in order
+        got = {r.id: (r.time, r.value, r.flag) for r in out}
+        for i in ids:
+            cand = [
+                t for t in rows
+                if t[0] == i and t[1] <= tp and _flag_ok(t[3], flag)
+            ]
+            if cand:
+                best = max(cand, key=_latest_key)
+                assert _same(got[i], best[1:]), (i, got[i], best)
+            else:
+                assert got[i] == (tp, 0.0, FLAGS_NO_DATA)
 
 
 @given(rows=asof_lists(), flag=st.sampled_from([0, 1, 16]),
        ids=st.sampled_from([None, [0, 2, 4, 77]]))
 @_SETTINGS
 def test_current_value_property(spark, rows, flag, ids):
-    out = _engine(spark, rows).current_value(ids, flag).collect()
     by_id: dict[int, list] = {}
     for t in rows:
         if (ids is None or t[0] in ids) and _flag_ok(t[3], flag):
             by_id.setdefault(t[0], []).append(t)
-    # only series that exist, sorted by id, whether or not ids bound them
-    assert [r.id for r in out] == sorted(by_id)
-    for r in out:
-        best = max(by_id[r.id], key=_latest_key)
-        assert _same((r.time, r.value, r.flag), best[1:]), (r, best)
+    for eng in _engines(spark, rows):
+        out = eng.current_value(ids, flag).collect()
+        # only series that exist, sorted by id, whether or not ids bound them
+        assert [r.id for r in out] == sorted(by_id)
+        for r in out:
+            best = max(by_id[r.id], key=_latest_key)
+            assert _same((r.time, r.value, r.flag), best[1:]), (r, best)
 
 
 @given(rows=meas_lists)
 @_SETTINGS
 def test_min_max_and_stat_property(spark, rows):
-    eng = _engine(spark, rows)
-    mm = {r.id: (r.min_time, r.max_time) for r in eng.min_max_time().collect()}
     by_id: dict[int, list] = {}
     for t in rows:
         by_id.setdefault(t[0], []).append(t)
-    assert set(mm) == set(by_id)
-    for i, ts in by_id.items():
-        assert mm[i] == (min(t[1] for t in ts), max(t[1] for t in ts))
-    st_rows = {
-        r.id: r for r in eng.stat(None, T0, T0 + 40 * STEP).collect()
-    }
-    for i, ts in by_id.items():
-        vals = [t[2] for t in ts]
-        assert st_rows[i].cnt == len(vals)
-        assert st_rows[i].min_value == min(vals)
-        assert st_rows[i].max_value == max(vals)
-        assert st_rows[i].sum_value == sum(vals)  # exact: 0.25-multiples
-        assert st_rows[i].mean_value == sum(vals) / len(vals)
+    for eng in _engines(spark, rows):
+        mm = {
+            r.id: (r.min_time, r.max_time)
+            for r in eng.min_max_time().collect()
+        }
+        assert set(mm) == set(by_id)
+        for i, ts in by_id.items():
+            assert mm[i] == (min(t[1] for t in ts), max(t[1] for t in ts))
+        for ids in (None, list(by_id)):
+            st_rows = {
+                r.id: r for r in eng.stat(ids, T0, T0 + 40 * STEP).collect()
+            }
+            assert set(st_rows) == set(by_id)
+            for i, ts in by_id.items():
+                vals = [t[2] for t in ts]
+                assert st_rows[i].cnt == len(vals)
+                assert st_rows[i].min_value == min(vals)
+                assert st_rows[i].max_value == max(vals)
+                # exact: 0.25-multiples
+                assert st_rows[i].sum_value == sum(vals)
+                assert st_rows[i].mean_value == sum(vals) / len(vals)
 
 
 # --- resample verbs (operators/resample.py) -------------------------------

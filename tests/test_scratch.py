@@ -10,6 +10,7 @@ from dariadb_spark.streaming.scratch import (
     MAX_LOCALIZED_ROWS,
     localize_and_cleanup,
     parity_stream_partitions,
+    scratch_dir,
 )
 from tests.test_engine import _spark_jobs
 
@@ -215,3 +216,33 @@ def test_run_parity_cleans_up_when_the_await_times_out(spark):
     assert isinstance(out, TimeoutError)
     assert len(qnames) == 1
     _assert_clean(spark, "harness_timeout", qnames, prev)
+
+
+def test_scratch_dir_is_removed_on_return_and_on_raise():
+    with scratch_dir("scratch_guard") as base:
+        open(f"{base}/marker", "w").close()
+    assert not glob.glob(base)
+    with pytest.raises(RuntimeError, match="boom"):
+        with scratch_dir("scratch_guard") as base:
+            raise RuntimeError("boom")
+    assert not glob.glob(base)
+
+
+def test_partition_file_stats_multi_cleans_up_when_the_landing_raises(
+    spark, sf_dir, monkeypatch
+):
+    """The registry's multi-file fsck query lands a scratch store through
+    ``scratch_dir``: a landing that raises leaves no directory behind."""
+    from dariadb_spark.registry import REGISTRY
+    from dariadb_spark.sources.parquet_store import ParquetTsStore
+
+    pattern = f"{tempfile.gettempdir()}/dariadb_fstats_multi_*"
+    before = set(glob.glob(pattern))
+
+    def boom(self, meas, isolated=False):
+        raise RuntimeError("landing failed")
+
+    monkeypatch.setattr(ParquetTsStore, "append", boom)
+    with pytest.raises(RuntimeError, match="landing failed"):
+        REGISTRY["partition_file_stats_multi"].fn(spark, sf_dir)
+    assert set(glob.glob(pattern)) == before
