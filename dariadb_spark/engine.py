@@ -25,6 +25,7 @@ from collections.abc import Callable, Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 
 from dariadb_spark.functions.statistics import apply_functions
 from dariadb_spark.model import (
@@ -41,8 +42,15 @@ from dariadb_spark.operators.interval import read_interval as _read_interval
 from dariadb_spark.operators.stats import min_max_time as _min_max_time
 from dariadb_spark.operators.stats import stat_block as _stat_block
 from dariadb_spark.scheme import SeriesCatalog
+from dariadb_spark.session import in_session, serving_session
 from dariadb_spark.sources.parquet_store import ParquetTsStore
 from dariadb_spark.sources.store_protocol import TsStore
+
+#: A pattern scan over a catalog of at most this many series is
+#: request-sized, like ``read_interval`` with ids; over a larger catalog a
+#: glob may match a store-sized share of it, and the answer is sorted
+#: like an all-series one.
+PATTERN_REQUEST_MAX_SERIES = 1_000
 
 
 class TsEngine:
@@ -125,6 +133,18 @@ class TsEngine:
     def meas(self) -> DataFrame:
         return self._source()
 
+    def _request_meas(self, bounded: bool) -> DataFrame:
+        """The frame a read verb runs over. A store's request-sized read
+        (``bounded``: the request named its series) moves to the serving
+        session (:func:`~dariadb_spark.session.serving_session`: no AQE,
+        no codegen), where it runs one Spark job and compiles no class.
+        Everything else, the store's own ``read()`` included, keeps the
+        frame's session."""
+        meas = self.meas()
+        if bounded and self.store is not None:
+            return in_session(meas, serving_session(self.spark))
+        return meas
+
     # -- write path ------------------------------------------------------
     def append(
         self,
@@ -163,7 +183,8 @@ class TsEngine:
     def read_interval(
         self, ids: list[int] | None, from_ms: int, to_ms: int, flag: int = 0
     ) -> DataFrame:
-        return _read_interval(self.meas(), ids, from_ms, to_ms, flag)
+        meas = self._request_meas(bool(ids))
+        return _read_interval(meas, ids, from_ms, to_ms, flag)
 
     def read_version(self, version: int | None) -> DataFrame:
         """Time-travel measurements view: the store's rows as of log
@@ -185,32 +206,29 @@ class TsEngine:
     ) -> DataFrame:
         """J2+F1–F3 composed: resolve a hierarchical name glob
         (``host1.*``) through the catalog and scan the matching series —
-        a broadcast join against the catalog filtered by the glob, so the
-        id set never round-trips through the driver (the scale-safe form
-        of ``read_interval(ids=...)`` when names drive the query).
-        Returns (id, name, time, value, flag) time-ordered per series.
+        a broadcast join against the matched catalog slice, so the id
+        set never round-trips through the driver (the scale-safe form of
+        ``read_interval(ids=...)`` when names drive the query). Returns
+        (id, name, time, value, flag) time-ordered per series.
 
-        One SQL statement in the store frame's session: the catalog
-        frame is built in that session too, and the glob reaches the
-        text only as the named parameter ``:pattern`` (a LIKE pattern
-        in which every character but ``*`` and ``?`` matches itself).
-        Like ``read_interval`` with ids, the answer is a request's: it is
-        sorted in one partition above the parallel scan and join
-        (``REPARTITION(1)`` + ``SORT BY``), one Spark job rather than a
-        range sort's sampling jobs."""
-        meas = self.meas()
+        One SQL statement. Over a catalog of at most
+        :data:`PATTERN_REQUEST_MAX_SERIES` series the answer is
+        request-sized and served like ``read_interval`` with ids: in the
+        serving session, sorted in one partition above the parallel scan
+        and join. Over a larger catalog it keeps the global ``ORDER BY``
+        in the engine's session."""
+        bounded = self.scheme.size() <= PATTERN_REQUEST_MAX_SERIES
+        meas = self._request_meas(bounded)
+        matched = in_session(self.scheme.match(pattern), meas.sparkSession)
         return verb_sql(
             meas,
             "m.id AS id, c.name AS name, m.time AS time, m.value AS value, "
-            "m.flag AS flag FROM {m} m JOIN {c} c ON m.id = c.id "
-            "WHERE c.name LIKE :pattern AND "
+            "m.flag AS flag FROM {m} m JOIN {c} c ON m.id = c.id WHERE "
             + scan_predicate_sql(meas, None, from_ms, to_ms, flag),
-            True,
+            bounded,
             "id, time, value, flag",
             gather="REPARTITION",
-            hints=("BROADCAST(c)",),
-            args={"pattern": self.scheme._glob_to_like(pattern)},
-            c=self.scheme._frame(meas.sparkSession),
+            c=F.broadcast(matched),
         )
 
     def foreach(
@@ -230,13 +248,14 @@ class TsEngine:
     def read_time_point(
         self, ids: list[int], time_point_ms: int, flag: int = 0
     ) -> DataFrame:
-        return _read_time_point(self.meas(), ids, time_point_ms, flag)
+        meas = self._request_meas(bool(ids))
+        return _read_time_point(meas, ids, time_point_ms, flag)
 
     def current_value(self, ids: list[int] | None = None, flag: int = 0) -> DataFrame:
-        return _current_value(self.meas(), ids, flag)
+        return _current_value(self._request_meas(bool(ids)), ids, flag)
 
     def min_max_time(self, ids: list[int] | None = None) -> DataFrame:
-        return _min_max_time(self.meas(), ids)
+        return _min_max_time(self._request_meas(bool(ids)), ids)
 
     def load_min_max(self) -> DataFrame:
         return _min_max_time(self.meas(), None)
@@ -244,7 +263,8 @@ class TsEngine:
     def stat(
         self, ids: list[int] | None, from_ms: int, to_ms: int, flag: int = 0
     ) -> DataFrame:
-        return _stat_block(self.meas(), ids, from_ms, to_ms, flag)
+        meas = self._request_meas(bool(ids))
+        return _stat_block(meas, ids, from_ms, to_ms, flag)
 
     def calc(
         self,
@@ -255,7 +275,8 @@ class TsEngine:
         flag: int = 0,
     ) -> DataFrame:
         """Calculator::apply — named statistic functions per series."""
-        return apply_functions(self.meas(), names, ids, from_ms, to_ms, flag)
+        meas = self._request_meas(bool(ids))
+        return apply_functions(meas, names, ids, from_ms, to_ms, flag)
 
     def downsample(
         self,
@@ -265,7 +286,8 @@ class TsEngine:
         to_ms: int | None = None,
         flag: int = 0,
     ) -> DataFrame:
-        return _downsample(self.meas(), interval, ids, from_ms, to_ms, flag)
+        meas = self._request_meas(bool(ids))
+        return _downsample(meas, interval, ids, from_ms, to_ms, flag)
 
     def rate(
         self, ids: list[int] | None, from_ms: int, to_ms: int, flag: int = 0
@@ -457,9 +479,6 @@ class TsEngine:
             n_buckets,
             path=str(self.store.root / "bucketed"),
         )
-        # the write ran in the store frame's (serving) session; this
-        # session may still hold the table's earlier file listing
-        self.spark.catalog.refreshTable(name)
         return TsEngine(
             self.spark, lambda: self.spark.table(name), scheme=self.scheme
         )

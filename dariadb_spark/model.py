@@ -359,30 +359,26 @@ def verb_sql(
     bounded: bool,
     order: str,
     gather: str = "COALESCE",
-    hints: tuple[str, ...] = (),
-    args: dict | None = None,
     **frames: DataFrame,
 ) -> DataFrame:
     """One store verb as one ``spark.sql`` statement, ``SELECT <select>``
     plus its sort, run in ``meas``'s own session with ``meas`` bound as
     ``{m}`` (and each of ``frames`` as ``{name}``) in ``select``. A bound
-    frame becomes a temp view of the session the statement runs in, and
-    is dropped once the statement is analyzed, so every frame must come
-    from ``meas``'s session. Request values reach ``select`` only as
-    integers (:func:`ids_in_sql`, :func:`time_bounds_sql`,
-    :func:`flag_predicate_sql`) or as named parameters in ``args``.
+    frame becomes a temp view of its own session, and is dropped once the
+    statement is analyzed, so every frame must come from ``meas``'s
+    session. Request values reach ``select`` only as integers
+    (:func:`ids_in_sql`, :func:`time_bounds_sql`,
+    :func:`flag_predicate_sql`) or inside a bound frame.
 
-    ``bounded`` (the request named its ids) marks the answer as
+    ``bounded`` (the request named its series) marks the answer as
     request-sized: the ``gather`` hint puts it into one partition
     (``COALESCE`` merges the partitions below it, ``REPARTITION``
     shuffles into one and keeps the scan below parallel) and ``SORT BY``
     sorts it there, with no range-partition exchange and no sampling
     job. Otherwise (all series) the statement keeps the global
     ``ORDER BY``."""
-    if bounded:
-        hints = (*hints, f"{gather}(1)")
-    head = f"SELECT /*+ {', '.join(hints)} */" if hints else "SELECT"
+    head = f"SELECT /*+ {gather}(1) */" if bounded else "SELECT"
     sort = "SORT BY" if bounded else "ORDER BY"
     return meas.sparkSession.sql(
-        f"{head} {select} {sort} {order}", args, m=meas, **frames
+        f"{head} {select} {sort} {order}", m=meas, **frames
     )

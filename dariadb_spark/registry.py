@@ -412,8 +412,7 @@ def _partition_file_stats_multi(spark: SparkSession, sf: str) -> DataFrame:
     (``TsEngine.partition_file_stats``, one map-side agg per file); the
     temp store here exists only to hand the driver a deterministic
     multi-file fixture to hash. The scratch directory comes from
-    :func:`~dariadb_spark.streaming.scratch.scratch_dir`; the store
-    read runs in the serving session."""
+    :func:`~dariadb_spark.streaming.scratch.scratch_dir`."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -97,22 +97,22 @@ class SeriesCatalog:
     def to_df(self) -> DataFrame:
         """The (id, name) dimension as a LocalRelation: no Spark job to
         build it or to broadcast it."""
-        return self._frame(self.spark)
+        return self._local_df()
 
-    def _frame(self, spark: SparkSession) -> DataFrame:
-        """:meth:`to_df` built in ``spark``, which a statement of that
-        session can bind by name (the engine's pattern scan)."""
-        return self._local_df(spark)
-
-    def _local_df(self, spark: SparkSession) -> DataFrame:
+    def _local_df(self) -> DataFrame:
         return local_frame(
-            spark,
+            self.spark,
             self._SCHEMA,
             {
                 "id": list(self._name_to_id.values()),
                 "name": list(self._name_to_id),
             },
         )
+
+    def size(self) -> int:
+        """How many series this catalog names (its driver-side snapshot):
+        a bound on what any glob matches."""
+        return len(self._name_to_id)
 
     def resolve(self, meas: DataFrame) -> DataFrame:
         """Attach names via broadcast join (J2 in SURVEY.md §2.3)."""
@@ -205,14 +205,8 @@ class TableSeriesCatalog(SeriesCatalog):
             p for p in self.path.glob("v-*") if (p / "_SUCCESS").exists()
         )
 
-    def _read_version(
-        self, version_dir: Path, spark: SparkSession | None = None
-    ) -> DataFrame:
-        return (
-            (spark or self.spark)
-            .read.schema(self._SCHEMA)
-            .parquet(str(version_dir))
-        )
+    def _read_version(self, version_dir: Path) -> DataFrame:
+        return self.spark.read.schema(self._SCHEMA).parquet(str(version_dir))
 
     def refresh(self) -> None:
         """Re-pin the in-memory snapshot to the latest committed
@@ -287,15 +281,13 @@ class TableSeriesCatalog(SeriesCatalog):
                     shutil.rmtree(p, ignore_errors=True)
 
     def _persist(self) -> None:
-        self._write_version(
-            self._local_df(self.spark), self._next_version()
-        )
+        self._write_version(self._local_df(), self._next_version())
 
-    def _frame(self, spark: SparkSession) -> DataFrame:
+    def to_df(self) -> DataFrame:
         versions = self._versions()
         if not versions:
-            return local_frame(spark, self._SCHEMA, {"id": [], "name": []})
-        return self._read_version(versions[-1], spark)
+            return local_frame(self.spark, self._SCHEMA, {"id": [], "name": []})
+        return self._read_version(versions[-1])
 
     def register_bulk(self, mapping: DataFrame) -> None:
         """Distributed override of the parent's collect-based bulk

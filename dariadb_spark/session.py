@@ -14,7 +14,7 @@ import tempfile
 import threading
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs the engine semantics depend on; all runtime-settable.
 RUNTIME_CONFS: dict[str, str] = {
@@ -35,8 +35,9 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 #: Confs of the serving session (:func:`serving_session`), applied over
-#: :data:`RUNTIME_CONFS`. A store verb answers a request-sized read, for
-#: which Spark's per-query fixed costs outweigh what these features buy.
+#: :data:`RUNTIME_CONFS`. A store verb given ids answers a request-sized
+#: read, for which Spark's per-query fixed costs outweigh what these
+#: features buy.
 SERVING_CONFS: dict[str, str] = {
     # AQE runs each shuffle's map side as a job of its own and re-plans
     # after it: one verb, two jobs. Without it a verb is one job.
@@ -74,12 +75,15 @@ _SERVING_LOCK = threading.Lock()
 
 
 def serving_session(spark: SparkSession) -> SparkSession:
-    """The session the store verbs run in: a child of ``spark``
+    """The session the engine serves request-sized store reads in
+    (``TsEngine``'s verbs given ids): a child of ``spark``
     (``newSession()``: same SparkContext, cache and catalog, its own confs
-    and temp views), made once per session. It starts from ``spark``'s
-    SQL confs, then :data:`RUNTIME_CONFS`, then :data:`SERVING_CONFS`.
-    ``spark`` itself keeps its confs (AQE on), which the analytics
-    queries need. Given a serving session, returns it."""
+    and temp views), made once per session. It starts from a snapshot of
+    ``spark``'s SQL confs taken when it is made (later changes to
+    ``spark`` do not reach it), then :data:`RUNTIME_CONFS`, then
+    :data:`SERVING_CONFS`. ``spark`` itself keeps its confs (AQE on), as
+    do the store's own ``read()`` frames and everything else built on
+    them. Given a serving session, returns it."""
     if getattr(spark, "_dariadb_serving_of", None) is not None:
         return spark
     serving = getattr(spark, "_dariadb_serving", None)
@@ -100,6 +104,22 @@ def serving_session(spark: SparkSession) -> SparkSession:
             ensure_runtime_confs(serving)
             spark._dariadb_serving = serving
     return serving
+
+
+def in_session(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark`` (a session of the
+    same SparkContext), so that ``spark``'s confs plan and run it and a
+    ``spark.sql`` statement binds it as a temp view of ``spark``. The
+    plan's relations keep the session that built them, which still
+    supplies their file listing and read options. The plan is already
+    analyzed and its files listed, so neither is done again."""
+    if df.sparkSession is spark:
+        return df
+    plan = df._jdf.queryExecution().analyzed()
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, plan
+    )
+    return DataFrame(jdf, spark)
 
 
 def _ship_package(spark: SparkSession) -> None:

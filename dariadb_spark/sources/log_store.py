@@ -74,7 +74,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import MEAS_FIELDS
-from dariadb_spark.session import serving_session
 from dariadb_spark.sources.store_protocol import (
     SEGMENT_TMP_GLOB,
     live_rows,
@@ -394,10 +393,7 @@ class LogTsStore:
         # ONE scan over the explicit file list; basePath re-derives the
         # hive p_date so Catalyst still prunes whole day directories
         # (PartitionFilters) — pinned by the parametrized engine test.
-        # The frame belongs to the serving session.
-        return live_rows(
-            read_days(serving_session(self.spark), self.files_dir, sorted(live))
-        )
+        return live_rows(read_days(self.spark, self.files_dir, sorted(live)))
 
     def compact(self, files_per_partition: int = 1) -> None:
         """Fold each day's small append files into ``files_per_partition``

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.model import MEAS_DDL, MEAS_FIELDS
-from dariadb_spark.session import serving_session
 from dariadb_spark.sources.store_protocol import (
     live_rows,
     read_days,
@@ -187,15 +186,9 @@ class ParquetTsStore:
         Spark lists ``data/`` once, when the frame is built, and a held
         frame keeps that listing: files an ``append()`` commits later are
         not in it. Each engine verb calls ``read()`` afresh, so every
-        request sees every append acknowledged before it. The frame
-        belongs to the serving session
-        (:func:`~dariadb_spark.session.serving_session`)."""
+        request sees every append acknowledged before it."""
         return live_rows(
-            read_days(
-                serving_session(self.spark),
-                self.data_dir,
-                [str(self.data_dir)],
-            )
+            read_days(self.spark, self.data_dir, [str(self.data_dir)])
         )
 
     def read_snapshot(self) -> DataFrame:
@@ -205,9 +198,7 @@ class ParquetTsStore:
         files = sorted(
             str(p) for p in self.data_dir.glob("p_date=*/*.parquet")
         )
-        return live_rows(
-            read_days(serving_session(self.spark), self.data_dir, files)
-        )
+        return live_rows(read_days(self.spark, self.data_dir, files))
 
     # -- T5: compaction (Dropper / Engine::compress_all) ------------------
     def compact(self, files_per_partition: int = 1) -> None:

@@ -156,8 +156,9 @@ def test_scheme_verbs_over_the_wire(served):
 
 
 def test_pattern_special_characters_over_the_wire(served):
-    """A glob off the wire reaches SQL only as a parameter: ``'``, ``\\``,
-    ``%`` and ``_`` match themselves and raise no SQL error."""
+    """A glob off the wire reaches Spark only as a Column literal:
+    ``'``, ``\\``, ``%`` and ``_`` match themselves and raise no SQL
+    error."""
     eng, srv = served
     tw = T0 + 500 * HOUR + 7  # no other test writes this instant
     names = ["w'q.x", "w\\q.x", "w%q.x", "w_q.x", "wZq.x"]

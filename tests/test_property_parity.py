@@ -62,8 +62,8 @@ def _engine(spark, rows) -> TsEngine:
 def _engines(spark, rows) -> list[TsEngine]:
     """``rows`` as an engine over a main-session frame and one over a
     serving-session frame: the verbs run compiled, with AQE, in the first
-    and interpreted, without AQE, in the second, which is where store
-    reads run them."""
+    and interpreted, without AQE, in the second, which is where a store's
+    verbs given ids run them."""
     from dariadb_spark.session import serving_session
 
     return [_engine(spark, rows), _engine(serving_session(spark), rows)]

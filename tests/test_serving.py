@@ -1,15 +1,15 @@
-"""The serving session the store verbs run in
-(``session.serving_session``): its confs stay its own while the main
-session keeps AQE and codegen, the verb statements leave no temp views
-behind, a warm verb compiles no class for fresh request values, and a
-name glob reaches SQL only as a parameter, so its special characters
-match literally."""
+"""The serving session the store verbs given ids run in
+(``session.serving_session``): only those verbs run there, its confs stay
+its own while the main session keeps AQE and codegen, the verb statements
+leave no temp views behind, a warm verb compiles no class for fresh
+request values, and a name glob reaches Spark only as a Column literal,
+so its special characters match literally."""
 
 from __future__ import annotations
 
 import pytest
 
-from dariadb_spark.engine import TsEngine
+from dariadb_spark.engine import PATTERN_REQUEST_MAX_SERIES, TsEngine
 from dariadb_spark.session import (
     RUNTIME_CONFS,
     SERVING_CONFS,
@@ -59,21 +59,59 @@ def _formatter_views(session) -> list[str]:
     ]
 
 
-def test_store_reads_run_in_one_serving_session(spark, store_engine):
-    serving = store_engine.meas().sparkSession
+def test_request_sized_store_reads_run_in_the_serving_session(
+    spark, store_engine
+):
+    """A store verb given ids runs in the serving session; the store's own
+    ``read()``, the verbs over all series and the other consumers of a
+    store frame (window operators, rollups) keep the main session."""
+    serving = serving_session(spark)
     assert serving is not spark
-    assert serving is serving_session(spark)
     assert serving_session(serving) is serving
     assert serving.sparkContext is spark.sparkContext
-    # every verb's answer comes from that session
+    assert store_engine.meas().sparkSession is spark
     for verb, build in _verbs(store_engine, 0).items():
         assert build().sparkSession is serving, verb
+    store_wide = {
+        "read_interval": store_engine.read_interval(None, T0, END),
+        "current_value": store_engine.current_value(None),
+        "stat": store_engine.stat(None, T0, END),
+        "load_min_max": store_engine.load_min_max(),
+        "downsample": store_engine.downsample("day"),
+        "rate": store_engine.rate([1, 2], T0, END),
+        "rolling_median": store_engine.rolling_median([1, 2], T0, END),
+        "partition_stats": store_engine.partition_stats(),
+    }
+    for verb, df in store_wide.items():
+        assert df.sparkSession is spark, verb
     # NO_CODEGEN leaves no whole-stage codegen stage (they print as
     # "*(n)"), while the scan still reads parquet vectorized
     df = store_engine.stat([1, 2], T0, END)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "*(" not in plan and "Batched: true" in plan, plan
+
+
+def test_pattern_scan_over_a_large_catalog_sorts_globally(spark, tmp_path):
+    """Over a catalog larger than ``PATTERN_REQUEST_MAX_SERIES`` a glob
+    may match a store-sized share of the series: the pattern scan then
+    keeps the global range-partitioned sort in the main session, and
+    still answers in (id, time) order."""
+    eng = TsEngine.open(spark, str(tmp_path / "s"))
+    eng.append(_grid())
+    small = eng.read_interval_by_pattern("*", T0, END)
+    assert small.sparkSession is serving_session(spark)
+    for sid in range(PATTERN_REQUEST_MAX_SERIES + 1):
+        eng.scheme.register(f"wide.s{sid}", sid)
+    wide = eng.read_interval_by_pattern("wide.*", T0, END)
+    assert wide.sparkSession is spark
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" in plan, plan
+    rows = [(r.id, r.time) for r in wide.collect()]
+    assert rows == sorted(rows)
+    assert rows == [
+        (r.id, r.time) for r in eng.read_interval(None, T0, END).collect()
+    ]
 
 
 def test_sessions_keep_their_own_confs(spark, store_engine, sf_dir):
