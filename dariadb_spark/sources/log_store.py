@@ -67,35 +67,28 @@ import json
 import os
 import shutil
 import uuid
+from collections import Counter
 from pathlib import Path
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_FIELDS
+from dariadb_spark.model import _DAY_STR_MAX, MEAS_FIELDS, _day_str
 from dariadb_spark.sources.store_protocol import (
     SEGMENT_TMP_GLOB,
     live_rows,
     read_days,
+    sorted_rewrite,
+    with_day,
     write_segments,
 )
-
-_DAY_MS = 86_400_000
 
 
 class ConcurrentModificationError(RuntimeError):
     """A maintenance commit lost its optimistic-concurrency race: a file
     it planned to remove was already removed (or rewritten) by a
     concurrent commit. The caller re-plans from a fresh snapshot."""
-
-
-def _day_of(ms: int) -> str:
-    import datetime as dt
-
-    return dt.datetime.fromtimestamp(
-        (ms // _DAY_MS) * 86_400, dt.timezone.utc
-    ).strftime("%Y-%m-%d")
 
 
 class LogTsStore:
@@ -293,27 +286,25 @@ class LogTsStore:
         )
 
     # -- data-file writing ------------------------------------------------
-    def _write_files(self, df: DataFrame) -> list[dict]:
+    def _write_files(
+        self, df: DataFrame, files_per_day: int | None = None
+    ) -> list[dict]:
         """Spark-write ``df`` hive-partitioned by day into a unique
         staging dir, then rename the part files into ``files/`` under
         unique names; return the add actions. Rename-into-place is safe
         from any number of concurrent writers (nothing shared, names
-        unique) and the files stay INVISIBLE until the log commit."""
+        unique) and the files stay INVISIBLE until the log commit. With
+        ``files_per_day`` the write is a maintenance rewrite: at most that
+        many (id, time)-sorted files per day (:func:`sorted_rewrite`)."""
         token = uuid.uuid4().hex
         stage = self.root / f"stage-{token}"
         adds: list[dict] = []
+        rows = with_day(df.select(*MEAS_FIELDS))
+        if files_per_day:
+            rows = sorted_rewrite(rows, files_per_day)
         try:
-            (
-                df.select(*MEAS_FIELDS)
-                .withColumn(
-                    "p_date",
-                    F.date_format(
-                        F.timestamp_millis(F.col("time")), "yyyy-MM-dd"
-                    ),
-                )
-                .write.partitionBy("p_date")
-                .mode("errorifexists")
-                .parquet(str(stage))
+            rows.write.partitionBy("p_date").mode("errorifexists").parquet(
+                str(stage)
             )
             for pdir in sorted(stage.glob("p_date=*")):
                 day = pdir.name.split("=", 1)[1]
@@ -396,35 +387,28 @@ class LogTsStore:
         return live_rows(read_days(self.spark, self.files_dir, sorted(live)))
 
     def compact(self, files_per_partition: int = 1) -> None:
-        """Fold each day's small append files into ``files_per_partition``
-        (id, time)-sorted files — adds + removes in ONE atomic commit, so
-        readers see either the old layout or the new, never both."""
+        """Fold the files of each day holding more than
+        ``files_per_partition`` into at most that many (id, time)-sorted
+        files: one Spark job for all such days, and adds + removes in ONE
+        atomic commit, so readers see either the old layout or the new,
+        never both. Other days are left as written; with none to fold
+        there is no job and no commit."""
         live = self._snapshot()
-        by_day: dict[str, list[str]] = {}
-        for path, day in live.items():
-            by_day.setdefault(day, []).append(path)
-        adds: list[dict] = []
-        removes: list[str] = []
-        for day, paths in sorted(by_day.items()):
-            if len(paths) <= files_per_partition:
-                continue
-            merged = (
-                read_days(self.spark, self.files_dir, paths)
-                .repartition(files_per_partition)
-                .sortWithinPartitions("id", "time")
-                .select(*MEAS_FIELDS)
-            )
-            adds.extend(self._write_files(merged))
-            removes.extend(paths)
-        if adds or removes:
-            self._commit(adds, removes, validate=True)
+        per_day = Counter(live.values())
+        dirty = sorted(
+            p for p, day in live.items() if per_day[day] > files_per_partition
+        )
+        if dirty:
+            merged = read_days(self.spark, self.files_dir, dirty)
+            adds = self._write_files(merged, files_per_partition)
+            self._commit(adds, dirty, validate=True)
 
     def erase_old(self, cutoff_ms: int) -> None:
         """Retention: fully-expired days are REMOVE ACTIONS ONLY — a
         logical delete that reads nothing (the at-scale win over any
         rewrite); the single boundary day is rewritten to keep
         ``time >= cutoff``."""
-        cutoff_day = _day_of(cutoff_ms)
+        cutoff_day = _day_str(min(cutoff_ms, _DAY_STR_MAX))
         live = self._snapshot()
         adds: list[dict] = []
         removes: list[str] = []
@@ -435,12 +419,10 @@ class LogTsStore:
             elif day == cutoff_day:
                 boundary.append(path)
         if boundary:
-            kept = (
-                read_days(self.spark, self.files_dir, boundary)
-                .where(F.col("time") >= cutoff_ms)
-                .select(*MEAS_FIELDS)
+            kept = read_days(self.spark, self.files_dir, boundary).where(
+                F.col("time") >= cutoff_ms
             )
-            adds.extend(self._write_files(kept))
+            adds.extend(self._write_files(kept, 1))
             removes.extend(boundary)
         if adds or removes:
             self._commit(adds, removes, validate=True)
@@ -458,7 +440,10 @@ class LogTsStore:
         can never become live again — provided no append is in flight: an
         append's files are on disk before its commit names them, so run
         vacuum in a maintenance window. Hidden temp segments an
-        interrupted append left behind are deleted too.
+        interrupted append left behind are deleted too, and so are the
+        ``stage-<token>/`` directories of a crashed Spark write (an
+        append, compact or erase_old that died before renaming its files
+        into ``files/``): with no write in flight, none is in use.
 
         The union of live sets over [horizon, latest] is computed as
         live(horizon) ∪ {files added after the horizon}: any file live at
@@ -479,6 +464,8 @@ class LogTsStore:
                 dropped += 1
         for f in self.files_dir.glob(f"p_date=*/{SEGMENT_TMP_GLOB}"):
             f.unlink()
+        for stage in self.root.glob("stage-*"):
+            shutil.rmtree(stage)
         # prune now-empty day dirs so directory listings stay honest
         for d in sorted(self.files_dir.glob("p_date=*")):
             if not any(d.iterdir()):

@@ -8,8 +8,8 @@ Reference storage (libdariadb/storage/):
   * Pages + .pagei index (pages/)    → compacted parquet, sorted (id,time)
     within files so row-group min/max stats prune by both id and time —
     the exact role of the chunk index
-  * Dropper background WAL→page drop → ``compact()``
-  * eraseOld retention (engine.cpp)  → partition-pruned rewrite/drop
+  * Dropper background WAL→page drop → ``compact()`` of the dirty days
+  * eraseOld retention (engine.cpp)  → partition drop + boundary rewrite
   * Manifest                         → the filesystem listing (on a real
     deployment this store is one Delta/Iceberg table and the transaction
     log plays manifest/WAL; this class keeps the same interface)
@@ -25,26 +25,22 @@ from __future__ import annotations
 
 import os
 import shutil
+from fnmatch import fnmatch
 from pathlib import Path
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_DDL, MEAS_FIELDS
+from dariadb_spark.model import _DAY_STR_MAX, MEAS_FIELDS, _day_str
 from dariadb_spark.sources.store_protocol import (
+    SEGMENT_TMP_GLOB,
     live_rows,
     read_days,
+    sorted_rewrite,
+    with_day,
     write_segments,
 )
-
-_DAY_MS = 86_400_000
-
-
-def _with_day(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "p_date", F.date_format(F.timestamp_millis(F.col("time")), "yyyy-MM-dd")
-    )
 
 
 class ParquetTsStore:
@@ -62,12 +58,17 @@ class ParquetTsStore:
       mid-append can see some of its days only. A frame from ``read()``
       or ``read_snapshot()`` keeps the listing taken when it was built,
       so it does not change between its own jobs.
-    * ``compact()`` / ``erase_old()`` rewrite directories in place and
-      require a single-maintainer window: no concurrent append, and
-      concurrent readers may fail mid-swap and must retry. A swap that
-      raises is undone at once, and a crash inside it is repaired when
-      the store is next opened (:meth:`_recover_compaction`), so do not
-      open the store from a second process while one compacts it.
+    * ``compact()`` / ``erase_old()`` write only the days they change
+      into ``_compact_tmp/``, hard-link every other live file beside
+      them and swap that tree in for ``data/`` (:meth:`_publish`).
+      Readers see the whole old ``data/`` until the swap; a frame built
+      before it still finds the untouched days' files at the same paths.
+      They require a single-maintainer window: no concurrent append, and
+      a reader of a rewritten day may fail after the swap and must
+      retry. A swap that raises is undone at once, and a crash at any
+      step is repaired when the store is next opened
+      (:meth:`_recover_swap`), so do not open the store from a second
+      process while one maintains it.
     * Appends of driver-side rows (a ``pyarrow.Table``: engine tuples and
       both wire encodings) are safe concurrent with each other from any
       number of threads or processes: each segment has a unique name and
@@ -90,21 +91,20 @@ class ParquetTsStore:
         self.spark = spark
         self.root = Path(root)
         self.data_dir = self.root / "data"
-        self._recover_compaction()
+        self._recover_swap()
         self.data_dir.mkdir(parents=True, exist_ok=True)
 
-    def _recover_compaction(self) -> None:
-        """Repair what an interrupted :meth:`compact` left behind.
-        ``compact`` writes ``_compact_tmp/``, renames ``data/`` to
-        ``_old_data/``, renames ``_compact_tmp/`` to ``data/`` and deletes
-        ``_old_data/``. The swap finished only if ``_compact_tmp/`` is
-        gone and ``data/`` is there: then ``data/`` is the whole
-        compacted copy and ``_old_data/`` (perhaps half deleted) goes.
-        Otherwise the untouched ``_old_data/`` is the store and goes
-        back. A ``data/`` beside it holds only what was appended after
-        the first rename (an append ``mkdir``s its day directory), so
-        those files move into ``_old_data/`` first. Last, a leftover
-        ``_compact_tmp/`` is an unfinished rewrite and goes."""
+    def _recover_swap(self) -> None:
+        """Repair what an interrupted :meth:`_publish` left behind: it
+        builds ``_compact_tmp/``, renames ``data/`` to ``_old_data/`` and
+        ``_compact_tmp/`` to ``data/``, then deletes ``_old_data/``. If
+        ``data/`` is there and ``_compact_tmp/`` gone, the swap finished
+        and ``_old_data/`` (perhaps half deleted) goes. Otherwise the
+        untouched ``_old_data/`` is the store and goes back. A ``data/``
+        beside it holds only what was appended after the first rename (an
+        append ``mkdir``s its day directory), so those files move into
+        ``_old_data/`` first. Last, a leftover ``_compact_tmp/`` is an
+        unfinished rewrite and goes."""
         old = self.root / "_old_data"
         tmp = self.root / "_compact_tmp"
         if old.exists():
@@ -156,7 +156,7 @@ class ParquetTsStore:
 
         obs = Observation()
         writer = (
-            _with_day(meas.select(*MEAS_FIELDS))
+            with_day(meas.select(*MEAS_FIELDS))
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .write.partitionBy("p_date")
         )
@@ -200,62 +200,60 @@ class ParquetTsStore:
         )
         return live_rows(read_days(self.spark, self.data_dir, files))
 
-    # -- T5: compaction (Dropper / Engine::compress_all) ------------------
-    def compact(self, files_per_partition: int = 1) -> None:
-        """Rewrite each day partition into few files sorted by (id, time) —
-        the WAL→page drop: small append deltas become scan-optimal files
-        whose row-group stats prune on id and time."""
-        df = read_days(self.spark, self.data_dir, [str(self.data_dir)])
+    # -- maintenance: rewrite some days, then swap the tree ---------------
+    def _publish(
+        self, rewrite: list[str], keep: list[Path], n: int, where: str = "true"
+    ) -> None:
+        """Swap in a ``data/`` of the ``where`` rows of the day directories
+        ``rewrite``, written by one Spark job as at most ``n`` sorted files
+        per day, plus hard links to every file of the day directories
+        ``keep``; any other day is left out."""
         tmp = self.root / "_compact_tmp"
-        (
-            df.repartition(files_per_partition, "p_date")
-            .sortWithinPartitions("p_date", "id", "time")
-            .write.partitionBy("p_date")
-            .mode("overwrite")
-            .parquet(str(tmp))
-        )
+        shutil.rmtree(tmp, ignore_errors=True)
+        if rewrite:
+            rows = read_days(self.spark, self.data_dir, rewrite).where(where)
+            sorted_rewrite(rows, n).write.partitionBy("p_date").parquet(str(tmp))
+        tmp.mkdir(exist_ok=True)
+        for day in keep:
+            (tmp / day.name).mkdir()
+            for f in day.iterdir():
+                if not fnmatch(f.name, SEGMENT_TMP_GLOB):
+                    os.link(f, tmp / day.name / f.name)
         swap = self.root / "_old_data"
         try:
             self.data_dir.rename(swap)
             tmp.rename(self.data_dir)
         except BaseException:
-            self._recover_compaction()
+            self._recover_swap()
             raise
         shutil.rmtree(swap)
 
+    # -- T5: compaction (Dropper / Engine::compress_all) ------------------
+    def compact(self, files_per_partition: int = 1) -> None:
+        """The WAL→page drop: rewrite each day holding more than
+        ``files_per_partition`` files into at most that many files sorted
+        by (id, time), all in one Spark job. Other days are left as
+        written. With nothing to rewrite there is no job and no swap, and
+        only leftover ``.part-*.tmp`` segments are deleted."""
+        days = sorted(self.data_dir.glob("p_date=*"))
+        n = files_per_partition
+        dirty = [d for d in days if len(list(d.glob("*.parquet"))) > n]
+        if not dirty:
+            for f in self.data_dir.glob(f"p_date=*/{SEGMENT_TMP_GLOB}"):
+                f.unlink()
+            return
+        keep = [d for d in days if d not in dirty]
+        self._publish([str(d) for d in dirty], keep, n)
+
     # -- T4: retention (Engine::eraseOld) ---------------------------------
     def erase_old(self, cutoff_ms: int) -> None:
-        """Delete measurements with ``time < cutoff``. Whole days before
-        the cutoff are dropped without reading them (partition prune);
-        only the single boundary day is rewritten."""
-        cutoff_day = (cutoff_ms // _DAY_MS) * _DAY_MS
-        boundary = None
-        for part in sorted(self.data_dir.glob("p_date=*")):
-            day = part.name.split("=", 1)[1]
-            import datetime as _dt
-
-            day_ms = int(
-                _dt.datetime.strptime(day, "%Y-%m-%d")
-                .replace(tzinfo=_dt.timezone.utc)
-                .timestamp()
-                * 1000
-            )
-            if day_ms + _DAY_MS <= cutoff_ms:
-                shutil.rmtree(part)  # fully expired day
-            elif day_ms == cutoff_day:
-                boundary = part
-        if boundary is not None:
-            kept = (
-                read_days(self.spark, self.data_dir, [str(boundary)])
-                .where(F.col("time") >= cutoff_ms)
-                .select(*MEAS_FIELDS)
-            )
-            tmp = self.root / "_erase_tmp"
-            kept.write.mode("overwrite").parquet(str(tmp))
-            shutil.rmtree(boundary)
-            rewritten = self.spark.read.schema(MEAS_DDL).parquet(str(tmp))
-            if rewritten.limit(1).count() > 0:
-                _with_day(rewritten).write.partitionBy("p_date").mode(
-                    "append"
-                ).parquet(str(self.data_dir))
-            shutil.rmtree(tmp)
+        """Delete measurements with ``time < cutoff``. Days wholly before
+        it are left out of the new tree unread, the cutoff's own day is
+        the one rewrite (one Spark job) and later days are hard-linked.
+        Nothing is deleted before the swap, so a crash loses no kept row."""
+        cut = f"p_date={_day_str(min(cutoff_ms, _DAY_STR_MAX))}"
+        days = sorted(self.data_dir.glob("p_date=*"))
+        keep = [d for d in days if d.name > cut]
+        boundary = [str(d) for d in days if d.name == cut]
+        if len(keep) < len(days):
+            self._publish(boundary, keep, 1, f"time >= {cutoff_ms}")

@@ -24,8 +24,11 @@ The contract each verb must keep, backend-agnostic:
   frame must keep seeing the same rows even if a writer commits during
   the query's jobs. (For a log backend every read is naturally a
   pinned snapshot; ``read`` may simply alias this.)
-* ``compact(files_per_partition=1)`` — rewrite partitions into few
-  (id, time)-sorted files without changing the row multiset.
+* ``compact(files_per_partition=1)`` — rewrite each day holding more
+  than ``files_per_partition`` files into at most that many
+  (id, time)-sorted files, without changing the row multiset; a day
+  holding at most that many files is left as written. All dirty days
+  are rewritten by one Spark job (:func:`sorted_rewrite`).
 * ``erase_old(cutoff_ms)`` — delete rows with ``time < cutoff``:
   whole expired day partitions dropped WITHOUT reading their data,
   only the boundary day rewritten.
@@ -59,6 +62,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from dariadb_spark.model import (
     _DAY_MS,
@@ -119,6 +123,28 @@ def read_days(
         .schema(STORE_DDL)
         .parquet(*paths)
     )
+
+
+def with_day(meas: DataFrame) -> DataFrame:
+    """``meas`` plus its UTC day as ``p_date``, the partition column of
+    every store write."""
+    return meas.withColumn(
+        "p_date", F.date_format(F.timestamp_millis(F.col("time")), "yyyy-MM-dd")
+    )
+
+
+def sorted_rewrite(days: DataFrame, n: int) -> DataFrame:
+    """The frame maintenance writes with ``partitionBy("p_date")``:
+    ``days`` (which must already carry ``p_date``) in at most ``n``
+    partitions, each sorted by (p_date, id, time).
+
+    ``coalesce`` merges scan partitions without a shuffle, so the rewrite
+    is one single-stage job, and a day's rows land in at most ``n``
+    tasks, hence at most ``n`` files. The sort satisfies the ordering the
+    partitioned write needs, so Spark adds no sort of its own and every
+    file comes out sorted by (id, time): row-group statistics then prune
+    on both."""
+    return days.coalesce(n).sortWithinPartitions("p_date", "id", "time")
 
 
 def live_rows(days: DataFrame) -> DataFrame:

@@ -506,12 +506,12 @@ def test_isolated_append_of_driver_rows_is_rejected(spark, tmp_path):
 def test_segment_day_matches_spark_day_and_pruning_bound(
     spark, tmp_path, backend
 ):
-    """A segment lands in the day directory Spark's ``_with_day`` and
+    """A segment lands in the day directory Spark's ``with_day`` and
     the pruning bound's ``_day_str`` give its time: before 1970, at
     midnight - 1 ms, at midnight, and for one append spanning two days
     (one file in each)."""
     from dariadb_spark.model import _day_str, local_frame
-    from dariadb_spark.sources.parquet_store import _with_day
+    from dariadb_spark.sources.store_protocol import with_day
 
     eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
     appends = [
@@ -533,7 +533,7 @@ def test_segment_day_matches_spark_day_and_pruning_bound(
     times = sorted(landed)
     spark_day = {
         r.time: r.p_date
-        for r in _with_day(
+        for r in with_day(
             local_frame(spark, "time bigint", {"time": times})
         ).collect()
     }
@@ -679,7 +679,8 @@ def test_reopen_recovers_interrupted_compaction(spark, tmp_path, crash):
     grid = _grid()
     # a compacted copy of the same rows, to plant as _compact_tmp/ or data/
     twin = ParquetTsStore(spark, str(tmp_path / "twin"))
-    TsEngine(spark, twin.read, twin).append(grid)
+    for part in (grid[:30], grid[30:70], grid[70:]):
+        TsEngine(spark, twin.read, twin).append(part)
     twin.compact()
 
     root = tmp_path / "s"
@@ -723,7 +724,8 @@ def test_compaction_swap_undone_when_an_append_races_it(
     """An append landing between compact()'s two renames makes the
     second rename fail (``data/`` exists again). compact() raises and
     leaves one whole ``data/`` in place: the original rows plus the
-    racing append, with nothing left to repair on reopen."""
+    racing append, with nothing left to repair on reopen. The grid is
+    appended in parts so that compact() has days to rewrite."""
     import pathlib
 
     from dariadb_spark.model import meas_table
@@ -733,7 +735,8 @@ def test_compaction_swap_undone_when_an_append_races_it(
     store = ParquetTsStore(spark, str(root))
     eng = TsEngine(spark, store.read, store)
     grid = _grid()
-    eng.append(grid)
+    for part in (grid[:30], grid[30:70], grid[70:]):
+        eng.append(part)
     late = [(7, T0 + 5 * DAY, 7.5, 1)]
     rename = pathlib.Path.rename
 
@@ -750,6 +753,189 @@ def test_compaction_swap_undone_when_an_append_races_it(
     assert {p.name for p in root.iterdir()} == {"data"}
     got = store.read().select("id", "time", "value", "flag").collect()
     assert sorted(map(tuple, got)) == sorted(grid + late)
+
+
+def _inodes(store) -> dict[str, int]:
+    return {
+        str(f): f.stat().st_ino
+        for f in store.data_dir.glob("p_date=*/*.parquet")
+    }
+
+
+def test_compact_rewrites_only_the_dirty_day_in_one_job(spark, tmp_path):
+    """A compaction with one day holding two files runs one Spark job and
+    rewrites that day only: every other day keeps its file at the same
+    path with the same inode (hard-linked into the new tree)."""
+    eng = TsEngine.open(spark, str(tmp_path / "s"))
+    grid = _grid()
+    eng.append(grid)  # one segment per day
+    late = [(0, T0 + 1, 0.5, 1)]  # a second file in 2024-01-01
+    eng.append(late)
+    before = _inodes(eng.store)
+    dirty = {f for f in before if "p_date=2024-01-01" in f}
+    assert len(dirty) == 2
+    assert _spark_jobs(spark, eng.compact) == 1
+    after = _inodes(eng.store)
+    rewritten = {f for f in after if "p_date=2024-01-01" in f}
+    assert len(rewritten) == 1 and not rewritten & dirty
+    assert {f: i for f, i in after.items() if f not in rewritten} == {
+        f: i for f, i in before.items() if f not in dirty
+    }
+    got = eng.read_interval(None, 0, 2**60).collect()
+    assert [tuple(r) for r in got] == sorted(grid + late)
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_compact_with_nothing_to_rewrite_runs_no_job(spark, tmp_path, backend):
+    """Every day holds one file: compact() runs no job and publishes
+    nothing (no swap on the parquet store, no commit on the log store),
+    and the parquet store still deletes a leftover temp segment."""
+    from dariadb_spark.sources.store_protocol import SEGMENT_TMP_GLOB
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    eng.append(_grid())
+    store = eng.store
+    day = next(store.data_dir.glob("p_date=*"))
+    leftover = day / SEGMENT_TMP_GLOB.replace("*", "interrupted")
+    leftover.write_bytes(b"half a segment")
+    tree = store.data_dir.stat().st_ino
+    before = _inodes(store)
+    version = store.latest_version() if backend == "log" else None
+    assert _spark_jobs(spark, eng.compact) == 0
+    assert store.data_dir.stat().st_ino == tree
+    assert _inodes(store) == before
+    if backend == "log":
+        assert store.latest_version() == version
+    else:
+        assert not leftover.exists()
+        assert {p.name for p in store.root.iterdir()} == {"data"}
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_compact_writes_dirty_days_sorted_in_one_job(spark, tmp_path, backend):
+    """Two dirty days are folded by one Spark job into one file each,
+    sorted by (id, time) (read back with pyarrow: the appended rows came
+    last, so an unsorted merge would show)."""
+    import pyarrow.parquet as pq
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    grid = _grid()
+    eng.append(grid)
+    late = [(0, T0 + 1, 0.5, 1), (1, T0 + 2 * DAY + 1, 1.5, 1)]
+    eng.append(late)
+    assert _spark_jobs(spark, eng.compact) == 1
+    files = {
+        f: day
+        for f in _live_files(eng.store)
+        for day in ("2024-01-01", "2024-01-03")
+        if f"p_date={day}/" in f
+    }
+    assert sorted(files.values()) == ["2024-01-01", "2024-01-03"]
+    for f in files:
+        t = pq.read_table(f, columns=["id", "time"])
+        keys = list(zip(*(t.column(c).to_pylist() for c in ("id", "time"))))
+        assert keys == sorted(keys) and len(keys) == 21
+    got = eng.read_interval(None, 0, 2**60).collect()
+    assert [tuple(r) for r in got] == sorted(grid + late)
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_erase_old_runs_one_job_and_never_reads_an_expired_day(
+    spark, tmp_path, backend
+):
+    """erase_old rewrites the boundary day in one Spark job and drops the
+    expired days unread: one of them is corrupted, so any read of it
+    would raise."""
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    grid = _grid()
+    eng.append(grid)
+    for f in eng.store.data_dir.glob("p_date=2024-01-01/*.parquet"):
+        f.write_bytes(b"not parquet")
+    cutoff = T0 + 10 * STEP + 1  # days 1-2 expired, day 3 is the boundary
+    assert _spark_jobs(spark, lambda: eng.erase_old(cutoff)) == 1
+    got = eng.read_interval(None, 0, 2**60).collect()
+    assert [tuple(r) for r in got] == sorted(t for t in grid if t[1] >= cutoff)
+
+
+@pytest.mark.parametrize("backend", ["parquet", "log"])
+def test_erase_old_past_every_day_empties_the_store(spark, tmp_path, backend):
+    """A cutoff past the last day a date can name (the 2**60 "whole
+    history" sentinel) expires every day instead of raising."""
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend=backend)
+    eng.append(_grid())
+    eng.erase_old(2**60)
+    assert eng.store.read().count() == 0
+
+
+@pytest.mark.parametrize(
+    "crash", ["mid_link", "before_swap", "between_renames", "after_swap"]
+)
+def test_reopen_recovers_interrupted_erase(
+    spark, tmp_path, monkeypatch, crash
+):
+    """A process dying at any step of erase_old's tree swap (its undo
+    never runs) leaves a store that reopens with exactly the rows before
+    the call or exactly the rows after it: the expired days and the
+    boundary day's old file are never deleted before the swap."""
+    import os
+    import pathlib
+    import shutil
+
+    from dariadb_spark.sources.parquet_store import ParquetTsStore
+
+    class Crash(Exception):
+        pass
+
+    root = tmp_path / "s"
+    store = ParquetTsStore(spark, str(root))
+    grid = _grid()
+    for part in (grid[:30], grid[30:70], grid[70:]):
+        TsEngine(spark, store.read, store).append(part)
+    cutoff = T0 + 10 * STEP + 1
+    link, rename, rmtree = os.link, pathlib.Path.rename, shutil.rmtree
+    links = []
+
+    def crashing_link(src, dst):
+        links.append(dst)
+        if crash == "mid_link" and len(links) == 2:
+            raise Crash
+        return link(src, dst)
+
+    def crashing_rename(src, dst):
+        if (crash, src.name) in {
+            ("before_swap", "data"), ("between_renames", "_compact_tmp")
+        }:
+            raise Crash
+        return rename(src, dst)
+
+    def crashing_rmtree(path, *args, **kwargs):
+        if crash == "after_swap" and pathlib.Path(path).name == "_old_data":
+            rmtree(next(pathlib.Path(path).glob("p_date=*")))  # half deleted
+            raise Crash
+        return rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "link", crashing_link)
+    monkeypatch.setattr(pathlib.Path, "rename", crashing_rename)
+    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
+    monkeypatch.setattr(ParquetTsStore, "_recover_swap", lambda self: None)
+    with pytest.raises(Crash):
+        store.erase_old(cutoff)
+    monkeypatch.undo()
+    want = {
+        "mid_link": {"data", "_compact_tmp"},
+        "before_swap": {"data", "_compact_tmp"},
+        "between_renames": {"_old_data", "_compact_tmp"},
+        "after_swap": {"data", "_old_data"},
+    }[crash]
+    assert {p.name for p in root.iterdir()} == want
+
+    reopened = ParquetTsStore(spark, str(root))
+    assert {p.name for p in root.iterdir()} == {"data"}
+    got = reopened.read().select("id", "time", "value", "flag").collect()
+    after = [t for t in grid if t[1] >= cutoff]
+    assert sorted(map(tuple, got)) == sorted(
+        after if crash == "after_swap" else grid
+    )
 
 
 @pytest.mark.parametrize("fail_at", ["write", "rename"])
@@ -2266,6 +2452,27 @@ def test_log_store_vacuum_retention_horizon(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="vacuumed"):
         store.read_version(0)
     assert store.read().count() == 2
+
+
+def test_log_store_vacuum_deletes_a_crashed_writes_stage_dir(spark, tmp_path):
+    """A Spark write that died before renaming its files into ``files/``
+    leaves its ``stage-<token>/`` directory behind; with no write in
+    flight, vacuum deletes it and leaves every live row readable."""
+    import shutil
+
+    from dariadb_spark import TsEngine
+
+    eng = TsEngine.open(spark, str(tmp_path / "s"), backend="log")
+    store = eng.store
+    eng.append([(1, 1_704_067_200_000, 1.0, 1)])
+    stage = store.root / "stage-0123456789abcdef"
+    day = stage / "p_date=2024-01-01"
+    day.mkdir(parents=True)
+    live = next(store.files_dir.glob("p_date=*/*.parquet"))
+    shutil.copyfile(live, day / "part-0.parquet")
+    assert store.vacuum() == 0
+    assert not stage.exists()
+    assert store.read().count() == 1
 
 
 def test_engine_read_version_requires_log_backend(spark, tmp_path):

@@ -253,8 +253,10 @@ def test_request_jobs_attributed_to_their_own_request(served, monkeypatch):
     """Each request runs under its own job group, cleared when it ends.
     A caller that tags a verb with a group of its own and never clears
     it (as a tracer does) must not see the next request's jobs: a
-    ``compact`` after a read adds no job to the read's group."""
+    ``compact`` after a read adds no job to the read's group. A second
+    file in the first day gives that ``compact`` a day to rewrite."""
     eng, srv = served
+    eng.append([(0, T0 + HOUR, 0.5, 1)])
     sc = eng.spark.sparkContext
     st = sc.statusTracker()
     read = eng.read_interval
