@@ -977,13 +977,14 @@ def funnel_latency_op(
     convention. Rank ties cannot occur: row_number orders by (lag, id)
     and (id) is unique within a transition.
 
-    Plan shape (100 TB): the funnel's three per-user min-aggregates
-    partition on `id` (the clustering key); the distribution pass ranks
-    n_converted rows in TWO partitions (one per transition). ABOVE
-    ``rank_threshold`` converted rows per transition, that rank window
-    — whose single cumulative task per transition is the sequential
-    bottleneck at billions of users — is SWAPPED for the HDR log₂×16
-    weighted-count walk (:func:`_hdr_rank_walk`): median and p90
+    Plan shape (100 TB): the funnel's three per-user stage times are
+    windows over one partitioning on `id` (the clustering key), with no
+    join; the distribution pass ranks n_converted rows in TWO
+    partitions (one per transition) and reduces them in one aggregate.
+    ABOVE ``rank_threshold`` converted rows per transition, that rank
+    window — whose single cumulative task per transition is the
+    sequential bottleneck at billions of users — is SWAPPED for the
+    HDR log₂×16 weighted-count walk (:func:`_hdr_rank_walk`): median and p90
     become bounded-error (≤ 1/16 relative) estimates off a
     dimension-sized bucket table, while count and mean stay exact
     (plain sums). The branch decision reads the per-transition counts
@@ -992,33 +993,27 @@ def funnel_latency_op(
     funnel reduction runs once per invocation and the decision costs
     no job of its own.
     """
-    s1 = meas.where(F.col("flag") == _FUNNEL[0]).groupBy("id").agg(
-        F.min("time").alias("t1")
-    )
-    s2 = (
-        meas.where(F.col("flag") == _FUNNEL[1])
-        .join(F.broadcast(s1), "id")
-        .where(F.col("time") >= F.col("t1"))
-        .groupBy("id")
-        .agg(F.min("time").alias("t2"))
-    )
-    s3 = (
-        meas.where(F.col("flag") == _FUNNEL[2])
-        .join(F.broadcast(s2), "id")
-        .where(F.col("time") >= F.col("t2"))
-        .groupBy("id")
-        .agg(F.min("time").alias("t3"))
-    )
-    lag12 = s1.join(s2, "id").select(
-        F.lit("view_to_click").alias("transition"),
-        F.col("id"),
-        (F.col("t2") - F.col("t1")).alias("lag_ms"),
-    )
-    lag23 = s2.join(s3, "id").select(
-        F.lit("click_to_purchase").alias("transition"),
-        F.col("id"),
-        (F.col("t3") - F.col("t2")).alias("lag_ms"),
-    )
+    # Each stage time is the earliest event of its flag at or after the
+    # previous stage's time: three min(CASE) windows over one id
+    # partitioning of the funnel flags' rows, and the per-user aggregate
+    # reuses that partitioning.
+    by_id = Window.partitionBy("id")
+    stages, after = meas.where(F.col("flag").isin(*_FUNNEL)), ""
+    for t, flag in zip(("t1", "t2", "t3"), _FUNNEL):
+        stages = stages.withColumn(
+            t, F.expr(f"min(CASE WHEN flag = {flag}{after} THEN time END)").over(by_id)
+        )
+        after = f" AND time >= {t}"
+    stages = stages.groupBy("id").agg(*(F.min(t).alias(t) for t in ("t1", "t2", "t3")))
+    # Both transitions of a user in one pass; a null lag is a user who
+    # did not reach the later stage.
+    transitions = stages.selectExpr(
+        "inline(array("
+        "named_struct('transition', 'view_to_click', 'id', id,"
+        " 'lag_ms', t2 - t1),"
+        " named_struct('transition', 'click_to_purchase', 'id', id,"
+        " 'lag_ms', t3 - t2)))"
+    ).where("lag_ms IS NOT NULL")
     # localCheckpoint pins the three-stage funnel reduction once, so the
     # stats pass does not re-run it (exchange reuse only applies within
     # one action). The per-transition counts for the branch decision ride
@@ -1026,8 +1021,7 @@ def funnel_latency_op(
     # lags is n_converted rows of 3 columns.
     counts = Observation()
     lags = (
-        lag12.unionByName(lag23)
-        .observe(
+        transitions.observe(
             counts,
             *(
                 F.count(F.when(F.col("transition") == t, 1)).alias(t)
@@ -1069,23 +1063,18 @@ def funnel_latency_op(
         F.row_number().over(wr).alias("rn"),
         F.count("*").over(Window.partitionBy("transition")).alias("m"),
     )
-    stats = ranked.groupBy("transition").agg(
-        F.max("m").alias("n_users"),
-        F.sum("lag_ms").alias("sum_lag"),
-    )
-    med = (
-        ranked.where(F.expr("rn = (m + 1) DIV 2 OR rn = (m + 2) DIV 2"))
-        .groupBy("transition")
-        .agg((2 * F.sum("lag_ms") / F.count("*")).cast("bigint").alias("med2"))
-    )
-    p90 = (
-        ranked.where(F.expr("rn = (9 * m + 9) DIV 10"))
-        .groupBy("transition")
-        .agg(F.max("lag_ms").alias("p90_ms"))
-    )
+    mid = F.expr("rn = (m + 1) DIV 2 OR rn = (m + 2) DIV 2")
     return (
-        stats.join(med, "transition")
-        .join(p90, "transition")
+        ranked.groupBy("transition")
+        .agg(
+            F.max("m").alias("n_users"),
+            F.sum("lag_ms").alias("sum_lag"),
+            (2 * F.sum(F.when(mid, F.col("lag_ms"))) / F.count(F.when(mid, 1)))
+            .cast("bigint")
+            .alias("med2"),
+            F.max(F.when(F.expr("rn = (9 * m + 9) DIV 10"), F.col("lag_ms")))
+            .alias("p90_ms"),
+        )
         .selectExpr(
             "transition",
             "n_users",

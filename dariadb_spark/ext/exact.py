@@ -39,15 +39,6 @@ def ratio_round_spark(a: str, b: str, d: int) -> str:
     return f"(((2 * ({a}) * {p} + ({b})) DIV (2 * ({b}))) / {p}.0d)"
 
 
-def ratio_round_ref(a: int, b: int, d: int) -> float:
-    """Pure-python reference twin of :func:`ratio_round_spark` for test
-    and stress replays: the SAME integer rational, arbitrary-precision
-    (python ints never overflow, so this also serves as the wide
-    variants' reference)."""
-    p = 10**d
-    return ((2 * a * p + b) // (2 * b)) / p
-
-
 def ratio_round_duck(a: str, b: str, d: int) -> str:
     """DuckDB SQL expression for HALF_UP(a / b, d) over integer exprs."""
     p = 10**d

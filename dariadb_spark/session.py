@@ -156,6 +156,12 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already added under this name, or restricted deployment
 
 
+#: Compiled classes Spark's code-generation cache keeps (static conf,
+#: set by :func:`get_spark` only): ≥3× the up to ~180 classes one
+#: analytics pass compiles, rounded up to a power of ten.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def get_spark(
     app_name: str = "dariadb-spark",
     master: str | None = None,
@@ -166,6 +172,18 @@ def get_spark(
     On a real cluster none of the sizing below applies — the engine is pure
     DataFrame plans and inherits whatever the cluster provides; AQE picks
     post-shuffle parallelism at runtime.
+
+    The session's code-generation cache holds
+    :data:`CODEGEN_CACHE_ENTRIES` compiled classes. One pass of the
+    perfbench analytics queries compiles 150–180 distinct classes; with
+    Spark's default of 100 the least-recently-used cache evicts each one
+    before the next pass needs it, so every pass recompiles and the JIT
+    never keeps a hot copy. ``spark.sql.codegen.cache.maxEntries`` is a
+    static conf, read once when the SparkContext starts: it takes effect
+    only when this call creates the context, and
+    :func:`ensure_runtime_confs` cannot set it. A session built elsewhere
+    (the correctness driver's own, or one that already exists when this
+    is called) keeps its own value, Spark's 100 unless its builder set it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -177,6 +195,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

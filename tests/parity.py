@@ -21,6 +21,14 @@ TABLES = (
 )
 
 
+def ratio_round_ref(a: int, b: int, d: int) -> float:
+    """Pure-python reference twin of ``ext.exact.ratio_round_spark``: the
+    SAME integer rational, arbitrary-precision (python ints never
+    overflow, so this also serves as the wide variants' reference)."""
+    p = 10**d
+    return ((2 * a * p + b) // (2 * b)) / p
+
+
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

@@ -1,7 +1,8 @@
 """Fixed per-query costs of the shared fixture helpers (model.py): a
 fixture read infers its schema once per file version, driver-side rows
-enter Spark only through ``model.local_frame``, and a warm registered
-scan runs no job beyond its shuffle and result."""
+enter Spark only through ``model.local_frame``, a warm registered
+scan runs no job beyond its shuffle and result, and a warm funnel
+latency query runs at most six."""
 
 from __future__ import annotations
 
@@ -99,6 +100,15 @@ def test_warm_interval_scan_runs_two_jobs(spark, sf_dir):
     fn = REGISTRY["interval_scan"].fn
     fn(spark, sf_dir).toPandas()
     assert _spark_jobs(spark, lambda: fn(spark, sf_dir).toPandas()) == 2
+
+
+def test_warm_funnel_latency_runs_at_most_six_jobs(spark, oracle_sf_dir):
+    """The three stage times share one ``id`` partitioning and the
+    per-transition statistics are one aggregate: the localCheckpoint's
+    jobs, then the rank window's and the result's."""
+    fn = REGISTRY["ext_funnel_latency"].fn
+    fn(spark, oracle_sf_dir).toPandas()
+    assert _spark_jobs(spark, lambda: fn(spark, oracle_sf_dir).toPandas()) <= 6
 
 
 def test_predicate_text_rejects_non_numbers(spark):

@@ -2616,8 +2616,8 @@ def test_text_heaps_matches_reference(spark, docs):
     range-decile growth curve on random small corpora (NULL text
     excluded, duplicate doc_ids counted as separate docs, wide HALF_UP
     type-token ratio)."""
-    from dariadb_spark.ext.exact import ratio_round_ref
     from dariadb_spark.ext.text import text_heaps_op
+    from tests.parity import ratio_round_ref
 
     df = spark.createDataFrame(
         [(i, t, "en", "s", 0) for i, t in docs],
@@ -2669,8 +2669,8 @@ def test_orders_benford_matches_reference(spark, prices, prio):
     float floor, HALF_UP micro-shares, integer deviations)."""
     import math
 
-    from dariadb_spark.ext.exact import ratio_round_ref
     from dariadb_spark.ext.relational import BENFORD_MICRO, orders_benford_op
+    from tests.parity import ratio_round_ref
 
     n = min(len(prices), len(prio))
     rows = [(k, 1, "O", prices[k],

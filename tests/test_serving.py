@@ -3,7 +3,8 @@
 its own while the main session keeps AQE and codegen, the verb statements
 leave no temp views behind, a warm verb compiles no class for fresh
 request values, and a name glob reaches Spark only as a Column literal,
-so its special characters match literally."""
+so its special characters match literally. The main session's
+code-generation cache holds a pass of distinct classes."""
 
 from __future__ import annotations
 
@@ -183,6 +184,29 @@ def test_warm_verbs_compile_no_class_for_fresh_request_values(
         build().collect()
         build().toPandas()
         assert metric.getCount() == before, verb
+
+
+def test_codegen_cache_keeps_a_pass_of_distinct_classes(spark):
+    """``get_spark`` sizes Spark's code-generation cache (a static conf)
+    past the analytics queries' working set: 150 statements, each
+    compiling classes of its own (300 in all), compile nothing when run
+    again in the same order. With Spark's default of 100 entries the least-recently
+    used cache evicts every class before its next use."""
+    metric = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def one_pass():
+        for k in range(150):
+            spark.range(5).selectExpr(f"id * {k} + {k}").collect()
+
+    before = metric.getCount()
+    one_pass()
+    assert metric.getCount() - before >= 150
+    before = metric.getCount()
+    one_pass()
+    assert metric.getCount() == before
 
 
 SPECIAL_NAMES = ["q'a.x", "q\\a.x", "q%a.x", "q_a.x", "qZa.x"]

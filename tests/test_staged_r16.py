@@ -325,12 +325,12 @@ def test_text_heaps_parity_and_planted_growth(spark, oracle_sf_dir):
     planted corpus with one NEW word per doc plus a shared stopword
     yields a closed-form growth curve (decile counts, first-seen
     attribution, wide HALF_UP type-token ratio)."""
-    from dariadb_spark.ext.exact import ratio_round_ref
     from dariadb_spark.ext.text import (
         TEXT_HEAPS_SQL,
         text_heaps,
         text_heaps_op,
     )
+    from tests.parity import ratio_round_ref
 
     con = duckdb_connection(oracle_sf_dir)
     res = compare(
@@ -385,13 +385,13 @@ def test_orders_benford_literals_and_planted_digits(spark, oracle_sf_dir):
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from dariadb_spark.ext.exact import ratio_round_ref
     from dariadb_spark.ext.relational import (
         BENFORD_MICRO,
         ORDERS_BENFORD_SQL,
         orders_benford,
         orders_benford_op,
     )
+    from tests.parity import ratio_round_ref
 
     for d in range(1, 10):
         derived = int(
